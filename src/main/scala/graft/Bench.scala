@@ -19,54 +19,22 @@ object Bench {
     try spark.read.parquet(s"$sfDir/region.parquet").count()
     catch { case scala.util.control.NonFatal(_) => () }
     // Two INTERLEAVED passes over the full registry, min per query
-    // across passes: the first pass pays one-time JIT/codegen that a
-    // long-lived cluster amortizes away, and interleaving means a
-    // multi-minute host-throttling window (the r07 bench poison: both
-    // back-to-back samples of one query landing inside the same slow
-    // window) can cover at most ONE of a query's two samples — the min
-    // then still reflects steady-state latency. Failures are surfaced
-    // in an "errors" map — a fast failure must not masquerade as a
-    // fast query.
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Host-throttle canary: a fixed pure-CPU job (~0.2 s on this box
-    // unthrottled, 20x slower inside a throttle window — measured
-    // 4.0-4.6 s). Recording it per pass makes host state visible IN the
-    // artifact: a pass whose canary is >3x the best canary ran on a
-    // different machine, effectively, and its samples read accordingly.
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(200000000L).selectExpr("sum(id * 3 % 7)").collect()
-      (System.nanoTime() - t0) / 1e9
+    // across passes, each query materialised through the noop sink,
+    // with a CPU canary before each pass and after the last (see
+    // Measure.timePasses). Failures are surfaced in an "errors" map —
+    // a fast failure must not masquerade as a fast query.
+    val queries = SparkEntry.queries
+    val t = Measure.timePasses(spark, queries.keys.toSeq, passes = 2) {
+      name => queries(name)(spark, sfDir)
     }
-    val canaries = scala.collection.mutable.ArrayBuffer[Double]()
-    val passes = (1 to 2).map { _ =>
-      canaries += canary()
-      SparkEntry.queries.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-          errors.getOrElseUpdate(name, e.toString.take(200))
-        }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-    }
-    canaries += canary()
-    val results = SparkEntry.queries.map { case (name, _) =>
-      // a failed query reports -1, never its (fast) failure time
-      name -> (if (errors.contains(name)) -1.0
-               else passes.map(_(name)).min)
-    }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val results = queries.map { case (name, _) => name -> t.min(name) }
+    import Measure.jstr
     val qs = results.map { case (k, v) => s"${jstr(k)}:" + v }
       .mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+    val errs = t.errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
       .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    val cjson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
+    val cjson = t.canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","canary":$cjson,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     // The full-precision line goes to BENCH.json — it is ~3 KB for 100
@@ -76,33 +44,31 @@ object Bench {
     // total + errors + as many queries as fit (slowest first, 3-decimal
     // seconds — the slow tail is what grading compares), with an
     // explicit omitted count so truncation is visible, never silent.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH.json"), (full + "\n").getBytes("UTF-8"))
+    Measure.write("BENCH.json", full)
     val budget = 1800
     def fmt(v: Double) = if (v < 0) "-1" else f"$v%.3f"
     val bySlowest = results.toSeq.sortBy { case (_, v) => -v }
       .map { case (k, v) => s"${jstr(k)}:${fmt(v)}" }
-    val fixed =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","canary":$cjson,"errors":$errs,"full":"BENCH.json","n":${results.size},"omitted":NN,"queries":{}}"""
-    var used = fixed.length
+    def line(omitted: String, qs: String) =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","canary":$cjson,"errors":$errs,"full":"BENCH.json","n":${results.size},"omitted":$omitted,"queries":$qs}"""
+    var used = line("NN", "{}").length
     val kept = bySlowest.takeWhile { e =>
       val fits = used + e.length + 1 <= budget
       if (fits) used += e.length + 1
       fits
     }
-    val json =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","canary":$cjson,"errors":$errs,"full":"BENCH.json","n":${results.size},"omitted":${results.size - kept.size},"queries":${kept.mkString("{", ",", "}")}}"""
+    val json = line(s"${results.size - kept.size}", kept.mkString("{", ",", "}"))
     // The compact line is ALSO a fixed artifact file (the driver has
     // parsed stdout's copy as null in every round to date — sbt
     // decoration + trailing lines; a file sidesteps the scrape), and
     // stdout's copy prints AFTER spark.stop() so no Spark shutdown
-    // logging can land between it and process exit. The measured
-    // methodology above is unchanged.
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_COMPACT.json"),
-      (json + "\n").getBytes("UTF-8"))
-    spark.stop()
-    println(json)
-    System.out.flush()
+    // logging can land between it and process exit — and prints even
+    // if the stop throws.
+    Measure.write("BENCH_COMPACT.json", json)
+    try spark.stop()
+    finally {
+      println(json)
+      System.out.flush()
+    }
   }
 }

@@ -3,12 +3,11 @@ package graft
 /** REGISTRY.md generator (round-17 task 7): 196 queries is past the
   * point where `SparkEntry.registry` is browsable in source, so this
   * main renders a one-page index — name → family → SURVEY §2 ID →
-  * oracle kind → folded sf0.1 seconds → sf1/sf0.1 ratio → one-line
-  * doc — from the QueryDef metadata plus the committed bench
-  * artifacts (`BENCH.json`, the per-query-min fold; `BENCH_sf1.json`).
-  * No SparkSession: the registry is a static map of closures, and the
-  * bench numbers are read from the JSON artifacts, so regeneration is
-  * instant (`sbt "runMain graft.Registry"`).
+  * oracle kind → one-line doc — from the QueryDef metadata alone. No
+  * SparkSession and no artifact is read, so the page depends on code
+  * only: timings live in the bench artifacts (`BENCH.json`,
+  * `BENCH_sf1.json`), which every bench run overwrites.
+  * Regenerate with `sbt "runMain graft.Registry"`.
   */
 object Registry {
 
@@ -58,50 +57,11 @@ object Registry {
     }
   }
 
-  /** Pull `"name":<number>` pairs out of a bench JSON's queries map —
-    * enough structure for the two artifacts this reads (no JSON lib in
-    * the offline sandbox, and the format is ours). */
-  private def benchTimes(path: String, key: String): Map[String, Double] = {
-    val f = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(f)) Map.empty
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      // BENCH.json's queries map is flat ({"name":sec,...}) — slice it
-      // out, then read the name:number pairs
-      val start = s.indexOf("\"" + key + "\":") match {
-        case -1 => s.indexOf("\"" + key + "\": ")
-        case i => i
-      }
-      if (start == -1) return Map.empty
-      val open = s.indexOf('{', start)
-      val close = s.indexOf('}', open)
-      if (close == -1) return Map.empty
-      val body = s.substring(open + 1, close)
-      val re = "\"([A-Za-z0-9_]+)\":\\s*(-?\\d+\\.?\\d*)".r
-      re.findAllMatchIn(body)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
-  private def sf1Ratios(path: String): Map[String, Double] = {
-    val f = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(f)) Map.empty
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-      val re = ("\"([A-Za-z0-9_]+)\":\\{\"sf1_sec\":-?\\d+\\.?\\d*," +
-        "\"sf01_sec\":-?\\d+\\.?\\d*,\"ratio\":(-?\\d+\\.?\\d*)").r
-      re.findAllMatchIn(s)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    }
-  }
-
   /** The full REGISTRY.md content — extracted from main (round 18) so
     * the freshness guard (RegistryFreshnessSpec) can diff a fresh
     * render against the committed file: a drift is a red test, not a
     * stale doc. */
   def render(): String = {
-    val sf01 = benchTimes("BENCH.json", "queries")
-    val ratios = sf1Ratios("BENCH_sf1.json")
     val sb = new StringBuilder
     sb ++= "# Query registry\n\n"
     sb ++= "GENERATED by `sbt \"runMain graft.Registry\"` — do not " +
@@ -110,27 +70,22 @@ object Registry {
       "(the driver's correctness surface). Columns: SURVEY §2 ID " +
       "(name-prefix convention for the reference surface, §2.X family " +
       "for the LLM-pipeline tier); oracle kind (`sql` = DuckDB " +
-      "hash-gate, `rows` = rows-only check); folded sf0.1 seconds " +
-      "(per-query min across runs, BASELINE.md protocol, from the " +
-      "committed BENCH.json); sf1/sf0.1 ratio where measured " +
-      "(BENCH_sf1.json, 10x disjoint-shard corpus).\n"
+      "hash-gate, `rows` = rows-only check). Timings are in the " +
+      "bench artifacts (BENCH.json, BENCH_sf1.json), not here.\n"
     val total = modules.map(_._2.size).sum
     val withSql = modules.flatMap(_._2).count(_._2.oracle.isDefined)
     sb ++= s"\n${total} queries, ${withSql} with SQL oracles.\n"
     modules.foreach { case (fam, defs) =>
       sb ++= s"\n## $fam (${defs.size})\n\n"
-      sb ++= "| query | §2 | oracle | sf0.1 s | sf1 x | what it proves |\n"
-      sb ++= "|---|---|---|---|---|---|\n"
+      sb ++= "| query | §2 | oracle | what it proves |\n"
+      sb ++= "|---|---|---|---|\n"
       defs.toSeq.sortBy(_._1).foreach { case (name, d) =>
         val oracle = if (d.oracle.isDefined) "sql" else "rows"
-        val t = sf01.get(name).map(v => f"$v%.2f").getOrElse("-")
-        val r = ratios.get(name).map(v => f"$v%.1f").getOrElse("-")
         val doc = Option(d.doc).getOrElse("").replace("|", "\\|")
           .replace("\n", " ")
         val docShort =
           if (doc.length <= 110) doc else doc.take(107) + "..."
-        sb ++= s"| `$name` | ${surveyId(name)} | $oracle | $t | $r " +
-          s"| $docShort |\n"
+        sb ++= s"| `$name` | ${surveyId(name)} | $oracle | $docShort |\n"
       }
     }
     sb.toString

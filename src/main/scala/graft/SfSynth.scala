@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Disjoint-shard scale-up synthesis shared by [[BenchSf1]] (10×) and
-  * [[BenchSf10]] (100×): N INDEPENDENT sf0.1-shaped shards — every
+/** Disjoint-shard scale-up synthesis behind the decade scale ratios
+  * (`Measure scale`, 10× and 100×): N INDEPENDENT sf0.1-shaped shards — every
   * document's CONTENT tokens get a copy-unique prefix while
   * language-marker words keep their surface form (langId/quality see
   * the original marker structure, so the ingest gate passes), and

@@ -1116,18 +1116,16 @@ object SimilarityQueries {
           try {
             implicit val ec: scala.concurrent.ExecutionContext =
               scala.concurrent.ExecutionContext.fromExecutor(pool)
-            val fs = for {
+            graft.BoundedWait.awaitAll(for {
               (ksub, idx) <- byKsub
               nProbe <- Seq(4, 8, 16)
-            } yield scala.concurrent.Future {
-              (ksub, nProbe, Similarity
-                .ivfPqAdcScored(prep, idx._1, idx._2, idx._3, 10L,
-                  nProbe, 8)
-                .localCheckpoint(true))
-            }
-            scala.concurrent.Await.result(
-              scala.concurrent.Future.sequence(fs),
-              scala.concurrent.duration.Duration.Inf)
+            } yield s"sweep arm ksub=$ksub nProbe=$nProbe" ->
+              scala.concurrent.Future {
+                (ksub, nProbe, Similarity
+                  .ivfPqAdcScored(prep, idx._1, idx._2, idx._3, 10L,
+                    nProbe, 8)
+                  .localCheckpoint(true))
+              })
           } finally pool.shutdown()
         val arms = for {
           (ksub, nProbe, scored) <- scoreds

@@ -44,6 +44,10 @@ object SourceQueries {
     "src_binaryfile_scan" -> QueryDef(
       (s, _) => s.read.format("binaryFile")
         .option("pathGlobFilter", "*.parquet")
+        // pinned, not defaulted: the oracle's read_blob('<dir>/*.parquet')
+        // matches top-level files only, and recursive lookup would read
+        // every file under any subdirectory of BinDir as well
+        .option("recursiveFileLookup", "false")
         .load(BinDir)
         .select(regexp_extract(col("path"), "([^/]+)$", 1).as("file"),
           col("length"),

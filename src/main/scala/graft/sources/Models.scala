@@ -1257,16 +1257,15 @@ object Models {
           try {
             implicit val ec: scala.concurrent.ExecutionContext =
               scala.concurrent.ExecutionContext.fromExecutor(pool)
-            val pF = scala.concurrent.Future(freshFor(presentIn(postT)))
-            val sF = posT.map(t =>
-              scala.concurrent.Future(freshFor(presentIn(t))))
-            val lF = scala.concurrent.Future(freshFor(presentIn(lensT)))
-            import scala.concurrent.duration.Duration
-            (scala.concurrent.Await.result(pF, Duration.Inf),
-              sF.map(scala.concurrent.Await.result(_, Duration.Inf))
-                .getOrElse(b),
-              scala.concurrent.Await.result(lF, Duration.Inf),
-              applied)
+            import scala.concurrent.Future
+            val Seq(p, s, l) = graft.BoundedWait.awaitAll(Seq(
+              "postings presence probe" ->
+                Future(freshFor(presentIn(postT))),
+              "positional presence probe" -> posT.fold(Future.successful(b))(
+                t => Future(freshFor(presentIn(t)))),
+              "doc-lengths presence probe" ->
+                Future(freshFor(presentIn(lensT)))))
+            (p, s, l, applied)
           } finally pool.shutdown()
         }
       if (dedupeIds && dfApplied &&

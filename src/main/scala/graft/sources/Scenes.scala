@@ -24,7 +24,8 @@ import org.apache.spark.sql.SparkSession
   * guards alone, so a scene is valid only under its `_SCENE_READY`
   * marker, created after the whole build: a crash mid-build leaves no
   * marker, and the next builder deletes the torn scene (both the scene
-  * dir and its artifact root) and rebuilds fresh. Scenes live under
+  * dir and its artifact root) and rebuilds fresh; a marked scene whose
+  * artifact root is missing is torn too. Scenes live under
   * `<modelsBase>/v<ModelVersion>_scenes/`, so a ModelVersion bump
   * (changed derivation) invalidates them with the artifacts.
   *
@@ -73,12 +74,15 @@ object Scenes {
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
       }
-    if (fs.exists(marker) && recordedParams() != params) {
-      // same key, different build params (an edited gate): the cached
-      // scene is stale AT THIS LAYER — rebuild rather than letting the
-      // oracle hash gate catch the divergence downstream
-      fs.delete(sceneP, true)
-      fs.delete(new Path(Models.root(scene)), true)
+    // A marked scene is still torn when (a) its build params differ
+    // (an edited gate: rebuild rather than letting the oracle hash gate
+    // catch the divergence downstream), or (b) its artifact root is
+    // missing: the root is named after the scene's ABSOLUTE path, so a
+    // models base copied or moved elsewhere carries the marker along
+    // while the root it names does not exist.
+    if (fs.exists(marker) && (recordedParams() != params ||
+        !fs.exists(new Path(Models.root(scene))))) {
+      fs.delete(marker, false)
     }
     if (!fs.exists(marker)) {
       // torn prior attempt (or first build): start from nothing —

@@ -1669,4 +1669,20 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "doc_id", "text", 80)
     assert(resolved()(70L) == 70L, "post-compact fold did not land")
   }
+
+  // the fold's presence-probe pool (and the IVF-PQ sweep's arm pool)
+  // wait through BoundedWait: a hang fails naming the stuck future
+  // instead of stalling silently
+  test("a pool future that never completes fails with its name") {
+    import scala.concurrent.{Future, Promise}
+    import scala.concurrent.duration._
+    val e = intercept[java.util.concurrent.TimeoutException] {
+      BoundedWait.awaitAll(Seq("fast" -> Future.successful(1),
+        "postings presence probe" -> Promise[Int]().future),
+        within = 200.millis)
+    }
+    assert(e.getMessage.contains("postings presence probe"), e.getMessage)
+    assert(BoundedWait.awaitAll(Seq("a" -> Future.successful(1),
+      "b" -> Future.successful(2))) == Seq(1, 2))
+  }
 }

@@ -3,12 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** REGISTRY.md is GENERATED (`sbt "runMain graft.Registry"`) from
-  * `SparkEntry.registry` plus the committed bench artifacts — but
-  * nothing failed when it drifted (r17 verdict item 6: a new query or
-  * a re-folded BENCH.json silently left the committed index stale).
-  * This guard re-renders the registry in-process and diffs it against
-  * the committed file, so a drift is a RED TEST naming the first
-  * divergent line, not a stale doc a reader trips over. */
+  * `SparkEntry.registry` alone — but nothing failed when it drifted
+  * (r17 verdict item 6: a new query silently left the committed index
+  * stale). This guard re-renders the registry in-process and diffs it
+  * against the committed file, so a drift is a RED TEST naming the
+  * first divergent line, not a stale doc a reader trips over. The
+  * render reads no bench artifact, so a bench run that rewrites
+  * BENCH.json cannot turn it red. */
 class RegistryFreshnessSpec extends AnyFunSuite {
 
   test("REGISTRY.md equals a fresh Registry.render() — regenerate " +

@@ -10,7 +10,9 @@ import graft.sources.{Generations, MaintenanceLog, Models, Scenes}
   * gate's BUILD PARAMS (`_SCENE_PARAMS`), so an edited gate rebuilds
   * instead of serving a stale base scene; and the clone clears its
   * destination first, so a reused dest cannot mix stale files into the
-  * cloned artifact state. Plus the maintenance-log negative-cache TTL:
+  * cloned artifact state; and a scene relocated with its models base is
+  * rebuilt, not trusted on its marker alone. Plus the maintenance-log
+  * negative-cache TTL:
   * cross-process durable enablement is observed within one re-check
   * window instead of never. */
 class ScenesSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -105,6 +107,42 @@ class ScenesSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the stale gen-9 head shadowed the cloned scene's generation")
     assert(!f.exists(new Path(s"${Models.root(dest)}/leftover_family")),
       "stale sibling families must not survive the clone")
+  }
+
+  test("a scene copied under a new models base is rebuilt: the " +
+      "marker moves along, but the artifact root is named after the " +
+      "scene's absolute path and does not") {
+    var builds = 0
+    def cloneMoved(): String = {
+      val dest = java.nio.file.Files
+        .createTempDirectory("graft-scenes-moved-dest").toString
+      Scenes.cloneScene(spark, "/tmp/scenes-src", "movekey", dest,
+        params = "m") { c =>
+        builds += 1
+        trainStub(c, "moved")
+      }
+      dest
+    }
+    cloneMoved()
+    assert(builds == 1)
+    // copy the whole models base, as a checkout copied with its
+    // target/ carries it
+    val moved = java.nio.file.Files
+      .createTempDirectory("graft-scenes-moved-base").toString
+    val from = java.nio.file.Paths.get(modelsTmp)
+    val it = java.nio.file.Files.walk(from)
+    try it.forEach { p =>
+      val t = java.nio.file.Paths.get(moved).resolve(from.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) {
+        java.nio.file.Files.createDirectories(t); ()
+      } else { java.nio.file.Files.copy(p, t); () }
+    } finally it.close()
+    sys.props("graft.models.dir") = moved
+    try {
+      val dest = cloneMoved()
+      assert(builds == 2, "the relocated scene must be rebuilt")
+      assert(clonedPayload(dest) == "moved")
+    } finally sys.props("graft.models.dir") = modelsTmp
   }
 
   test("maintenance-log negative cache expires: a root durably " +
