@@ -396,7 +396,7 @@ object ScaleAudit {
     val filesAfterFolds = files()
     var compacted = (0L, 0L)
     val compactSec = Measure.seconds {
-      compacted = Models.compactBucketed(spark, postPath, "tok")
+      compacted = Models.compactBucketed(spark, postPath)
     }
     // planted debris: an orphan generation, a dead tokenize staging
     // dir, a crashed _tmp_ marker — the three classes vacuum reclaims

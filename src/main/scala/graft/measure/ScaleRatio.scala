@@ -142,7 +142,7 @@ object ScaleRatio {
   /** Per-batch ANN fold onto an IVF-PQ index trained untimed. */
   private val annSteady: (String, Fold) = ("sim_ivfpq_append_steady",
     (spark, dir) => steadyFold(spark, dir, "embeddings", "vec_id",
-      "embedding", fixed = false, Models.dropIvfPqArtifacts(spark, _))(
+      "embedding", fixed = false, Models.drop(spark, _))(
       Models.ivfPqIndex(spark, _)) {
       (tmp, batch, _) => Measure.materialize(Models.ivfPqIndexAppend(
         spark, tmp, batch, "vec_id", "embedding"))
@@ -178,7 +178,7 @@ object ScaleRatio {
     })), Seq(
     ("dd_map_append_steady", (spark, dir) => steadyFold(spark, dir,
       "documents", "doc_id", "text", fixed = false,
-      Models.dropLshArtifacts(spark, _))(trainDedupMap(spark)) {
+      Models.drop(spark, _))(trainDedupMap(spark)) {
       (tmp, batch, _) =>
         Models.dedupMapAppend(spark, tmp, batch, "doc_id", "text", 80)
     }),
@@ -246,7 +246,7 @@ object ScaleRatio {
     // sweeps one planted orphan generation (a metadata-only walk)
     ("maint_lifecycle", (spark, dir) => steadyFold(spark, dir,
       "documents", "doc_id", "text", fixed = true,
-      Models.dropRetrievalArtifacts(spark, _))(
+      Models.drop(spark, _))(
       Models.buildRetrievalArtifacts(spark, _)) { (tmp, batch, i) =>
       Models.postingsAppend(spark, tmp, batch, "doc_id", "text",
         dedupeIds = true)

@@ -608,7 +608,7 @@ object DedupQueries {
           .withColumnRenamed("id", "doc_id")
           .orderBy("doc_id").localCheckpoint(true)
         // result materialized: reclaim the run-private fold artifacts
-        graft.sources.Models.dropLshArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(incrementalOracle),
@@ -655,7 +655,7 @@ object DedupQueries {
         val out = graft.sources.Models.dedupMapResolved(s, tmp, 80)
           .withColumnRenamed("id", "doc_id")
           .orderBy("doc_id").localCheckpoint(true)
-        graft.sources.Models.dropLshArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(clustersWhereSql("0.8",

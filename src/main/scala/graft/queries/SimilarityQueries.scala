@@ -1068,7 +1068,7 @@ object SimilarityQueries {
           k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
           rerank = 50)
           .orderBy("qid", "rank").localCheckpoint(true)
-        graft.sources.Models.dropIvfPqArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(ivfPqRefinedOracleSql(k = 5, queryLimit = 10, nList = 16,
@@ -1107,7 +1107,7 @@ object SimilarityQueries {
         // (independent jobs back-fill each other's stage tails — the
         // same overlap the previous all-lazy 12-arm union got from its
         // single action, kept here alongside the dedup); index loads
-        // stay sequential (ensureBucketed registration is not a
+        // stay sequential (catalog table registration is not a
         // concurrency surface).
         val byKsub = Seq(16, 256)
           .map(ks => ks -> graft.sources.Models.ivfPqIndex(s, d, ksub = ks))

@@ -1077,7 +1077,7 @@ object TextQueries {
         val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
         // the result is materialized: reclaim the run-private fold
         // corpus's artifacts so repeated runs don't accumulate them
-        graft.sources.Models.dropRetrievalArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(bm25OracleSql),
@@ -1130,8 +1130,8 @@ object TextQueries {
         require(swept.toSet ==
           Set(orphan.toUri.getPath, tokStaging.toUri.getPath),
           s"vacuum swept the wrong set: $swept")
-        val (before, after) = graft.sources.Models.compactBucketed(
-          s, postPath, "tok")
+        val (before, after) =
+          graft.sources.Models.compactBucketed(s, postPath)
         require(before > graft.sources.Models.IndexBuckets &&
           after <= graft.sources.Models.IndexBuckets,
           s"cutover ineffective: files $before -> $after")
@@ -1139,7 +1139,7 @@ object TextQueries {
           docs.filter(h >= "ee").select("doc_id", "text"),
           "doc_id", "text", dedupeIds = true)
         val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
-        graft.sources.Models.dropRetrievalArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(bm25OracleSql),
@@ -1294,7 +1294,7 @@ object TextQueries {
             s"(want > ${graft.sources.Models.IndexBuckets} before, " +
             s"<= ${graft.sources.Models.IndexBuckets} after)")
         val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
-        graft.sources.Models.dropRetrievalArtifacts(s, tmp)
+        graft.sources.Models.drop(s, tmp)
         out
       },
       Some(bm25OracleSql),

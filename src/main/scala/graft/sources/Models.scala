@@ -96,22 +96,229 @@ object Models {
       throw new NoSuchElementException(
         s"no committed generation for artifact $path"))
 
-  /** Read a PLAIN (non-bucketed) artifact family's head generation. */
-  private def readPlain(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(servingDir(spark, path))
+  // ---- artifact families -------------------------------------------------
 
-  /** Train-once write for a PLAIN artifact: the derivation lands as
-    * generation 1 under `path` with an atomic commit marker — the same
-    * layout every rewrite (compaction, df refresh, rebuild) then
-    * advances, so a crash mid-write can never destroy a served
-    * artifact (the old head stays committed until the new marker
-    * exists). */
-  private def writePlain(spark: SparkSession, path: String,
-      rows: => DataFrame): Unit = {
-    Generations.cutover(spark, path) { g =>
-      rows.coalesce(1).write.parquet(g)
+  /** One persisted artifact family. `dirPattern` matches the directory
+    * names of its instances under a corpus root (the training
+    * parameterization is encoded in the name). `bucketCol` is the
+    * bucket column of a family stored as a bucketed table, so probe
+    * joins read it with zero index-side exchange; `None` is plain
+    * parquet. `appended` marks the families daily folds append to. */
+  private final case class Family(name: String, dirPattern: String,
+      bucketCol: Option[String], appended: Boolean) {
+    /** Appended families fragment with every fold, and a bucketed
+      * train's multi-task write emits one file per (task, bucket):
+      * these are the families compaction rewrites. Plain families that
+      * rewrite whole or never change stay single-file. */
+    def compacts: Boolean = appended || bucketCol.nonEmpty
+  }
+
+  /** Every family this object persists, in [[compactModelArtifacts]]'
+    * walk order (its compact events land in the maintenance log in
+    * this order). The dedup map's remap ledger is plain and rewritten
+    * whole per fold; [[compactDedupMap]] folds it into the map. */
+  private val Families: Seq[Family] = Seq(
+    Family("postings", "postings", Some("tok"), appended = true),
+    Family("postings_pos", "postings_pos", Some("tok"), appended = true),
+    Family("doc_lens", "doc_lens", None, appended = true),
+    Family("df_table", "df_table", None, appended = false),
+    Family("lsh_sets", "lsh_sets_w\\d+", Some("id"), appended = true),
+    Family("lsh_bands", "lsh_bands_k\\d+_b\\d+_w\\d+", Some("bk"),
+      appended = true),
+    Family("ivf_centroids", "ivf_centroids_n\\d+_i\\d+", None,
+      appended = false),
+    Family("ivfpq_cb", "ivfpq_cb_n\\d+_i\\d+_m\\d+_k\\d+", None,
+      appended = false),
+    Family("ivfpq_codes", "ivfpq_codes_n\\d+_i\\d+_m\\d+_k\\d+",
+      Some("cid"), appended = true),
+    Family("dedup_map", "dedup_map_j\\d+", Some("id"), appended = true),
+    Family("dedup_remap", "dedup_map_j\\d+_remap", None, appended = false),
+    Family("subword_vocab", "subword_vocab_k\\d+_g\\d+_\\d+", None,
+      appended = false),
+    Family("bigram_lm", "bigram_lm", None, appended = false),
+    Family("bpe_merges", "bpe_merges_r\\d+", None, appended = false),
+    Family("bpe_segs", "bpe_segs_r\\d+", Some("word"), appended = false))
+
+  private def familyOf(path: String): Option[Family] = {
+    val dir = new org.apache.hadoop.fs.Path(path).getName
+    Families.find(f => dir.matches(f.dirPattern))
+  }
+
+  private def family(path: String): Family = familyOf(path).getOrElse(
+    throw new IllegalArgumentException(s"not an artifact family: $path"))
+
+  private[graft] def tableName(path: String): String =
+    "graft_model_" + path.replaceAll("[^A-Za-z0-9]+", "_").takeRight(80)
+      .dropWhile(_ == '_')
+
+  /** Where catalog table `name` points (URI path), if registered. */
+  private def tableLocation(spark: SparkSession,
+      name: String): Option[String] =
+    if (!spark.catalog.tableExists(name)) None
+    else Some(new org.apache.hadoop.fs.Path(
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(name)).location)
+      .toUri.getPath)
+
+  /** Run `body` with every Spark job it launches described as
+    * `models:<family>:<phase>` (train, fold, compact, rebuild, vacuum)
+    * — the maintenance layer's jobs are attributable in listeners and
+    * the UI — and restore the caller's description afterwards. */
+  private def step[A](spark: SparkSession, family: String, phase: String)
+      (body: => A): A = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(s"models:$family:$phase")
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Record one maintenance event on `root` — every event carries its
+    * duration since `t0`. `nRows` and `detail` are by-name, so no count
+    * runs unless the root's log is (durably) enabled. */
+  private def logEvent(spark: SparkSession, root: String, kind: String,
+      family: String, t0: Long, nRows: => Long, filesBefore: Long = -1L,
+      filesAfter: Long = -1L, detail: => String = ""): Unit =
+    if (MaintenanceLog.enabled(spark, root)) {
+      val ms = System.currentTimeMillis() - t0
+      MaintenanceLog.emit(spark, root, kind, family, nRows,
+        filesBefore = filesBefore, filesAfter = filesAfter,
+        durationMs = ms, detail = detail)
     }
-    ()
+
+  /** Train once, then [[serve]]: when `path` has no committed generation,
+    * `rows` lands as its generation 1 with an atomic commit marker
+    * carrying `marker` — the layout every rewrite (compaction, df
+    * refresh, rebuild) then advances, so a crash mid-write can never
+    * destroy a served artifact. */
+  private def ensure(spark: SparkSession, path: String,
+      marker: => String = "")(rows: => DataFrame): DataFrame = synchronized {
+    if (!exists(spark, path)) {
+      val fam = family(path)
+      step(spark, fam.name, "train") {
+        fam.bucketCol match {
+          case None => rewrite(spark, path, rows, marker)
+          case Some(bc) =>
+            val (n, g) = Generations.prepare(spark, path)
+            Generations.withLeaseHeartbeat(spark, Seq(path)) {
+              Lake.writeBucketedTable(rows, tableName(path), g, bc,
+                IndexBuckets)
+              Generations.commit(spark, path, n, marker)
+            }
+        }
+      }
+    }
+    serve(spark, path)
+  }
+
+  /** Serve `path`'s HEAD generation. A plain family reads its files. A
+    * bucketed family reads its catalog table, re-registered whenever
+    * the table is not at the head: after a catalog loss (restart), and
+    * after a cutover advanced the head from another code path or
+    * session — reads and bucket-preserving appends must never target a
+    * retired generation. The schema comes from the head's files (the
+    * bucket metadata lives in the catalog, not the files). Refreshing
+    * drops this session's cached file listing (appends may land from a
+    * foreachBatch clone whose invalidation covers only its own
+    * relation cache). */
+  private def serve(spark: SparkSession, path: String): DataFrame =
+    synchronized {
+      val g = servingDir(spark, path)
+      family(path).bucketCol match {
+        case None => spark.read.parquet(g)
+        case Some(bc) =>
+          val name = tableName(path)
+          val want = new org.apache.hadoop.fs.Path(g).toUri.getPath
+          if (!tableLocation(spark, name).contains(want)) {
+            val schemaDdl = spark.read.parquet(g).schema.toDDL
+            spark.sql(s"DROP TABLE IF EXISTS $name")
+            spark.sql(
+              s"""CREATE TABLE $name ($schemaDdl)
+                 |USING PARQUET
+                 |CLUSTERED BY ($bc) SORTED BY ($bc)
+                 |INTO $IndexBuckets BUCKETS
+                 |LOCATION '$g'""".stripMargin)
+          }
+          spark.catalog.refreshTable(name)
+          spark.table(name)
+      }
+    }
+
+  /** Write `rows` as one generation directory `dir` of `path`'s
+    * family: plain as one file; bucketed pre-partitioned on the bucket
+    * column (HashPartitioning uses the same Murmur3 pmod as the bucket
+    * id), so each of the IndexBuckets tasks writes exactly its own
+    * bucket's one file, through a catalog-only staging table. */
+  private def writeGen(spark: SparkSession, path: String, rows: DataFrame,
+      dir: String): Unit =
+    family(path).bucketCol match {
+      case None => rows.coalesce(1).write.parquet(dir)
+      case Some(bc) =>
+        val stage = tableName(path) + "_staging"
+        Lake.writeBucketedTable(rows.repartition(IndexBuckets, col(bc)),
+          stage, dir, bc, IndexBuckets)
+        spark.sql(s"DROP TABLE IF EXISTS $stage") // catalog only
+        ()
+    }
+
+  /** Rewrite `path` whole: `rows` lands as the next generation and one
+    * atomic commit marker carrying `content` flips the head to it
+    * ([[Generations.cutover]]) — the old head serves until the marker
+    * exists and its files survive the flip (keep-2), so `rows` may read
+    * them. Returns the new generation directory. */
+  private def rewrite(spark: SparkSession, path: String, rows: => DataFrame,
+      content: String = ""): String =
+    Generations.cutover(spark, path, content)(writeGen(spark, path, rows, _))
+
+  /** Append fold rows to `path`'s served head generation — the caller
+    * has served it. Bucketed appends preserve the bucket spec (Spark
+    * validates it against the catalog table), so the zero-exchange
+    * probe property survives every fold, and are PRE-PARTITIONED on the
+    * bucket column: one file per bucket per fold instead of one per
+    * (shuffle partition, bucket) — ScaleAudit measured 512 vs 16 files
+    * per fold, i.e. 32× slower file-count growth, the difference
+    * between compacting monthly and weekly. The extra exchange is
+    * batch-sized, never index-sized. The plain appended family
+    * (document lengths, two columns, batch-sized) gets one file per
+    * fold. */
+  private def append(spark: SparkSession, path: String,
+      rows: DataFrame): Unit = {
+    val fam = family(path)
+    require(fam.appended, s"${fam.name} is not a fold-appended family")
+    fam.bucketCol match {
+      case Some(bc) =>
+        rows.repartition(IndexBuckets, col(bc))
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .bucketBy(IndexBuckets, bc).sortBy(bc)
+          .format("parquet").saveAsTable(tableName(path))
+      case None =>
+        rows.repartition(1)
+          .write.mode(org.apache.spark.sql.SaveMode.Append)
+          .parquet(servingDir(spark, path))
+    }
+  }
+
+  /** The fold's replay guard: the `batch` rows whose `idCol` is not yet
+    * in `artifact`'s `artCol`, which makes a fold IDEMPOTENT for
+    * at-least-once callers — a replayed batch appends nothing. The
+    * artifact's id column streams MAP-SIDE against a broadcast of the
+    * batch ids and the hit set (at most batch-sized) broadcasts back as
+    * an anti join: the artifact is never read in full or shuffled.
+    * `range`, the batch's (min, max) id, lets parquet row-group stats
+    * prune files that cannot hold batch ids and collapses the hits to
+    * distinct ids — for the postings tier, whose artifacts hold many
+    * rows per document and whose daily folds carry recent, clustered
+    * ids (the probe reads the fold-recent tail, not a year of index). */
+  private def fresh(batch: DataFrame, idCol: String, artifact: DataFrame,
+      artCol: String, range: Option[(Any, Any)] = None): DataFrame = {
+    val ids = artifact.select(col(artCol).as(idCol))
+    val hits = range
+      .fold(ids) { case (lo, hi) =>
+        ids.filter(col(idCol).between(lit(lo), lit(hi))) }
+      .join(broadcast(batch.select(idCol)), Seq(idCol), "left_semi")
+    val present =
+      (if (range.isEmpty) hits else hits.distinct()).localCheckpoint(true)
+    batch.join(broadcast(present), Seq(idCol), "left_anti")
   }
 
   // ---- subword vocabulary ------------------------------------------------
@@ -125,14 +332,9 @@ object Models {
   /** The persisted subword vocabulary for this corpus: train + persist
     * on first use, read-only afterwards. Returns `(gram, cnt)` rows. */
   def subwordVocabTable(spark: SparkSession, sfDir: String,
-      k: Int = TextOps.SubwordVocabK): DataFrame = synchronized {
-    val path = vocabPath(sfDir, k)
-    if (!exists(spark, path)) {
-      writePlain(spark, path,
-        TextOps.subwordVocab(graft.Tables.documents(spark, sfDir), k))
-    }
-    readPlain(spark, path)
-  }
+      k: Int = TextOps.SubwordVocabK): DataFrame =
+    ensure(spark, vocabPath(sfDir, k))(
+      TextOps.subwordVocab(graft.Tables.documents(spark, sfDir), k))
 
   /** The vocabulary as the driver-side Seq embedded into
     * [[graft.functions.SubwordTokens]] as a plan literal. Loading
@@ -173,9 +375,8 @@ object Models {
     * reload is bit-identical to a retrain and the SQL oracles that
     * re-derive the quantizer still hash-match. */
   def ivfCentroids(spark: SparkSession, sfDir: String,
-      nList: Int = 16, iters: Int = 2): DataFrame = synchronized {
-    val path = ivfCentroidsPath(sfDir, nList, iters)
-    if (!exists(spark, path)) {
+      nList: Int = 16, iters: Int = 2): DataFrame =
+    ensure(spark, ivfCentroidsPath(sfDir, nList, iters)) {
       // checkpointed: each Lloyd step re-reads the prep — without the
       // materialization the scan+quantize replays once per iteration
       // (train-once path: the corpus-sized executor-storage footprint
@@ -183,11 +384,8 @@ object Models {
       val prep = spread(graft.operators.Similarity.prepared(
         graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding"))
         .localCheckpoint(true)
-      writePlain(spark, path,
-        graft.operators.Similarity.refinedCentroids(prep, nList, iters))
+      graft.operators.Similarity.refinedCentroids(prep, nList, iters)
     }
-    readPlain(spark, path)
-  }
 
   // ---- historical MinHash-LSH index --------------------------------------
 
@@ -195,63 +393,6 @@ object Models {
     s"${root(sfDir)}/lsh_bands_k${k}_b${b}_w$w"
   def lshSetsPath(sfDir: String, w: Int): String =
     s"${root(sfDir)}/lsh_sets_w$w"
-
-  private def tableName(path: String): String =
-    "graft_model_" + path.replaceAll("[^A-Za-z0-9]+", "_").takeRight(80)
-      .dropWhile(_ == '_')
-
-  /** Register-or-reuse a bucketed table over `path`'s head generation,
-    * training via `train` when no generation is committed yet.
-    * `schemaDdl`/`bucketCol` re-register after a JVM restart (bucket
-    * metadata lives in the catalog, not the files). `markerContent`
-    * rides in the generation's commit marker — the IVF-PQ codes family
-    * records its quantizer/codebook pairing there. */
-  private def ensureBucketed(spark: SparkSession, path: String,
-      schemaDdl: String, bucketCol: String, markerContent: => String = "")
-      (train: => DataFrame): DataFrame =
-    synchronized {
-      val name = tableName(path)
-      if (!exists(spark, path)) {
-        val (n, g) = Generations.prepare(spark, path)
-        Generations.withLeaseHeartbeat(spark, Seq(path)) {
-          Lake.writeBucketedTable(train, name, g, bucketCol, IndexBuckets)
-          Generations.commit(spark, path, n, markerContent)
-        }
-      }
-      serveBucketed(spark, path, schemaDdl, bucketCol)
-    }
-
-  /** Serve the bucketed table registered over `path`'s HEAD generation:
-    * re-registers after a catalog loss (restart) AND after a cutover
-    * advanced the head from another code path or session — the catalog
-    * location must always equal the resolved generation, or reads and
-    * bucket-preserving appends would silently target a retired
-    * generation. Refreshing drops this session's cached file listing
-    * (appends may land from a foreachBatch clone whose invalidation
-    * covers only its own relation cache). */
-  private def serveBucketed(spark: SparkSession, path: String,
-      schemaDdl: String, bucketCol: String): DataFrame = synchronized {
-    val name = tableName(path)
-    val g = servingDir(spark, path)
-    val registeredAt: Option[String] =
-      if (!spark.catalog.tableExists(name)) None
-      else Some(new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(name)).location)
-        .toUri.getPath)
-    val want = new org.apache.hadoop.fs.Path(g).toUri.getPath
-    if (!registeredAt.contains(want)) {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      spark.sql(
-        s"""CREATE TABLE $name ($schemaDdl)
-           |USING PARQUET
-           |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol)
-           |INTO $IndexBuckets BUCKETS
-           |LOCATION '$g'""".stripMargin)
-    }
-    spark.catalog.refreshTable(name)
-    spark.table(name)
-  }
 
   /** The historical LSH index of `indexDocs`: `(bands, sets)` — bands
     * `(bk, id)` bucketed by the band bucket key, shingle sets
@@ -261,11 +402,9 @@ object Models {
   def lshIndex(spark: SparkSession, sfDir: String,
       indexDocs: => DataFrame, idCol: String, textCol: String,
       k: Int = 32, b: Int = 16, w: Int = 3): (DataFrame, DataFrame) = {
-    lazy val sets = Dedup.shingleSets(indexDocs, idCol, textCol, w)
-    val setsDf = ensureBucketed(spark, lshSetsPath(sfDir, w),
-      "id BIGINT, hs ARRAY<BIGINT>, n BIGINT", "id")(sets)
-    val bandsDf = ensureBucketed(spark, lshBandsPath(sfDir, k, b, w),
-      "bk STRING, id BIGINT", "bk") {
+    val setsDf = ensure(spark, lshSetsPath(sfDir, w))(
+      Dedup.shingleSets(indexDocs, idCol, textCol, w))
+    val bandsDf = ensure(spark, lshBandsPath(sfDir, k, b, w)) {
       Dedup.bandTable(Dedup.minhashSignatureSets(setsDf, k), b, k / b)
         .select(col("bk"), col("id"))
     }
@@ -276,10 +415,9 @@ object Models {
     * half of the daily loop: probe the batch against the index
     * ([[graft.operators.Dedup.incrementalDedupIndexed]]), then append
     * the batch's bands + shingle sets so tomorrow's probe sees today's
-    * documents. Appends preserve the bucket spec (Spark validates it
-    * against the catalog table), so the zero-exchange probe property
-    * survives every fold. Requires the index to exist (train first via
-    * [[lshIndex]]).
+    * documents. Appends preserve the bucket spec, so the zero-exchange
+    * probe property survives every fold. Requires the index to exist
+    * (train first via [[lshIndex]]).
     *
     * `dedupeIds = true` makes the fold IDEMPOTENT for at-least-once
     * callers (the streaming dedup-maintenance loop), exactly like
@@ -287,11 +425,9 @@ object Models {
     * shingle-set table drop from the batch before any write — a
     * replayed batch appends nothing, where a blind re-append would
     * duplicate band rows (duplicate candidate pairs) AND set rows
-    * (corrupted Jaccard denominators). The check streams the
-    * two-column set-table ids MAP-SIDE against a broadcast of the
-    * batch ids and broadcasts the hit set back — the index itself is
-    * never read in full or shuffled. */
-  /** `precomputedSets`, when supplied, are
+    * (corrupted Jaccard denominators).
+    *
+    * `precomputedSets`, when supplied, are
     * [[graft.operators.Dedup.shingleSets]] of the WHOLE batch — the
     * map fold shingles once and feeds probe, inner pairs, and this
     * fold; rows the dedupe layer drops are filtered out here. */
@@ -300,81 +436,43 @@ object Models {
       k: Int = 32, b: Int = 16, w: Int = 3,
       dedupeIds: Boolean = false,
       precomputedSets: Option[DataFrame] = None): Unit = synchronized {
-    val setsName = tableName(lshSetsPath(sfDir, w))
-    val bandsName = tableName(lshBandsPath(sfDir, k, b, w))
-    require(exists(spark, lshSetsPath(sfDir, w)) &&
-      exists(spark, lshBandsPath(sfDir, k, b, w)),
-      "lshIndexAppend requires a trained index (call lshIndex first)")
-    // serve (re-register + refresh) both tables at their HEAD
-    // generation: a compaction cutover may have advanced the head from
-    // ANOTHER code path or session, and a bucket-preserving append
-    // must land in the generation readers resolve, never a retired one
-    serveBucketed(spark, lshSetsPath(sfDir, w),
-      "id BIGINT, hs ARRAY<BIGINT>, n BIGINT", "id")
-    serveBucketed(spark, lshBandsPath(sfDir, k, b, w),
-      "bk STRING, id BIGINT", "bk")
-    val fresh =
-      if (!dedupeIds) batch
-      else {
-        val present = spark.table(setsName)
-          .join(broadcast(batch.select(col(idCol).as("id"))),
-            Seq("id"), "left_semi")
-          .select(col("id").as(idCol)).localCheckpoint(true)
-        batch.join(broadcast(present), Seq(idCol), "left_anti")
+    step(spark, "lsh_index", "fold") {
+      val t0 = System.currentTimeMillis()
+      val setsPath = lshSetsPath(sfDir, w)
+      val bandsPath = lshBandsPath(sfDir, k, b, w)
+      require(exists(spark, setsPath) && exists(spark, bandsPath),
+        "lshIndexAppend requires a trained index (call lshIndex first)")
+      // serve (re-register + refresh) both tables at their HEAD
+      // generation: a compaction cutover may have advanced the head from
+      // ANOTHER code path or session, and a bucket-preserving append
+      // must land in the generation readers resolve, never a retired one
+      val setsDf = serve(spark, setsPath)
+      serve(spark, bandsPath)
+      val todo =
+        if (!dedupeIds) batch
+        else fresh(batch, idCol, setsDf, "id")
           .localCheckpoint(true) // the emptiness check + both writes
+      if (!dedupeIds || !todo.isEmpty) { // a pure replay folds to a no-op
+        // bands derive from sets: shingle ONCE
+        val sets = batchSets(precomputedSets, todo, idCol, textCol, w)
+        // write order is the crash contract: BANDS first, SETS last — the
+        // dedupe layer above probes the sets table, so a torn fold (crash
+        // between the two appends) leaves the batch ABSENT from sets and
+        // the replay re-runs BOTH writes, completing the fold. The
+        // re-appended band rows are duplicates, which every probe
+        // tolerates (candidate pairs pass through distinct()); duplicate
+        // SET rows would corrupt Jaccard denominators, which this ordering
+        // makes impossible. (Sets-first would invert it: the replay would
+        // see the ids present, no-op, and the bands would stay missing
+        // forever — silently dropping the batch from all future probes.)
+        append(spark, bandsPath,
+          Dedup.bandTable(Dedup.minhashSignatureSets(sets, k), b, k / b)
+            .select(col("bk"), col("id")))
+        crashPoint("lsh_after_bands")
+        append(spark, setsPath, sets)
+        logEvent(spark, root(sfDir), "fold", "lsh_index", t0, sets.count())
       }
-    if (dedupeIds && fresh.isEmpty) return // pure replay: no-op fold
-    val sets = precomputedSets
-      .map(_.join(broadcast(fresh.select(col(idCol).as("id"))),
-        Seq("id"), "left_semi"))
-      .getOrElse(Dedup.shingleSets(fresh, idCol, textCol, w))
-      .localCheckpoint(true) // bands derive from sets: shingle ONCE
-    // write order is the crash contract: BANDS first, SETS last — the
-    // dedupe layer above probes the sets table, so a torn fold (crash
-    // between the two appends) leaves the batch ABSENT from sets and
-    // the replay re-runs BOTH writes, completing the fold. The
-    // re-appended band rows are duplicates, which every probe
-    // tolerates (candidate pairs pass through distinct()); duplicate
-    // SET rows would corrupt Jaccard denominators, which this ordering
-    // makes impossible. (Sets-first would invert it: the replay would
-    // see the ids present, no-op, and the bands would stay missing
-    // forever — silently dropping the batch from all future probes.)
-    // fold writes pre-partitioned on the bucket column: one file per
-    // bucket per fold instead of one per (task, bucket) — see the
-    // postingsAppend file-hygiene note (ScaleAudit: 512 → 16 files
-    // per fold); the extra exchange is batch-sized
-    Dedup.bandTable(Dedup.minhashSignatureSets(sets, k), b, k / b)
-      .select(col("bk"), col("id"))
-      .repartition(IndexBuckets, col("bk"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IndexBuckets, "bk").sortBy("bk")
-      .format("parquet").saveAsTable(bandsName)
-    crashPoint("lsh_after_bands")
-    sets.repartition(IndexBuckets, col("id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IndexBuckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(setsName)
-    if (MaintenanceLog.enabled(spark, root(sfDir))) {
-      MaintenanceLog.emit(spark, root(sfDir), "fold", "lsh_index",
-        nRows = sets.count())
     }
-  }
-
-  /** Reclaim ONE corpus's LSH artifacts (band + shingle-set tables,
-    * catalog entries, the per-corpus model root) — the dedup twin of
-    * [[dropRetrievalArtifacts]], for run-private fold corpora
-    * (`dd_incremental_append` trains base artifacts in a fresh dir per
-    * run). */
-  def dropLshArtifacts(spark: SparkSession, sfDir: String,
-      k: Int = 32, b: Int = 16, w: Int = 3): Unit = synchronized {
-    spark.sql(
-      s"DROP TABLE IF EXISTS ${tableName(lshSetsPath(sfDir, w))}")
-    spark.sql(
-      s"DROP TABLE IF EXISTS ${tableName(lshBandsPath(sfDir, k, b, w))}")
-    MaintenanceLog.disable(root(sfDir))
-    val dir = new org.apache.hadoop.fs.Path(root(sfDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- IVF-PQ index (coarse cells + residual codebook + codes) -----------
@@ -402,7 +500,42 @@ object Models {
     * it audits at 0.92 recall@5 (`sim_ivfpq_recall`), where the
     * original 4-bit/nProbe=4 pure-ADC point measured 0.26 — a point a
     * serving pipeline would actually flip traffic to. */
-  private val CodesDdl = "nid BIGINT, cid BIGINT, codes ARRAY<INT>"
+  def ivfPqIndex(spark: SparkSession, sfDir: String, nList: Int = 16,
+      iters: Int = 2, m: Int = 8, ksub: Int = 256, dim: Int = 64)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val centPath = ivfCentroidsPath(sfDir, nList, iters)
+    val cbPath = ivfPqCodebookPath(sfDir, nList, iters, m, ksub)
+    val codesPath = ivfPqCodesPath(sfDir, nList, iters, m, ksub)
+    pairing(spark, codesPath) match {
+      case Some((cg, bg)) =>
+        // serving path: the codes head NAMES the quantizer/codebook
+        // generations it was encoded against — read those, not the
+        // families' own heads (a rebuild may have advanced them before
+        // its codes commit landed; the pairing keeps the triple
+        // consistent through every crash window)
+        val cents = spark.read.parquet(Generations.genDir(centPath, cg))
+        val cbRows = spark.read.parquet(Generations.genDir(cbPath, bg))
+        (cents, cbRows, serve(spark, codesPath))
+      case None =>
+        // train path: quantizer + codebook first, then codes committed
+        // with the pairing that freezes this triple
+        val cents = ivfCentroids(spark, sfDir, nList, iters)
+        lazy val prep = spread(graft.operators.Similarity.prepared(
+          graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding")
+          .filter(size(col("qv")) === dim))
+        lazy val res = graft.operators.Similarity
+          .ivfPqResiduals(prep, cents)
+          .localCheckpoint(true)
+        val cbRows = ensure(spark, cbPath)(res.filter(col("id") < ksub)
+          .select(col("id").as("cid"), col("rv").as("cv")))
+        val codes = ensure(spark, codesPath, marker = pairingContent(
+            Generations.head(spark, centPath).map(_._1).getOrElse(1L),
+            Generations.head(spark, cbPath).map(_._1).getOrElse(1L))) {
+          graft.operators.Similarity.ivfPqCodes(res, cbRows, m, ksub, dim)
+        }
+        (cents, cbRows, codes)
+    }
+  }
 
   /** The codes family's commit-marker content: the EXACT quantizer and
     * codebook generations these codes were encoded against. Old codes
@@ -415,59 +548,15 @@ object Models {
   private def pairingContent(centGen: Long, cbGen: Long): String =
     s"cent=$centGen\ncb=$cbGen"
 
-  private def parsePairing(content: String): Option[(Long, Long)] = {
-    val kv = content.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-      .map(_.split("=", 2)).collect { case Array(k, v) => k -> v.toLong }
-      .toMap
-    for (c <- kv.get("cent"); b <- kv.get("cb")) yield (c, b)
-  }
-
-  def ivfPqIndex(spark: SparkSession, sfDir: String, nList: Int = 16,
-      iters: Int = 2, m: Int = 8, ksub: Int = 256, dim: Int = 64)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val centPath = ivfCentroidsPath(sfDir, nList, iters)
-    val cbPath = ivfPqCodebookPath(sfDir, nList, iters, m, ksub)
-    val codesPath = ivfPqCodesPath(sfDir, nList, iters, m, ksub)
-    val paired = Generations.head(spark, codesPath)
-      .flatMap { case (_, content) => parsePairing(content) }
-    paired match {
-      case Some((cg, bg)) =>
-        // serving path: the codes head NAMES the quantizer/codebook
-        // generations it was encoded against — read those, not the
-        // families' own heads (a rebuild may have advanced them before
-        // its codes commit landed; the pairing keeps the triple
-        // consistent through every crash window)
-        val cents = spark.read.parquet(Generations.genDir(centPath, cg))
-        val cbRows = spark.read.parquet(Generations.genDir(cbPath, bg))
-        val codes = serveBucketed(spark, codesPath, CodesDdl, "cid")
-        (cents, cbRows, codes)
-      case None =>
-        // train path: quantizer + codebook first, then codes committed
-        // with the pairing that freezes this triple
-        val cents = ivfCentroids(spark, sfDir, nList, iters)
-        lazy val prep = spread(graft.operators.Similarity.prepared(
-          graft.Tables.embeddings(spark, sfDir), "vec_id", "embedding")
-          .filter(size(col("qv")) === dim))
-        lazy val res = graft.operators.Similarity
-          .ivfPqResiduals(prep, cents)
-          .localCheckpoint(true)
-        synchronized {
-          if (!exists(spark, cbPath)) {
-            writePlain(spark, cbPath,
-              res.filter(col("id") < ksub)
-                .select(col("id").as("cid"), col("rv").as("cv")))
-          }
-        }
-        val cbRows = readPlain(spark, cbPath)
-        val codes = ensureBucketed(spark, codesPath, CodesDdl, "cid",
-          markerContent = pairingContent(
-            Generations.head(spark, centPath).map(_._1).getOrElse(1L),
-            Generations.head(spark, cbPath).map(_._1).getOrElse(1L))) {
-          graft.operators.Similarity.ivfPqCodes(res, cbRows, m, ksub, dim)
-        }
-        (cents, cbRows, codes)
+  /** The (quantizer, codebook) generations the codes head pairs. */
+  private def pairing(spark: SparkSession,
+      codesPath: String): Option[(Long, Long)] =
+    Generations.head(spark, codesPath).flatMap { case (_, content) =>
+      val kv = content.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
+        .map(_.split("=", 2)).collect { case Array(k, v) => k -> v.toLong }
+        .toMap
+      for (c <- kv.get("cent"); b <- kv.get("cb")) yield (c, b)
     }
-  }
 
   /** Fold a new batch INTO the persisted IVF-PQ index — the ANN side
     * of the daily loop [[lshIndexAppend]] closes for text dedup: the
@@ -492,72 +581,59 @@ object Models {
     * `dedupeIds = true` makes the fold IDEMPOTENT for at-least-once
     * callers (the streaming maintenance loop): ids already present in
     * the index are dropped from the batch before the append, so a
-    * replayed batch appends nothing. The spelling never shuffles the
-    * index: the index side streams MAP-SIDE against a broadcast of the
-    * batch's ids (left-semi, build-right), and the resulting hit set —
-    * at most batch-sized — broadcasts back onto the batch as an anti
-    * join. Cost class = the drift audit's single-column scan, not the
-    * index-shuffling nid anti-join ScaleAudit vetoed in round 10. */
+    * replayed batch appends nothing ([[fresh]]: the drift audit's cost
+    * class, a single-column index scan — not the index-shuffling nid
+    * anti-join ScaleAudit vetoed in round 10). */
   def ivfPqIndexAppend(spark: SparkSession, sfDir: String,
       batch: DataFrame, idCol: String, vecCol: String, nList: Int = 16,
       iters: Int = 2, m: Int = 8, ksub: Int = 256, dim: Int = 64,
       maxCellShareMilli: Int = 1000,
       dedupeIds: Boolean = false): DataFrame = synchronized {
-    val codesName = tableName(ivfPqCodesPath(sfDir, nList, iters, m, ksub))
-    require(exists(spark, ivfPqCodesPath(sfDir, nList, iters, m, ksub)),
-      "ivfPqIndexAppend requires a trained index (call ivfPqIndex first)")
-    // re-registers the bucketed table after a catalog loss (restart)
-    // and loads the frozen artifacts; never retrains here
-    val (cents, cbRows, _) = ivfPqIndex(spark, sfDir, nList, iters, m,
-      ksub, dim)
-    val prep = spread(graft.operators.Similarity
-      .prepared(batch, idCol, vecCol)
-      .filter(size(col("qv")) === dim))
-    val encoded = graft.operators.Similarity
-      .ivfPqCodes(graft.operators.Similarity.ivfPqResiduals(prep, cents),
-        cbRows, m, ksub, dim)
-      .localCheckpoint(true) // encode once: the write + audit both read it
-    val newCodes =
-      if (!dedupeIds) encoded
-      else {
-        val present = spark.table(codesName)
-          .join(broadcast(encoded.select(col("nid"))), Seq("nid"),
-            "left_semi")
-          .select(col("nid")).localCheckpoint(true)
-        encoded.join(broadcast(present), Seq("nid"), "left_anti")
-          .localCheckpoint(true)
-      }
-    newCodes.repartition(IndexBuckets, col("cid")) // one file per bucket
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IndexBuckets, "cid").sortBy("cid")
-      .format("parquet").saveAsTable(codesName)
-    val post = spark.table(codesName)
-    // drift audit WITHOUT an index-sized shuffle: both sides reduce to
-    // per-cell counts map-side (the nid anti-join spelling shuffled
-    // the whole index per fold — ScaleAudit caught it: 3× shuffle at
-    // 5× index); the only index-proportional cost left is the
-    // RLE-compressed single-column cid scan
-    val totals = post.groupBy("cid").agg(count(lit(1)).as("n_total"))
-    val news = newCodes.groupBy("cid").agg(count(lit(1)).as("n_appended"))
-    val stats = totals.join(news, Seq("cid"), "left")
-      .select(col("cid"),
-        (col("n_total") - coalesce(col("n_appended"), lit(0L)))
-          .as("n_index"),
-        coalesce(col("n_appended"), lit(0L)).as("n_appended"),
-        col("n_total"))
-      .localCheckpoint(true)
-    val agg = stats.agg(sum("n_total"), max("n_total")).head()
-    val (total, maxCell) = (agg.getLong(0), agg.getLong(1))
-    if (MaintenanceLog.enabled(spark, root(sfDir))) {
-      MaintenanceLog.emit(spark, root(sfDir), "fold", "ivfpq_codes",
-        nRows = newCodes.count(),
+    step(spark, "ivfpq_codes", "fold") {
+      val t0 = System.currentTimeMillis()
+      val codesPath = ivfPqCodesPath(sfDir, nList, iters, m, ksub)
+      require(exists(spark, codesPath),
+        "ivfPqIndexAppend requires a trained index (call ivfPqIndex first)")
+      // re-registers the bucketed table after a catalog loss (restart)
+      // and loads the frozen artifacts; never retrains here
+      val (cents, cbRows, codes) = ivfPqIndex(spark, sfDir, nList, iters, m,
+        ksub, dim)
+      val prep = spread(graft.operators.Similarity
+        .prepared(batch, idCol, vecCol)
+        .filter(size(col("qv")) === dim))
+      val encoded = graft.operators.Similarity
+        .ivfPqCodes(graft.operators.Similarity.ivfPqResiduals(prep, cents),
+          cbRows, m, ksub, dim)
+        .localCheckpoint(true) // encode once: the write + audit both read it
+      val newCodes =
+        if (!dedupeIds) encoded
+        else fresh(encoded, "nid", codes, "nid").localCheckpoint(true)
+      append(spark, codesPath, newCodes)
+      val post = spark.table(tableName(codesPath))
+      // drift audit WITHOUT an index-sized shuffle: both sides reduce to
+      // per-cell counts map-side (the nid anti-join spelling shuffled
+      // the whole index per fold — ScaleAudit caught it: 3× shuffle at
+      // 5× index); the only index-proportional cost left is the
+      // RLE-compressed single-column cid scan
+      val totals = post.groupBy("cid").agg(count(lit(1)).as("n_total"))
+      val news = newCodes.groupBy("cid").agg(count(lit(1)).as("n_appended"))
+      val stats = totals.join(news, Seq("cid"), "left")
+        .select(col("cid"),
+          (col("n_total") - coalesce(col("n_appended"), lit(0L)))
+            .as("n_index"),
+          coalesce(col("n_appended"), lit(0L)).as("n_appended"),
+          col("n_total"))
+        .localCheckpoint(true)
+      val agg = stats.agg(sum("n_total"), max("n_total")).head()
+      val (total, maxCell) = (agg.getLong(0), agg.getLong(1))
+      logEvent(spark, root(sfDir), "fold", "ivfpq_codes", t0, newCodes.count(),
         detail = s"max_cell_share_milli=${maxCell * 1000L / total}")
+      require(maxCell * 1000L <= maxCellShareMilli.toLong * total,
+        s"drift guard: hottest cell holds $maxCell/$total rows " +
+          s"(> $maxCellShareMilli/1000 of the index) — rebuild the " +
+          "quantizer before further folds")
+      stats
     }
-    require(maxCell * 1000L <= maxCellShareMilli.toLong * total,
-      s"drift guard: hottest cell holds $maxCell/$total rows " +
-        s"(> $maxCellShareMilli/1000 of the index) — rebuild the " +
-        "quantizer before further folds")
-    stats
   }
 
   /** REBUILD the persisted IVF-PQ index from `corpus` — the repair a
@@ -598,91 +674,70 @@ object Models {
       idCol: String, vecCol: String, nList: Int = 16, iters: Int = 2,
       m: Int = 8, ksub: Int = 256, dim: Int = 64)
       : (DataFrame, DataFrame, DataFrame) = synchronized {
-    val centPath = ivfCentroidsPath(sfDir, nList, iters)
-    val cbPath = ivfPqCodebookPath(sfDir, nList, iters, m, ksub)
-    val codesPath = ivfPqCodesPath(sfDir, nList, iters, m, ksub)
-    val codesName = tableName(codesPath)
-    // the trainer's exact derivation over the caller's corpus: the
-    // quantizer trains on ALL prepared rows (ivfCentroids' spelling),
-    // codebook + codes on the dim-matched subset (ivfPqIndex's)
-    val prepAll = spread(
-      graft.operators.Similarity.prepared(corpus, idCol, vecCol))
-      .localCheckpoint(true) // Lloyd steps + residuals all read it
-    val cents = graft.operators.Similarity
-      .refinedCentroids(prepAll, nList, iters).localCheckpoint(true)
-    val res = graft.operators.Similarity
-      .ivfPqResiduals(prepAll.filter(size(col("qv")) === dim), cents)
-      .localCheckpoint(true) // codebook + codes both read it
-    val cbRows = res.filter(col("id") < ksub)
-      .select(col("id").as("cid"), col("rv").as("cv"))
-      .localCheckpoint(true)
-    // stage all three next generations (serving reads the old heads);
-    // the heartbeat keeps all three leases fresh across the rebuild —
-    // the repo's longest staged write, the case the TTL must not bound
-    val (cn, bn, kn) = Generations.withLeaseHeartbeat(spark,
-        Seq(centPath, cbPath, codesPath)) {
-      // all three family leases are taken up front in the canonical
-      // quantizer → codebook → codes order (Generations.prepareAll's
-      // acquisition-order contract): two concurrent rebuilds collide
-      // on the FIRST family, the loser aborts holding nothing, and a
-      // fence arriving mid-acquisition releases what was already taken
-      // instead of fencing the winner's next cycle for a TTL
-      val Seq((cn, cdir), (bn, bdir), (kn, kdir)) =
-        Generations.prepareAll(spark, Seq(centPath, cbPath, codesPath))
-      cents.coalesce(1).write.parquet(cdir)
-      cbRows.coalesce(1).write.parquet(bdir)
-      val stageCodesName = codesName + "_rebuilding"
-      Lake.writeBucketedTable(
-        graft.operators.Similarity.ivfPqCodes(res, cbRows, m, ksub, dim)
-          .repartition(IndexBuckets, col("cid")),
-        stageCodesName, kdir, "cid", IndexBuckets)
-      spark.sql(s"DROP TABLE IF EXISTS $stageCodesName") // catalog only
-      // remember what the OLD head pairs with: those generations must
-      // survive this cutover's reclaim (keep-window readers), while the
-      // generic ≤ head-Keep rule cannot see pairing references
-      val prevPair = Generations.head(spark, codesPath)
-        .flatMap { case (_, c) => parsePairing(c) }
-      // cutover: quantizer + codebook markers first (a crash after them
-      // leaves the codes head still pairing the OLD generations — which
-      // the reclaim below has not run to delete — so serving stays on
-      // the old triple), then the codes marker publishes the new triple
-      // in one atomic create
-      crashPoint("rebuild_staged")
-      Generations.commit(spark, centPath, cn, reclaim = false)
-      crashPoint("rebuild_after_cent")
-      Generations.commit(spark, cbPath, bn, reclaim = false)
-      crashPoint("rebuild_after_cb")
-      Generations.commit(spark, codesPath, kn, pairingContent(cn, bn))
-      // reclaim old quantizer/codebook generations EXCEPT what the new
-      // and previous codes heads pair with
-      Generations.reclaimExcept(spark, centPath, cn,
-        prevPair.map(_._1).toSet)
-      Generations.reclaimExcept(spark, cbPath, bn,
-        prevPair.map(_._2).toSet)
-      (cn, bn, kn)
+    step(spark, "ivfpq_codes", "rebuild") {
+      val t0 = System.currentTimeMillis()
+      val centPath = ivfCentroidsPath(sfDir, nList, iters)
+      val cbPath = ivfPqCodebookPath(sfDir, nList, iters, m, ksub)
+      val codesPath = ivfPqCodesPath(sfDir, nList, iters, m, ksub)
+      // the trainer's exact derivation over the caller's corpus: the
+      // quantizer trains on ALL prepared rows (ivfCentroids' spelling),
+      // codebook + codes on the dim-matched subset (ivfPqIndex's)
+      val prepAll = spread(
+        graft.operators.Similarity.prepared(corpus, idCol, vecCol))
+        .localCheckpoint(true) // Lloyd steps + residuals all read it
+      val cents = graft.operators.Similarity
+        .refinedCentroids(prepAll, nList, iters).localCheckpoint(true)
+      val res = graft.operators.Similarity
+        .ivfPqResiduals(prepAll.filter(size(col("qv")) === dim), cents)
+        .localCheckpoint(true) // codebook + codes both read it
+      val cbRows = res.filter(col("id") < ksub)
+        .select(col("id").as("cid"), col("rv").as("cv"))
+        .localCheckpoint(true)
+      // stage all three next generations (serving reads the old heads);
+      // the heartbeat keeps all three leases fresh across the rebuild —
+      // the repo's longest staged write, the case the TTL must not bound
+      val (cn, bn, kn) = Generations.withLeaseHeartbeat(spark,
+          Seq(centPath, cbPath, codesPath)) {
+        // all three family leases are taken up front in the canonical
+        // quantizer → codebook → codes order (Generations.prepareAll's
+        // acquisition-order contract): two concurrent rebuilds collide
+        // on the FIRST family, the loser aborts holding nothing, and a
+        // fence arriving mid-acquisition releases what was already taken
+        // instead of fencing the winner's next cycle for a TTL
+        val Seq((cn, cdir), (bn, bdir), (kn, kdir)) =
+          Generations.prepareAll(spark, Seq(centPath, cbPath, codesPath))
+        writeGen(spark, centPath, cents, cdir)
+        writeGen(spark, cbPath, cbRows, bdir)
+        writeGen(spark, codesPath,
+          graft.operators.Similarity.ivfPqCodes(res, cbRows, m, ksub, dim),
+          kdir)
+        // remember what the OLD head pairs with: those generations must
+        // survive this cutover's reclaim (keep-window readers), while the
+        // generic ≤ head-Keep rule cannot see pairing references
+        val prevPair = pairing(spark, codesPath)
+        // cutover: quantizer + codebook markers first (a crash after them
+        // leaves the codes head still pairing the OLD generations — which
+        // the reclaim below has not run to delete — so serving stays on
+        // the old triple), then the codes marker publishes the new triple
+        // in one atomic create
+        crashPoint("rebuild_staged")
+        Generations.commit(spark, centPath, cn, reclaim = false)
+        crashPoint("rebuild_after_cent")
+        Generations.commit(spark, cbPath, bn, reclaim = false)
+        crashPoint("rebuild_after_cb")
+        Generations.commit(spark, codesPath, kn, pairingContent(cn, bn))
+        // reclaim old quantizer/codebook generations EXCEPT what the new
+        // and previous codes heads pair with
+        Generations.reclaimExcept(spark, centPath, cn,
+          prevPair.map(_._1).toSet)
+        Generations.reclaimExcept(spark, cbPath, bn,
+          prevPair.map(_._2).toSet)
+        (cn, bn, kn)
+      }
+      logEvent(spark, root(sfDir), "rebuild", "ivfpq_codes", t0,
+        prepAll.count(), detail = s"cent=$cn,cb=$bn,codes=$kn")
+      ivfPqIndex(spark, sfDir, nList, iters, m, ksub, dim)
     }
-    if (MaintenanceLog.enabled(spark, root(sfDir))) {
-      MaintenanceLog.emit(spark, root(sfDir), "rebuild", "ivfpq_codes",
-        nRows = prepAll.count(),
-        detail = s"cent=$cn,cb=$bn,codes=$kn")
-    }
-    ivfPqIndex(spark, sfDir, nList, iters, m, ksub, dim)
-  }
-
-  /** Reclaim ONE corpus's IVF-PQ artifacts (quantizer, codebook, codes
-    * table + catalog entry, the per-corpus model root) — the ANN twin
-    * of [[dropLshArtifacts]], for run-private fold corpora
-    * (`sim_ivfpq_rebuild` trains, folds, and rebuilds in a fresh dir
-    * per run). */
-  def dropIvfPqArtifacts(spark: SparkSession, sfDir: String,
-      nList: Int = 16, iters: Int = 2, m: Int = 8,
-      ksub: Int = 256): Unit = synchronized {
-    spark.sql("DROP TABLE IF EXISTS " +
-      tableName(ivfPqCodesPath(sfDir, nList, iters, m, ksub)))
-    MaintenanceLog.disable(root(sfDir))
-    val dir = new org.apache.hadoop.fs.Path(root(sfDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dir)) { fs.delete(dir, true); () }
   }
 
   // ---- near-dup cluster map (the dedup map) ------------------------------
@@ -702,8 +757,7 @@ object Models {
     * hash-matches a reload. */
   def dedupMap(spark: SparkSession, sfDir: String,
       tPct: Int = 50): DataFrame =
-    ensureBucketed(spark, dedupMapPath(sfDir, tPct),
-      "id BIGINT, label BIGINT", "id") {
+    ensure(spark, dedupMapPath(sfDir, tPct)) {
       graft.functions.GraftFunctions.register(spark)
       val docs = graft.Tables.documents(spark, sfDir)
       val pairs = Dedup
@@ -730,15 +784,14 @@ object Models {
       tPct: Int = 50): DataFrame = {
     val map = dedupMap(spark, sfDir, tPct)
     val rp = dedupRemapPath(sfDir, tPct)
-    if (!exists(spark, rp)) map
-    else {
-      val remap = readPlain(spark, rp)
-      map.join(broadcast(remap), map("label") === remap("from_label"),
-          "left")
-        .select(map("id"),
-          coalesce(col("to_label"), map("label")).as("label"))
-    }
+    if (!exists(spark, rp)) map else resolveLabels(map, serve(spark, rp))
   }
+
+  /** `map`'s `(id, label)` rows with labels resolved through the flat
+    * `remap` ledger (one broadcast hop; the map never shuffles). */
+  private def resolveLabels(map: DataFrame, remap: DataFrame): DataFrame =
+    map.join(broadcast(remap), map("label") === remap("from_label"), "left")
+      .select(map("id"), coalesce(col("to_label"), map("label")).as("label"))
 
   /** Fold a batch of new documents INTO the persisted cluster map —
     * the missing fourth daily loop (postings: [[postingsAppend]], LSH:
@@ -803,124 +856,107 @@ object Models {
     * whole batch so the fold's remaining consumers reuse the one
     * shingle pass the probe already paid. */
   def dedupMapAppend(spark: SparkSession, sfDir: String, batch: DataFrame,
-      idCol: String, textCol: String, tPct: Int = 80,
+      idCol: String, textCol: String, tPct: Int,
       k: Int = 32, b: Int = 16, w: Int = 3,
       dedupeIds: Boolean = false,
       precomputedPairs: Option[DataFrame] = None,
       precomputedSets: Option[DataFrame] = None): Unit = synchronized {
-    val mapName = tableName(dedupMapPath(sfDir, tPct))
-    require(exists(spark, dedupMapPath(sfDir, tPct)),
-      "dedupMapAppend requires a trained map (call dedupMap first)")
-    require(exists(spark, lshSetsPath(sfDir, w)) &&
-      exists(spark, lshBandsPath(sfDir, k, b, w)),
-      "dedupMapAppend requires the LSH index (call lshIndex first)")
-    val resolved = dedupMapResolved(spark, sfDir, tPct)
-    val fresh =
-      if (!dedupeIds) batch
-      else {
-        val present = dedupMap(spark, sfDir, tPct)
-          .join(broadcast(batch.select(col(idCol).as("id"))), Seq("id"),
-            "left_semi")
-          .select(col("id").as(idCol)).localCheckpoint(true)
-        batch.join(broadcast(present), Seq(idCol), "left_anti")
+    step(spark, "dedup_map", "fold") {
+      val t0 = System.currentTimeMillis()
+      val mapPath = dedupMapPath(sfDir, tPct)
+      require(exists(spark, mapPath),
+        "dedupMapAppend requires a trained map (call dedupMap first)")
+      require(exists(spark, lshSetsPath(sfDir, w)) &&
+        exists(spark, lshBandsPath(sfDir, k, b, w)),
+        "dedupMapAppend requires the LSH index (call lshIndex first)")
+      val resolved = dedupMapResolved(spark, sfDir, tPct)
+      val todo =
+        if (!dedupeIds) batch
+        else fresh(batch, idCol, dedupMap(spark, sfDir, tPct), "id")
+      val bdf = todo.select(col(idCol), col(textCol)).localCheckpoint(true)
+      if (!bdf.isEmpty) { // a pure replay folds to a no-op
+        val (bands, sets) = lshIndex(spark, sfDir,
+          sys.error("index exists — training must not run"), idCol,
+          textCol, k, b, w)
+        // shingle the batch ONCE: the probe, the inner pair join, and the
+        // LSH fold below all consume this one checkpointed set table —
+        // tokenize+shingle is the fold's dominant per-row cost, and the
+        // naive spelling paid it three times per fold (a caller that
+        // already probed passes its sets in, dropping this to zero here;
+        // dedupe-filtered rows are cut by the id semi-join)
+        val bSets = batchSets(precomputedSets, bdf, idCol, textCol, w)
+        // batch↔index edges (probed here, or the caller's single probe),
+        // old endpoint contracted to its RESOLVED label; when dedupeIds
+        // dropped replayed docs, their precomputed edges drop with them
+        val rawPairs = precomputedPairs
+          .map(_.join(broadcast(bdf.select(col(idCol).as("j"))), Seq("j"),
+            "left_semi"))
+          .getOrElse(Dedup.crossSplitPairsIndexed(bands, sets, bdf, idCol,
+            textCol, tPct / 100.0, k, b, w, precomputedSets = Some(bSets)))
+        val crossEdges = rawPairs
+          .select(col("i").as("id"), col("j"))
+          .join(resolved, Seq("id"))
+          .select(col("label").as("i"), col("j"))
+        // batch↔batch edges: exact prefix-filtered join over the batch
+        val innerEdges = Dedup
+          .jaccardPairs(bdf, idCol, textCol, tPct / 100.0, w,
+            precomputedSets = Some(bSets))
+          .select(col("i"), col("j"))
+        // one materialization carries both edge classes; the cross flag
+        // marks which i-endpoints are CONTRACTED old labels — the only
+        // labels that can merge away, hence the only merge-ledger
+        // candidates (batch-internal i's would only add no-op rows that
+        // bloat the broadcast ledger)
+        val edges0 = crossEdges.withColumn("cross", lit(true))
+          .unionAll(innerEdges.withColumn("cross", lit(false)))
+          .localCheckpoint(true)
+        val edges = edges0.select("i", "j")
+        val nodes = bdf.select(col(idCol).as("id"))
+          .unionAll(edges.select(col("i").as("id"))).distinct()
+        val comp = Dedup.components(nodes, edges, pairsContained = true)
+          .localCheckpoint(true) // everything below reads it
+        crashPoint("map_start")
+        // the daily LSH fold first: its own idempotence layer, and folding
+        // it before the map writes means every crash-window replay can
+        // still regenerate identical pairs (see the scaladoc contract)
+        lshIndexAppend(spark, sfDir, bdf, idCol, textCol, k, b, w,
+          dedupeIds = true, precomputedSets = Some(bSets))
+        crashPoint("map_after_lsh")
+        // merge ledger: touched old labels whose component found a
+        // smaller canonical id
+        val oldLabels = edges0.filter(col("cross"))
+          .select(col("i").as("id")).distinct()
+        val remapNew = comp.join(oldLabels, Seq("id"), "left_semi")
+          .filter(col("label") =!= col("id"))
+          .select(col("id").as("from_label"), col("label").as("to_label"))
+          .localCheckpoint(true)
+        val rp = dedupRemapPath(sfDir, tPct)
+        val oldRemap = if (exists(spark, rp)) Some(serve(spark, rp)) else None
+        val mergedRemap = (oldRemap, remapNew.isEmpty) match {
+          case (None, true) => None
+          case (None, false) => Some(remapNew)
+          case (Some(o), _) =>
+            Some(o
+              .join(remapNew.select(col("from_label").as("f2"),
+                col("to_label").as("t2")), o("to_label") === col("f2"),
+                "left")
+              .select(o("from_label"),
+                coalesce(col("t2"), o("to_label")).as("to_label"))
+              .unionAll(remapNew))
+        }
+        // ATOMIC ledger rewrite through the generation cutover: the old
+        // ledger's files survive the flip (keep-2, and they are what the
+        // merged plan reads), so a crash mid-rewrite leaves the previous
+        // committed ledger serving — never a half-written or deleted one
+        mergedRemap.foreach(rewrite(spark, rp, _))
+        crashPoint("map_after_remap")
+        // batch rows last, with their final labels, bucket-preserving
+        append(spark, mapPath,
+          comp.join(broadcast(bdf.select(col(idCol).as("id"))), Seq("id"),
+            "left_semi"))
+        logEvent(spark, root(sfDir), "fold", "dedup_map", t0, bdf.count(),
+          detail = s"merges=${remapNew.count()}")
       }
-    val bdf = fresh.select(col(idCol), col(textCol)).localCheckpoint(true)
-    if (bdf.isEmpty) return // pure replay: fold to a no-op
-    val (bands, sets) = lshIndex(spark, sfDir,
-      sys.error("index exists — training must not run"), idCol, textCol,
-      k, b, w)
-    // shingle the batch ONCE: the probe, the inner pair join, and the
-    // LSH fold below all consume this one checkpointed set table —
-    // tokenize+shingle is the fold's dominant per-row cost, and the
-    // naive spelling paid it three times per fold (a caller that
-    // already probed passes its sets in, dropping this to zero here;
-    // dedupe-filtered rows are cut by the id semi-join)
-    val bSets = precomputedSets
-      .map(_.join(broadcast(bdf.select(col(idCol).as("id"))),
-        Seq("id"), "left_semi").localCheckpoint(true))
-      .getOrElse(Dedup.shingleSets(bdf, idCol, textCol, w)
-        .localCheckpoint(true))
-    // batch↔index edges (probed here, or the caller's single probe),
-    // old endpoint contracted to its RESOLVED label; when dedupeIds
-    // dropped replayed docs, their precomputed edges drop with them
-    val rawPairs = precomputedPairs
-      .map(_.join(broadcast(bdf.select(col(idCol).as("j"))), Seq("j"),
-        "left_semi"))
-      .getOrElse(Dedup.crossSplitPairsIndexed(bands, sets, bdf, idCol,
-        textCol, tPct / 100.0, k, b, w, precomputedSets = Some(bSets)))
-    val crossEdges = rawPairs
-      .select(col("i").as("id"), col("j"))
-      .join(resolved, Seq("id"))
-      .select(col("label").as("i"), col("j"))
-    // batch↔batch edges: exact prefix-filtered join over the batch
-    val innerEdges = Dedup
-      .jaccardPairs(bdf, idCol, textCol, tPct / 100.0, w,
-        precomputedSets = Some(bSets))
-      .select(col("i"), col("j"))
-    // one materialization carries both edge classes; the cross flag
-    // marks which i-endpoints are CONTRACTED old labels — the only
-    // labels that can merge away, hence the only merge-ledger
-    // candidates (batch-internal i's would only add no-op rows that
-    // bloat the broadcast ledger)
-    val edges0 = crossEdges.withColumn("cross", lit(true))
-      .unionAll(innerEdges.withColumn("cross", lit(false)))
-      .localCheckpoint(true)
-    val edges = edges0.select("i", "j")
-    val nodes = bdf.select(col(idCol).as("id"))
-      .unionAll(edges.select(col("i").as("id"))).distinct()
-    val comp = Dedup.components(nodes, edges, pairsContained = true)
-      .localCheckpoint(true) // everything below reads it
-    crashPoint("map_start")
-    // the daily LSH fold first: its own idempotence layer, and folding
-    // it before the map writes means every crash-window replay can
-    // still regenerate identical pairs (see the scaladoc contract)
-    lshIndexAppend(spark, sfDir, bdf, idCol, textCol, k, b, w,
-      dedupeIds = true, precomputedSets = Some(bSets))
-    crashPoint("map_after_lsh")
-    // merge ledger: touched old labels whose component found a smaller
-    // canonical id
-    val oldLabels = edges0.filter(col("cross"))
-      .select(col("i").as("id")).distinct()
-    val remapNew = comp.join(oldLabels, Seq("id"), "left_semi")
-      .filter(col("label") =!= col("id"))
-      .select(col("id").as("from_label"), col("label").as("to_label"))
-      .localCheckpoint(true)
-    val rp = dedupRemapPath(sfDir, tPct)
-    val oldRemap =
-      if (exists(spark, rp)) Some(readPlain(spark, rp)) else None
-    val mergedRemap = (oldRemap, remapNew.isEmpty) match {
-      case (None, true) => None
-      case (None, false) => Some(remapNew)
-      case (Some(o), _) =>
-        Some(o
-          .join(remapNew.select(col("from_label").as("f2"),
-            col("to_label").as("t2")), o("to_label") === col("f2"),
-            "left")
-          .select(o("from_label"),
-            coalesce(col("t2"), o("to_label")).as("to_label"))
-          .unionAll(remapNew))
-    }
-    // ATOMIC ledger rewrite through the generation cutover: the old
-    // ledger's files survive the flip (keep-2, and they are what the
-    // merged plan reads), so a crash mid-rewrite leaves the previous
-    // committed ledger serving — never a half-written or deleted one
-    mergedRemap.foreach { r =>
-      Generations.cutover(spark, rp) { g =>
-        r.coalesce(1).write.parquet(g)
-      }
-    }
-    crashPoint("map_after_remap")
-    // batch rows last, with their final labels, bucket-preserving
-    comp.join(broadcast(bdf.select(col(idCol).as("id"))), Seq("id"),
-        "left_semi")
-      .repartition(IndexBuckets, col("id")) // one file per bucket
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .bucketBy(IndexBuckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(mapName)
-    if (MaintenanceLog.enabled(spark, root(sfDir))) {
-      MaintenanceLog.emit(spark, root(sfDir), "fold", "dedup_map",
-        nRows = bdf.count(),
-        detail = s"merges=${remapNew.count()}")
     }
   }
 
@@ -937,23 +973,19 @@ object Models {
     * through them is a no-op and the next compact clears them. Returns
     * (dataFilesBefore, dataFilesAfter). */
   def compactDedupMap(spark: SparkSession, sfDir: String,
-      tPct: Int = 80): (Long, Long) = synchronized {
+      tPct: Int): (Long, Long) = synchronized {
     val path = dedupMapPath(sfDir, tPct)
     val rp = dedupRemapPath(sfDir, tPct)
-    if (exists(spark, rp)) {
+    if (!exists(spark, rp)) compact(spark, path)
+    else step(spark, "dedup_map", "compact") {
       // resolve-and-rewrite through the shared generation cutover:
       // read the head generation's FILES, apply the remap, write the
       // next generation, flip the pointer — the raw files being read
       // survive the whole pass (keep-2), so no checkpoint sever is
       // needed and a crash leaves the old head serving
-      val remap = readPlain(spark, rp)
       val raw = spark.read.parquet(servingDir(spark, path))
-      val resolved = raw
-        .join(broadcast(remap), raw("label") === remap("from_label"),
-          "left")
-        .select(raw("id"),
-          coalesce(col("to_label"), raw("label")).as("label"))
-      val counts = compactBucketedWith(spark, path, "id", resolved)
+      val counts =
+        compact(spark, path, Some(resolveLabels(raw, serve(spark, rp))))
       // the ledger folded into the base rows: delete the remap FAMILY
       // (a crash before this delete leaves stale remap rows whose
       // from-labels no longer occur in the map — harmless no-ops, see
@@ -962,7 +994,7 @@ object Models {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(rp), true)
       counts
-    } else compactBucketed(spark, path, "id")
+    }
   }
 
   // ---- token document-frequency table (rarity/tf-idf statistic) ----------
@@ -976,15 +1008,8 @@ object Models {
     * rarity/tf-idf consumer thereafter. Deterministic; the
     * `tx_rarity_indexed` retraining oracle proves reload ≡ retrain. */
   def dfTable(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val path = dfTablePath(sfDir)
-      if (!exists(spark, path)) {
-        writePlain(spark, path,
-          TextOps.dfTable(graft.Tables.documents(spark, sfDir)
-            .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))))
-      }
-      readPlain(spark, path)
-    }
+    ensure(spark, dfTablePath(sfDir))(
+      TextOps.dfTable(tokenized(graft.Tables.documents(spark, sfDir))))
 
   // ---- BM25 retrieval artifacts (postings index + doc lengths) -----------
 
@@ -1000,14 +1025,8 @@ object Models {
     * re-tokenizes the corpus. Built once per corpus; the
     * `tx_bm25_postings` retraining oracle proves reload ≡ retokenize. */
   def postings(spark: SparkSession, sfDir: String): DataFrame =
-    ensureBucketed(spark, postingsPath(sfDir),
-      "tok STRING, doc_id BIGINT, tf BIGINT", "tok") {
-      graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id"), explode(TextOps.tokens(col("text")))
-          .as("tok"))
-        .groupBy("tok", "doc_id")
-        .agg(count(lit(1)).as("tf"))
-    }
+    ensure(spark, postingsPath(sfDir))(
+      postingsRows(tokenized(graft.Tables.documents(spark, sfDir))))
 
   def positionalPostingsPath(sfDir: String): String =
     s"${root(sfDir)}/postings_pos"
@@ -1028,11 +1047,20 @@ object Models {
     * The `tx_phrase_match` retraining oracle proves reload ≡
     * retokenize. */
   def positionalPostings(spark: SparkSession, sfDir: String): DataFrame =
-    ensureBucketed(spark, positionalPostingsPath(sfDir),
-      "tok STRING, doc_id BIGINT, positions ARRAY<BIGINT>", "tok") {
-      positionalRows(graft.Tables.documents(spark, sfDir)
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("w")))
-    }
+    ensure(spark, positionalPostingsPath(sfDir))(
+      positionalRows(tokenized(graft.Tables.documents(spark, sfDir))))
+
+  /** Tokenized docs `(doc_id, w)` — every retrieval artifact's rows
+    * (train, one-pass build and fold alike) derive from these. */
+  private def tokenized(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
+
+  private def postingsRows(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), explode(col("w")).as("tok"))
+      .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
+
+  private def lensRows(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), size(col("w")).cast("long").as("dl"))
 
   /** Positional postings rows from tokenized docs `(doc_id, w)`:
     * sorted-ascending 1-based offsets per (tok, doc). `sort_array`
@@ -1049,16 +1077,8 @@ object Models {
     * normalizer's corpus statistic, stored beside the postings so
     * query-time scoring touches no raw text at all. */
   def docLens(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val path = docLensPath(sfDir)
-      if (!exists(spark, path)) {
-        writePlain(spark, path,
-          graft.Tables.documents(spark, sfDir)
-            .select(col("doc_id"),
-              size(TextOps.tokens(col("text"))).cast("long").as("dl")))
-      }
-      readPlain(spark, path)
-    }
+    ensure(spark, docLensPath(sfDir))(
+      lensRows(tokenized(graft.Tables.documents(spark, sfDir))))
 
   /** Build ALL base retrieval artifacts for a corpus in ONE tokenize
     * pass. The individual accessors ([[postings]], [[docLens]],
@@ -1069,8 +1089,8 @@ object Models {
     * 100 TB the tokenize IS the build cost, so this builder stages the
     * tokenized corpus ONCE (a parquet staging dir under the model
     * root — durable across executor loss, unlike a localCheckpoint,
-    * and reclaimed at the end or by [[dropRetrievalArtifacts]] after a
-    * crash) and derives every missing artifact from it:
+    * and reclaimed at the end or by [[vacuum]]/[[drop]] after a crash)
+    * and derives every missing artifact from it:
     *
     *   - postings: explode + (tok, doc) count, bucketed write;
     *   - positional postings (when requested): [[positionalRows]];
@@ -1092,49 +1112,25 @@ object Models {
   def buildRetrievalArtifacts(spark: SparkSession, sfDir: String,
       docs: Option[DataFrame] = None,
       includePositional: Boolean = false): Unit = synchronized {
-    val needPost = !exists(spark, postingsPath(sfDir))
-    val needPos =
-      includePositional && !exists(spark, positionalPostingsPath(sfDir))
-    val needLens = !exists(spark, docLensPath(sfDir))
-    val needDf = !exists(spark, dfTablePath(sfDir))
-    if (!(needPost || needPos || needLens || needDf)) return
-    val staging = s"${root(sfDir)}/tok_staging"
-    val sp = new org.apache.hadoop.fs.Path(staging)
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    docs.getOrElse(graft.Tables.documents(spark, sfDir))
-      .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
-      .write.mode("overwrite").parquet(staging)
-    val toks = spark.read.parquet(staging)
-    if (needPost) {
-      val p = postingsPath(sfDir)
-      val (n, g) = Generations.prepare(spark, p)
-      Generations.withLeaseHeartbeat(spark, Seq(p)) {
-        Lake.writeBucketedTable(
-          toks.select(col("doc_id"), explode(col("w")).as("tok"))
-            .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf")),
-          tableName(p), g, "tok", IndexBuckets)
-        Generations.commit(spark, p, n)
+    val artifacts = Seq(postingsPath(sfDir), docLensPath(sfDir),
+      dfTablePath(sfDir)) ++
+      (if (includePositional) Seq(positionalPostingsPath(sfDir)) else Nil)
+    if (!artifacts.forall(exists(spark, _))) step(spark, "postings", "train") {
+      val staging = s"${root(sfDir)}/tok_staging"
+      val sp = new org.apache.hadoop.fs.Path(staging)
+      val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      tokenized(docs.getOrElse(graft.Tables.documents(spark, sfDir)))
+        .write.mode("overwrite").parquet(staging)
+      val toks = spark.read.parquet(staging)
+      ensure(spark, postingsPath(sfDir))(postingsRows(toks))
+      if (includePositional) {
+        ensure(spark, positionalPostingsPath(sfDir))(positionalRows(toks))
       }
+      ensure(spark, docLensPath(sfDir))(lensRows(toks))
+      ensure(spark, dfTablePath(sfDir))(
+        postings(spark, sfDir).groupBy("tok").agg(count(lit(1)).as("df")))
+      fs.delete(sp, true)
     }
-    if (needPos) {
-      val p = positionalPostingsPath(sfDir)
-      val (n, g) = Generations.prepare(spark, p)
-      Generations.withLeaseHeartbeat(spark, Seq(p)) {
-        Lake.writeBucketedTable(positionalRows(toks),
-          tableName(p), g, "tok", IndexBuckets)
-        Generations.commit(spark, p, n)
-      }
-    }
-    if (needLens) {
-      writePlain(spark, docLensPath(sfDir),
-        toks.select(col("doc_id"), size(col("w")).cast("long").as("dl")))
-    }
-    if (needDf) {
-      writePlain(spark, dfTablePath(sfDir),
-        postings(spark, sfDir)
-          .groupBy("tok").agg(count(lit(1)).as("df")))
-    }
-    fs.delete(sp, true)
     ()
   }
 
@@ -1196,169 +1192,131 @@ object Models {
     * at-least-once Spark sink provides. */
   def postingsAppend(spark: SparkSession, sfDir: String,
       batch: DataFrame, idCol: String, textCol: String,
-      dedupeIds: Boolean = false): Unit =
-    synchronized {
+      dedupeIds: Boolean = false): Unit = synchronized {
+    step(spark, "postings", "fold") {
       val t0 = System.currentTimeMillis()
       // ensure all three artifacts exist for the BASE corpus before
       // folding — ONE tokenize pass when they're all missing — then
       // re-register the bucketed tables after a restart
       buildRetrievalArtifacts(spark, sfDir)
-      postings(spark, sfDir)
-      val name = tableName(postingsPath(sfDir))
-      val hasPos = exists(spark, positionalPostingsPath(sfDir))
-      if (hasPos) positionalPostings(spark, sfDir) // re-register
-      val posName = tableName(positionalPostingsPath(sfDir))
+      val post = postings(spark, sfDir)
+      val pos =
+        if (!exists(spark, positionalPostingsPath(sfDir))) None
+        else Some(positionalPostings(spark, sfDir))
       val b = batch
         .select(col(idCol).as("doc_id"), col(textCol).as("text"))
         .localCheckpoint(true) // guards + tokenize all read it
-      if (b.isEmpty) return
-      val ids = b.select("doc_id")
-      // the fold's identity: an order-independent digest of the batch
-      // ids — count plus TWO independent 64-bit xor-of-xxhash64 lanes
-      // (different salts), so an accidental collision with the ledger
-      // head (which would silently drop a fresh fold's df increments)
-      // needs a simultaneous 128-bit coincidence. Hashing also keeps
-      // the digest TYPE-AGNOSTIC (the pre-r17 bit_xor(doc_id) failed
-      // analysis on string ids); note the retrieval artifacts' own
-      // schema DDL still fixes doc_id to BIGINT — this just keeps the
-      // guard from being the narrowing point. min/max ride along in
-      // the id's native type for the probes' row-group range pruning.
-      val idAgg = b.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(doc_id))"),
-        expr("bit_xor(xxhash64(doc_id, 1017L))"),
-        min("doc_id"), max("doc_id")).head()
-      val foldId = s"fold=${idAgg.getLong(0)}_${idAgg.getLong(1)}" +
-        s"_${idAgg.getLong(2)}"
-      def presentIn(artifact: DataFrame): DataFrame = artifact
-        .select("doc_id")
-        .filter(col("doc_id")
-          .between(lit(idAgg.get(3)), lit(idAgg.get(4))))
-        .join(broadcast(ids), Seq("doc_id"), "left_semi")
-        .distinct().localCheckpoint(true)
-      def freshFor(present: DataFrame): DataFrame =
-        b.join(broadcast(present), Seq("doc_id"), "left_anti")
-      val (freshPost, freshPos, freshLens, dfApplied) =
-        if (!dedupeIds) (b, b, b, false)
-        else {
-          // Resolve the artifact frames ON THIS THREAD first —
-          // docLens/spark.table take the Models lock this method
-          // already holds, so a pool thread calling them would
-          // deadlock. The three presence probes themselves are
-          // independent read-only scans whose cost is the eager
-          // localCheckpoint action, so they fan out to a small pool
-          // (guide §2.6 — the fold's guard phase is action-count
-          // bound, not data bound); write order below is untouched.
-          val postT = spark.table(name)
-          val posT = if (hasPos) Some(spark.table(posName)) else None
-          val lensT = docLens(spark, sfDir)
-          val applied = Generations.head(spark, dfTablePath(sfDir))
-            .exists(_._2 == foldId)
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          try {
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutor(pool)
-            import scala.concurrent.Future
-            val Seq(p, s, l) = graft.BoundedWait.awaitAll(Seq(
-              "postings presence probe" ->
-                Future(freshFor(presentIn(postT))),
-              "positional presence probe" -> posT.fold(Future.successful(b))(
-                t => Future(freshFor(presentIn(t)))),
-              "doc-lengths presence probe" ->
-                Future(freshFor(presentIn(lensT)))))
-            (p, s, l, applied)
-          } finally pool.shutdown()
-        }
-      if (dedupeIds && dfApplied &&
+      if (!b.isEmpty) {
+        // the fold's identity: an order-independent digest of the batch
+        // ids — count plus TWO independent 64-bit xor-of-xxhash64 lanes
+        // (different salts), so an accidental collision with the ledger
+        // head (which would silently drop a fresh fold's df increments)
+        // needs a simultaneous 128-bit coincidence. Hashing also keeps
+        // the digest TYPE-AGNOSTIC (the pre-r17 bit_xor(doc_id) failed
+        // analysis on string ids); note the retrieval artifacts' own
+        // schema still fixes doc_id to BIGINT — this just keeps the
+        // guard from being the narrowing point. min/max ride along in
+        // the id's native type for the probes' row-group range pruning.
+        val idAgg = b.agg(count(lit(1)),
+          expr("bit_xor(xxhash64(doc_id))"),
+          expr("bit_xor(xxhash64(doc_id, 1017L))"),
+          min("doc_id"), max("doc_id")).head()
+        val foldId = s"fold=${idAgg.getLong(0)}_${idAgg.getLong(1)}" +
+          s"_${idAgg.getLong(2)}"
+        val range = Some((idAgg.get(3), idAgg.get(4)))
+        val (freshPost, freshPos, freshLens, dfApplied) =
+          if (!dedupeIds) (b, b, b, false)
+          else {
+            // Resolve the artifact frames ON THIS THREAD first —
+            // docLens takes the Models lock this method already holds,
+            // so a pool thread calling it would deadlock. The three
+            // presence probes themselves are independent read-only
+            // scans whose cost is the eager localCheckpoint action, so
+            // they fan out to a small pool (guide §2.6 — the fold's
+            // guard phase is action-count bound, not data bound); write
+            // order below is untouched.
+            val lensT = docLens(spark, sfDir)
+            val applied = Generations.head(spark, dfTablePath(sfDir))
+              .exists(_._2 == foldId)
+            def probe(t: DataFrame) = fresh(b, "doc_id", t, "doc_id", range)
+            val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+            try {
+              implicit val ec: scala.concurrent.ExecutionContext =
+                scala.concurrent.ExecutionContext.fromExecutor(pool)
+              import scala.concurrent.Future
+              val Seq(p, s, l) = graft.BoundedWait.awaitAll(Seq(
+                "postings presence probe" -> Future(probe(post)),
+                "positional presence probe" ->
+                  pos.fold(Future.successful(b))(t => Future(probe(t))),
+                "doc-lengths presence probe" -> Future(probe(lensT))))
+              (p, s, l, applied)
+            } finally pool.shutdown()
+          }
+        val replay = dedupeIds && dfApplied &&
           freshPost.isEmpty && freshLens.isEmpty &&
-          (!hasPos || freshPos.isEmpty)) {
-        return // pure replay: every artifact already folded
-      }
-      crashPoint("fold_start")
-      // tokenize ONCE over the raw batch; each artifact consumes its
-      // fresh slice (a partial replay re-tokenizes already-applied
-      // docs it then filters out — rare, and far cheaper than a
-      // per-artifact tokenize)
-      val toks = b
-        .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
-        .localCheckpoint(true)
-      def toksOf(fresh: DataFrame): DataFrame =
-        if (!dedupeIds) toks
-        else toks.join(broadcast(fresh.select("doc_id")),
-          Seq("doc_id"), "left_semi")
-      // every fold write below is PRE-PARTITIONED on its bucket column
-      // (HashPartitioning uses the same Murmur3 pmod as the bucket
-      // id, compactBucketedWith's trick): each fold then appends ONE
-      // file per bucket instead of one per (shuffle partition, bucket)
-      // — ScaleAudit measured the difference at 512 vs 16 files PER
-      // FOLD, i.e. 32× slower file-count growth without it, which at a
-      // year of daily folds is the difference between compacting
-      // monthly and compacting weekly. The extra exchange is
-      // batch-sized, never index-sized.
-      val pToks = toksOf(freshPost)
-      if (!pToks.isEmpty) {
-        pToks.select(col("doc_id"), explode(col("w")).as("tok"))
-          .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))
-          .repartition(IndexBuckets, col("tok"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .bucketBy(IndexBuckets, "tok").sortBy("tok")
-          .format("parquet").saveAsTable(name)
-      }
-      crashPoint("after_postings")
-      // the positional index, when this corpus has built one, folds in
-      // the same batch rows (positions are doc-local offsets, so an
-      // append IS the retokenize) — skipping it would silently serve
-      // phrase queries from a pre-fold snapshot while BM25 sees the
-      // grown corpus
-      if (hasPos) {
-        val posToks = toksOf(freshPos)
-        if (!posToks.isEmpty) {
-          positionalRows(posToks)
-            .repartition(IndexBuckets, col("tok"))
-            .write.mode(org.apache.spark.sql.SaveMode.Append)
-            .bucketBy(IndexBuckets, "tok").sortBy("tok")
-            .format("parquet").saveAsTable(posName)
+          (pos.isEmpty || freshPos.isEmpty)
+        if (!replay) { // a pure replay: every artifact already folded
+          crashPoint("fold_start")
+          // tokenize ONCE over the raw batch; each artifact consumes its
+          // fresh slice (a partial replay re-tokenizes already-applied
+          // docs it then filters out — rare, and far cheaper than a
+          // per-artifact tokenize)
+          val toks = tokenized(b).localCheckpoint(true)
+          def toksOf(slice: DataFrame): DataFrame =
+            if (!dedupeIds) toks
+            else toks.join(broadcast(slice.select("doc_id")),
+              Seq("doc_id"), "left_semi")
+          val pToks = toksOf(freshPost)
+          if (!pToks.isEmpty) {
+            append(spark, postingsPath(sfDir), postingsRows(pToks))
+          }
+          crashPoint("after_postings")
+          // the positional index, when this corpus has built one, folds
+          // in the same batch rows (positions are doc-local offsets, so
+          // an append IS the retokenize) — skipping it would silently
+          // serve phrase queries from a pre-fold snapshot while BM25
+          // sees the grown corpus
+          if (pos.nonEmpty) {
+            val posToks = toksOf(freshPos)
+            if (!posToks.isEmpty) {
+              append(spark, positionalPostingsPath(sfDir),
+                positionalRows(posToks))
+            }
+          }
+          crashPoint("after_positional")
+          // df refresh: old counts + the fold's distinct-token increments
+          // (both sides vocabulary-sized; the merged table rewrites whole
+          // as an atomic next generation — the old head's files survive
+          // the flip, so no checkpoint sever, and a crash mid-rewrite
+          // leaves the previous committed statistic serving). Increments
+          // come from the docs not yet in the LENGTH table (written after
+          // this, so a replayed merge still sees them), and the fold
+          // digest rides in the commit marker as the applied-ledger.
+          if (!dfApplied) {
+            val inc = toksOf(freshLens)
+              .select(explode(array_distinct(col("w"))).as("tok"))
+              .groupBy("tok").agg(count(lit(1)).as("inc"))
+            val merged = dfTable(spark, sfDir)
+              .join(inc, Seq("tok"), "full_outer")
+              .select(col("tok"),
+                (coalesce(col("df"), lit(0L)) +
+                  coalesce(col("inc"), lit(0L))).as("df"))
+            rewrite(spark, dfTablePath(sfDir), merged, foldId)
+          }
+          crashPoint("after_df")
+          val lensToks = toksOf(freshLens)
+          if (!lensToks.isEmpty) {
+            append(spark, docLensPath(sfDir), lensRows(lensToks))
+          }
+          logEvent(spark, root(sfDir), "fold", "postings", t0,
+            freshLens.count())
         }
       }
-      crashPoint("after_positional")
-      // df refresh: old counts + the fold's distinct-token increments
-      // (both sides vocabulary-sized; the merged table rewrites whole
-      // as an atomic next generation — the old head's files survive
-      // the flip, so no checkpoint sever, and a crash mid-rewrite
-      // leaves the previous committed statistic serving). Increments
-      // come from the docs not yet in the LENGTH table (written after
-      // this, so a replayed merge still sees them), and the fold
-      // digest rides in the commit marker as the applied-ledger.
-      if (!dfApplied) {
-        val inc = toksOf(freshLens)
-          .select(explode(array_distinct(col("w"))).as("tok"))
-          .groupBy("tok").agg(count(lit(1)).as("inc"))
-        val merged = dfTable(spark, sfDir)
-          .join(inc, Seq("tok"), "full_outer")
-          .select(col("tok"),
-            (coalesce(col("df"), lit(0L)) + coalesce(col("inc"), lit(0L)))
-              .as("df"))
-        Generations.cutover(spark, dfTablePath(sfDir), foldId) { g =>
-          merged.coalesce(1).write.parquet(g)
-        }
-      }
-      crashPoint("after_df")
-      val lensToks = toksOf(freshLens)
-      if (!lensToks.isEmpty) {
-        lensToks
-          .select(col("doc_id"), size(col("w")).cast("long").as("dl"))
-          .repartition(1) // one file per fold (2-column, batch-sized)
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .parquet(servingDir(spark, docLensPath(sfDir)))
-      }
-      if (MaintenanceLog.enabled(spark, root(sfDir))) {
-        MaintenanceLog.emit(spark, root(sfDir), "fold", "postings",
-          nRows = freshLens.count(),
-          durationMs = System.currentTimeMillis() - t0)
-      }
-      ()
     }
+  }
 
-  /** Rewrite one bucketed artifact table into its minimal file layout.
+  /** Rewrite one artifact family into its minimal file layout; the
+    * family's bucket column comes from the family table.
     *
     * Every daily fold ([[postingsAppend]], [[lshIndexAppend]],
     * [[ivfPqIndexAppend]]) APPENDS bucketed files: after k folds a
@@ -1369,6 +1327,8 @@ object Models {
     * answer: rewrite the table's current rows into one file per
     * bucket, PRESERVING the bucket spec — probe plans (zero
     * index-side exchange) are untouched, only the file layout shrinks.
+    * The per-fold-APPENDED plain family (document lengths) rewrites
+    * into one file, and only once it holds more than one.
     *
     * The rewrite STREAMS the head generation's files into the NEXT
     * generation directory (written as a bucketed table with the rows
@@ -1385,154 +1345,84 @@ object Models {
     * The head's commit-marker content (the IVF-PQ codes family's
     * quantizer pairing) carries forward: compaction is data-invariant,
     * metadata included. Returns (dataFilesBefore, dataFilesAfter). */
-  def compactBucketed(spark: SparkSession, path: String,
-      bucketCol: String): (Long, Long) = synchronized {
-    val src = spark.read.parquet(servingDir(spark, path))
-    compactBucketedWith(spark, path, bucketCol, src)
-  }
+  def compactBucketed(spark: SparkSession, path: String): (Long, Long) =
+    compact(spark, path)
 
-  /** [[compactBucketed]] with caller-supplied rows (the dedup-map
-    * compactor resolves its remap ledger in the same pass). Reads the
-    * head generation's FILES, not the catalog table: a bucketed-table
-    * scan advertises HashPartitioning(bucketCol, IndexBuckets), the
-    * optimizer then drops the repartition below as redundant, and
+  /** [[compactBucketed]], optionally with caller-supplied rows (the
+    * dedup-map compactor resolves its remap ledger in the same pass).
+    * The default reads the head generation's FILES, not the catalog
+    * table: a bucketed-table scan advertises
+    * HashPartitioning(bucketCol, IndexBuckets), the optimizer then
+    * drops the writer's repartition as redundant, and
     * DisableUnnecessaryBucketedScan subsequently disables the bucketed
     * read — plain file splits with mixed buckets per task, so the
     * bucketBy writer would emit one file per (task, bucket) instead of
     * one per bucket. */
-  private def compactBucketedWith(spark: SparkSession, path: String,
-      bucketCol: String, rows: DataFrame): (Long, Long) = synchronized {
-    val name = tableName(path)
-    val stageName = name + "_compacting"
-    val before = Generations.countParquetFiles(spark,
-      servingDir(spark, path))
-    val content = Generations.head(spark, path).map(_._2).getOrElse("")
-    val g = Generations.cutover(spark, path, content) { dir =>
-      // repartition on the bucket column (HashPartitioning uses the
-      // same Murmur3 pmod as the bucket id), so each of the
-      // IndexBuckets tasks writes exactly its own bucket's one file
-      Lake.writeBucketedTable(
-        rows.repartition(IndexBuckets, col(bucketCol)),
-        stageName, dir, bucketCol, IndexBuckets)
-      spark.sql(s"DROP TABLE IF EXISTS $stageName") // catalog only
-      ()
-    }
-    // re-register the serving name at the new head
-    val schemaDdl = spark.read.parquet(g).schema.toDDL
-    serveBucketed(spark, path, schemaDdl, bucketCol)
-    val after = Generations.countParquetFiles(spark, g)
-    val famRoot = new org.apache.hadoop.fs.Path(path).getParent.toString
-    if (MaintenanceLog.enabled(spark, famRoot)) {
-      MaintenanceLog.emit(spark, famRoot, "compact",
-        new org.apache.hadoop.fs.Path(path).getName, nRows = 0L,
-        filesBefore = before, filesAfter = after)
-    }
-    (before, after)
-  }
-
-  /** Compact this corpus's retrieval indexes (tf postings + the
-    * positional index when built) — the maintenance-window companion
-    * to [[postingsAppend]]'s daily folds. Returns per-artifact
-    * (filesBefore, filesAfter). */
-  def compactRetrievalIndexes(spark: SparkSession,
-      sfDir: String): Map[String, (Long, Long)] = {
-    val targets =
-      Seq("postings" -> postingsPath(sfDir)) ++
-        (if (exists(spark, positionalPostingsPath(sfDir)))
-          Seq("postings_pos" -> positionalPostingsPath(sfDir))
-        else Nil)
-    val bucketed = targets.map { case (label, p) =>
-      label -> compactBucketed(spark, p, "tok")
-    }.toMap
-    bucketed + ("doc_lens" -> compactPlainParquet(spark,
-      docLensPath(sfDir)))
-  }
-
-  /** Rewrite a plain (non-bucketed) per-fold-APPENDED parquet artifact
-    * into one file — [[postingsAppend]] appends a file set to the
-    * doc-length table on every fold (the df table rewrites whole per
-    * fold, so it never fragments), and after a year of folds the BM25
-    * normalizer join reads hundreds of tiny files. Same atomic
-    * generation cutover as [[compactBucketed]] — the files being read
-    * survive the flip (keep-2), so no checkpoint sever is needed and a
-    * crash leaves the old head serving. Returns (filesBefore,
-    * filesAfter). */
-  private def compactPlainParquet(spark: SparkSession,
-      path: String): (Long, Long) = synchronized {
-    val src = servingDir(spark, path)
-    val before = Generations.countParquetFiles(spark, src)
-    if (before <= 1) (before, before)
-    else {
-      val g = Generations.cutover(spark, path) { dir =>
-        spark.read.parquet(src).coalesce(1).write.parquet(dir)
-      }
-      val after = Generations.countParquetFiles(spark, g)
-      val famRoot = new org.apache.hadoop.fs.Path(path).getParent.toString
-      if (MaintenanceLog.enabled(spark, famRoot)) {
-        MaintenanceLog.emit(spark, famRoot, "compact",
-          new org.apache.hadoop.fs.Path(path).getName, nRows = 0L,
+  private def compact(spark: SparkSession, path: String,
+      rows: Option[DataFrame] = None): (Long, Long) = synchronized {
+    val fam = family(path)
+    step(spark, fam.name, "compact") {
+      val t0 = System.currentTimeMillis()
+      val src = servingDir(spark, path)
+      val before = Generations.countParquetFiles(spark, src)
+      if (fam.bucketCol.isEmpty && before <= 1) (before, before)
+      else {
+        val content = Generations.head(spark, path).map(_._2).getOrElse("")
+        val g = rewrite(spark, path,
+          rows.getOrElse(spark.read.parquet(src)), content)
+        // re-register the serving name at the new head
+        if (fam.bucketCol.nonEmpty) serve(spark, path)
+        val after = Generations.countParquetFiles(spark, g)
+        val p = new org.apache.hadoop.fs.Path(path)
+        logEvent(spark, p.getParent.toString, "compact", p.getName, t0, 0L,
           filesBefore = before, filesAfter = after)
+        (before, after)
       }
-      (before, after)
     }
   }
 
-  /** Directory-name prefix → bucket column, for every BUCKETED
-    * artifact family this object persists. Longest-prefix order
-    * matters (`postings_pos` before `postings`). Non-bucketed
-    * artifacts that REWRITE whole per fold or never change (df_table,
-    * vocab, centroids, codebooks, merge tables, bigram LM) are not
-    * listed — they stay single-file; doc_lens, which is per-fold
-    * APPENDED, is handled separately ([[compactPlainParquet]] via
-    * [[compactRetrievalIndexes]]/[[compactModelArtifacts]]) — it and
-    * the other unlisted artifacts never
-    * fragment. */
-  private val BucketedArtifactPrefixes: Seq[(String, String)] = Seq(
-    "postings_pos" -> "tok",
-    "postings" -> "tok",
-    "lsh_sets_" -> "id",
-    "lsh_bands_" -> "bk",
-    "ivfpq_codes_" -> "cid",
-    // dedup_map_* routes through compactDedupMap (remap-ledger fold)
-    "bpe_segs_" -> "word")
+  /** Compact this corpus's retrieval indexes (tf postings, the
+    * positional index when built, the document lengths) — the
+    * maintenance-window companion to [[postingsAppend]]'s daily folds:
+    * the [[compactModelArtifacts]] walk restricted to the retrieval
+    * families. Returns per-artifact (filesBefore, filesAfter). */
+  def compactRetrievalIndexes(spark: SparkSession,
+      sfDir: String): Map[String, (Long, Long)] =
+    compactFamilies(spark, sfDir,
+      f => Set("postings", "postings_pos", "doc_lens").contains(f.name))
 
-  /** Compact EVERY bucketed artifact present under this corpus's
-    * model root — the whole-maintenance-window generalization of
+  /** Compact EVERY artifact that fragments under this corpus's model
+    * root — the whole-maintenance-window generalization of
     * [[compactRetrievalIndexes]]: walks the root, maps each directory
-    * to its bucket column by name prefix
-    * ([[BucketedArtifactPrefixes]]), and rewrites each through
-    * [[compactBucketed]]. Covers every append family
-    * ([[postingsAppend]], [[lshIndexAppend]], [[ivfPqIndexAppend]])
-    * AND the one-shot bucketed trains (dedup map, BPE dictionary),
-    * whose initial multi-task write also emits one file per
-    * (task, bucket). Returns per-artifact (filesBefore, filesAfter),
-    * keyed by directory name; skips leftover `__compacting` staging
-    * dirs (each is reclaimed or completed by its own artifact's
-    * compact call). */
+    * to its family, and rewrites each family that compacts
+    * ([[Family.compacts]]). Covers every append family
+    * ([[postingsAppend]], [[lshIndexAppend]], [[ivfPqIndexAppend]],
+    * [[dedupMapAppend]] — the cluster map through [[compactDedupMap]],
+    * which folds its merge-remap ledger into the base rows) AND the
+    * one-shot bucketed trains (dedup map, BPE dictionary). Returns
+    * per-artifact (filesBefore, filesAfter), keyed by directory name;
+    * directories of no family (staging leftovers, the maintenance log)
+    * are skipped. */
   def compactModelArtifacts(spark: SparkSession,
-      sfDir: String): Map[String, (Long, Long)] = {
+      sfDir: String): Map[String, (Long, Long)] =
+    compactFamilies(spark, sfDir, _ => true)
+
+  private def compactFamilies(spark: SparkSession, sfDir: String,
+      include: Family => Boolean): Map[String, (Long, Long)] = {
     val dir = new org.apache.hadoop.fs.Path(root(sfDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).toSeq
       .filter(_.isDirectory)
-      .map(_.getPath)
-      .filterNot(_.getName.endsWith("__compacting"))
-      .flatMap { p =>
-        if (p.getName == "doc_lens") // per-fold-appended plain parquet
-          Some(p.getName -> compactPlainParquet(spark, p.toString))
-        // the cluster map routes through its OWN compactor so the
-        // merge-remap ledger folds into the base rows; the ledger dir
-        // itself (plain two-column parquet, not a bucketed table) is
-        // consumed by that fold, never compacted standalone
-        else if (p.getName.matches("dedup_map_j\\d+"))
-          Some(p.getName -> compactDedupMap(spark, sfDir,
-            p.getName.stripPrefix("dedup_map_j").toInt))
-        else if (p.getName.matches("dedup_map_j\\d+_remap")) None
-        else BucketedArtifactPrefixes
-          .collectFirst { case (pre, bc) if p.getName.startsWith(pre) =>
-            p.getName -> compactBucketed(spark, p.toString, bc)
-          }
+      .map(_.getPath.getName)
+      .flatMap(n => familyOf(n).filter(f => f.compacts && include(f))
+        .map(f => (Families.indexOf(f), n, f)))
+      .sortBy { case (i, n, _) => (i, n) }
+      .map { case (_, n, f) =>
+        n -> (
+          if (f.name == "dedup_map")
+            compactDedupMap(spark, sfDir, n.stripPrefix("dedup_map_j").toInt)
+          else compact(spark, s"${root(sfDir)}/$n"))
       }.toMap
   }
 
@@ -1565,6 +1455,7 @@ object Models {
     * Returns the reclaimed paths. */
   def vacuum(spark: SparkSession, sfDir: String,
       minAgeMs: Long = 3600000L): Seq[String] = synchronized {
+    val t0 = System.currentTimeMillis()
     val rootDir = new org.apache.hadoop.fs.Path(root(sfDir))
     val fs = rootDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootDir)) return Seq.empty
@@ -1659,29 +1550,42 @@ object Models {
       }
     }
     val out = reclaimed.toSeq
-    if (MaintenanceLog.enabled(spark, root(sfDir))) {
-      MaintenanceLog.emit(spark, root(sfDir), "vacuum", "*",
-        nRows = out.size.toLong)
+    // the sweep itself is filesystem-only; the event emit runs jobs
+    step(spark, "*", "vacuum") {
+      logEvent(spark, root(sfDir), "vacuum", "*", t0, out.size.toLong)
     }
     out
   }
 
-  /** Reclaim ONE corpus's retrieval artifacts (postings table +
-    * catalog entry, doc-length and df parquet, the whole per-corpus
-    * model root) — for run-private fold corpora (`tx_bm25_append`
-    * builds base artifacts in a fresh dir per run; without reclamation
-    * every run leaks a corpus under the models root). */
-  def dropRetrievalArtifacts(spark: SparkSession, sfDir: String): Unit =
-    synchronized {
-      spark.sql(
-        s"DROP TABLE IF EXISTS ${tableName(postingsPath(sfDir))}")
-      spark.sql(
-        s"DROP TABLE IF EXISTS ${tableName(positionalPostingsPath(sfDir))}")
-      MaintenanceLog.disable(root(sfDir))
-      val dir = new org.apache.hadoop.fs.Path(root(sfDir))
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(dir)) { fs.delete(dir, true); () }
-    }
+  /** `batch`'s shingle sets ([[Dedup.shingleSets]]), materialized: the
+    * caller's `precomputed` sets of a superset batch cut to its ids
+    * (the rows a replay guard dropped), else shingled here. */
+  private def batchSets(precomputed: Option[DataFrame], batch: DataFrame,
+      idCol: String, textCol: String, w: Int): DataFrame =
+    precomputed
+      .map(_.join(broadcast(batch.select(col(idCol).as("id"))), Seq("id"),
+        "left_semi"))
+      .getOrElse(Dedup.shingleSets(batch, idCol, textCol, w))
+      .localCheckpoint(true)
+
+  /** Reclaim ONE corpus's artifacts: unregister every catalog table
+    * located under its model root, stop its maintenance log, and delete
+    * the root — for run-private fold corpora (the `*_append`, rebuild
+    * and maintenance queries train base artifacts in a fresh dir per
+    * run; without reclamation every run leaks a corpus under the models
+    * root and its tables in the session catalog). Tables of other
+    * corpora stay registered. */
+  def drop(spark: SparkSession, sfDir: String): Unit = synchronized {
+    val dir = new org.apache.hadoop.fs.Path(root(sfDir))
+    val under = dir.toUri.getPath + "/"
+    spark.catalog.listTables().collect()
+      .filter(t => !t.isTemporary && t.name.startsWith("graft_model_"))
+      .filter(t => tableLocation(spark, t.name).exists(_.startsWith(under)))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
+    MaintenanceLog.disable(root(sfDir))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(dir)) { fs.delete(dir, true); () }
+  }
 
   // ---- CCNet-style bigram LM (quality-scoring model) ---------------------
 
@@ -1698,15 +1602,8 @@ object Models {
     * to retrain, which `tx_lm_score_indexed`'s retraining oracle
     * proves per run. */
   def bigramLm(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      val path = bigramLmPath(sfDir)
-      if (!exists(spark, path)) {
-        writePlain(spark, path,
-          TextOps.lmFit(TextOps.lmDocs(
-            graft.Tables.documents(spark, sfDir))))
-      }
-      readPlain(spark, path)
-    }
+    ensure(spark, bigramLmPath(sfDir))(
+      TextOps.lmFit(TextOps.lmDocs(graft.Tables.documents(spark, sfDir))))
 
   // ---- BPE merge table + trained segmentation dictionary -----------------
 
@@ -1728,25 +1625,16 @@ object Models {
   def bpe(spark: SparkSession, sfDir: String,
       rounds: Int = TextOps.BpeRounds): (DataFrame, DataFrame) = {
     val mp = bpeMergesPath(sfDir, rounds)
-    val segsDf = ensureBucketed(spark, bpeSegsPath(sfDir, rounds),
-      "word STRING, c BIGINT, seg STRING", "word") {
-      val (merges, segs) =
-        TextOps.bpeTrain(graft.Tables.documents(spark, sfDir), "text", rounds)
-      synchronized {
-        if (!exists(spark, mp)) writePlain(spark, mp, merges)
-      }
+    def train =
+      TextOps.bpeTrain(graft.Tables.documents(spark, sfDir), "text", rounds)
+    val segsDf = ensure(spark, bpeSegsPath(sfDir, rounds)) {
+      val (merges, segs) = train
+      ensure(spark, mp)(merges)
       segs
     }
-    synchronized {
-      if (!exists(spark, mp)) {
-        // segs already existed but merges were wiped: retrain just the
-        // merge table (same deterministic derivation)
-        val (merges, _) =
-          TextOps.bpeTrain(graft.Tables.documents(spark, sfDir), "text", rounds)
-        writePlain(spark, mp, merges)
-      }
-    }
-    (readPlain(spark, mp), segsDf)
+    // segs already existed but merges were wiped: retrain just the
+    // merge table (same deterministic derivation)
+    (ensure(spark, mp)(train._1), segsDf)
   }
 
   /** Drop only the session-level memo (test hook: forces the next
@@ -1755,14 +1643,8 @@ object Models {
   def clearSessionCache(): Unit = vocabCache.clear()
 
   /** Drop every cached/persisted artifact for a corpus (test hook). */
-  def reset(spark: SparkSession, sfDir: String): Unit = synchronized {
+  def reset(spark: SparkSession, sfDir: String): Unit = {
     vocabCache.clear()
-    MaintenanceLog.disable(root(sfDir))
-    val dir = new org.apache.hadoop.fs.Path(root(sfDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_model_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-    if (fs.exists(dir)) fs.delete(dir, true)
+    drop(spark, sfDir)
   }
 }

@@ -511,9 +511,9 @@ object EventStreams {
       if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
         graft.sources.Generations.retryingConcurrent() {
           graft.sources.Models.compactBucketed(spark,
-            graft.sources.Models.lshBandsPath(sfDir, k, b, w), "bk")
+            graft.sources.Models.lshBandsPath(sfDir, k, b, w))
           graft.sources.Models.compactBucketed(spark,
-            graft.sources.Models.lshSetsPath(sfDir, w), "id")
+            graft.sources.Models.lshSetsPath(sfDir, w))
           if (foldMap) {
             graft.sources.Models.compactDedupMap(spark, sfDir,
               math.round(threshold * 100).toInt)
@@ -605,8 +605,7 @@ object EventStreams {
         graft.sources.Generations.retryingConcurrent() {
           graft.sources.Models.compactBucketed(spark,
             graft.sources.Models.ivfPqCodesPath(sfDir,
-              nList = nList, iters = iters, m = m, ksub = ksub),
-            "cid")
+              nList = nList, iters = iters, m = m, ksub = ksub))
         }
         ()
       }

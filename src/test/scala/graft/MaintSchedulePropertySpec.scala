@@ -197,14 +197,10 @@ class MaintSchedulePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   private def restart(dir: String): Unit = {
     Models.clearSessionCache()
     spark.sql("DROP TABLE IF EXISTS " +
-      tableNameOf(Models.postingsPath(dir)))
+      Models.tableName(Models.postingsPath(dir)))
     spark.sql("DROP TABLE IF EXISTS " +
-      tableNameOf(Models.positionalPostingsPath(dir)))
+      Models.tableName(Models.positionalPostingsPath(dir)))
   }
-  /** Mirror of Models.tableName (private there). */
-  private def tableNameOf(path: String): String =
-    "graft_model_" + path.replaceAll("[^A-Za-z0-9]+", "_").takeRight(80)
-      .dropWhile(_ == '_')
 
   /** Build the base template ONCE (always under the POSIX models
     * base); every schedule starts from a cheap file copy of the

@@ -504,8 +504,8 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m(Models.postings(spark, dirA).select("tok", "doc_id", "tf")) ==
       m(docs.select(col("doc_id"), explode(col("w")).as("tok"))
         .groupBy("tok", "doc_id").agg(count(lit(1)).as("tf"))))
-    Models.dropRetrievalArtifacts(spark, dirA)
-    Models.dropRetrievalArtifacts(spark, dirB)
+    Models.drop(spark, dirA)
+    Models.drop(spark, dirB)
   }
 
   test("positional postings: reload == retokenize, bucketed by tok; " +
@@ -726,7 +726,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reader sees the (identical) new generation
     val preCutoverReader = spark.read.parquet(servedBefore)
       .select("tok", "doc_id", "tf")
-    val (_, after) = Models.compactBucketed(spark, path, "tok")
+    val (_, after) = Models.compactBucketed(spark, path)
     assert(after <= Models.IndexBuckets)
     assert(!fs.exists(orphan), "torn uncommitted rewrite not reclaimed")
     assert(m(preCutoverReader) == rows0,
@@ -748,7 +748,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Models.servingDir(spark, bandsPath)))
     val rowsB = bandRows()
     val (bBefore, bAfter) =
-      Models.compactBucketed(spark, bandsPath, "bk")
+      Models.compactBucketed(spark, bandsPath)
     assert(bAfter <= Models.IndexBuckets && bAfter <= bBefore)
     assert(bandRows() == rowsB)
     val p = Models.lshIndex(spark, dir,
@@ -1077,10 +1077,10 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(_.toString).sorted.toSeq
     val rows0 = m()
     val path = Models.postingsPath(dir)
-    val (_, a1) = Models.compactBucketed(spark, path, "tok")
+    val (_, a1) = Models.compactBucketed(spark, path)
     assert(a1 <= Models.IndexBuckets)
     // idempotence: a second compact keeps the minimal layout and rows
-    val (b2, a2) = Models.compactBucketed(spark, path, "tok")
+    val (b2, a2) = Models.compactBucketed(spark, path)
     assert(b2 == a1 && a2 <= Models.IndexBuckets && m() == rows0)
     // a writer that died MID-STAGE leaves a partial uncommitted
     // generation (no commit marker): the next compact must reclaim it
@@ -1093,7 +1093,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     fs.mkdirs(stage)
     fs.create(new org.apache.hadoop.fs.Path(stage, "part-torn.parquet"),
       true).close() // garbage partial file, no commit marker
-    val (_, a3) = Models.compactBucketed(spark, path, "tok")
+    val (_, a3) = Models.compactBucketed(spark, path)
     assert(a3 <= Models.IndexBuckets && m() == rows0,
       "partial staging generation corrupted the compacted table")
     // the torn rewrite was reclaimed, then the SAME index was reused
@@ -1459,7 +1459,7 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Models.postingsAppend(spark, dir,
         all.filter(h >= "cc").limit(i).select("doc_id", "text"),
         "doc_id", "text", dedupeIds = false)
-      Models.compactBucketed(spark, path, "tok")
+      Models.compactBucketed(spark, path)
     }
     val headGen = Models.servingDir(spark, path)
     assert(headGen != readerGen)
@@ -1684,5 +1684,92 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("postings presence probe"), e.getMessage)
     assert(BoundedWait.awaitAll(Seq("a" -> Future.successful(1),
       "b" -> Future.successful(2))) == Seq(1, 2))
+  }
+
+  /** A run-private corpus: the md5 slice `h < "cc"` of the test
+    * corpus's documents under a fresh dir. */
+  private def sliceCorpus(prefix: String): String = {
+    val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    Tables.documents(spark, sf).filter(h < "cc").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def modelTableLocations(): Map[String, String] =
+    spark.catalog.listTables().collect()
+      .filter(t => !t.isTemporary && t.name.startsWith("graft_model_"))
+      .map(t => t.name -> new org.apache.hadoop.fs.Path(
+        spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(t.name)).location)
+        .toUri.getPath)
+      .toMap
+
+  // drop deletes the whole corpus root, so it must unregister every
+  // catalog table under it — the dedup map's too, not only the LSH
+  // pair — and nothing of any other corpus
+  test("drop unregisters exactly the catalog tables under its root") {
+    val dir = sliceCorpus("graft-drop")
+    Models.dedupMap(spark, dir, 80)
+    Models.lshIndex(spark, dir, Tables.documents(spark, dir),
+      "doc_id", "text")
+    Models.postings(spark, sf) // another corpus's table
+    val under = new org.apache.hadoop.fs.Path(Models.root(dir))
+      .toUri.getPath + "/"
+    val otherTables = modelTableLocations()
+      .filter { case (_, loc) => !loc.startsWith(under) }
+    assert(modelTableLocations().values.count(_.startsWith(under)) == 3)
+    Models.drop(spark, dir)
+    val left = modelTableLocations()
+    assert(!left.values.exists(_.startsWith(under)),
+      s"tables left over the dropped root: $left")
+    assert(otherTables.keySet.subsetOf(left.keySet))
+    assert(!new java.io.File(Models.root(dir)).exists())
+  }
+
+  // every Spark job of a fold and a compaction walk carries the
+  // maintenance step's description, and the caller's is restored
+  test("maintenance jobs are described models:<family>:<phase>") {
+    val dir = sliceCorpus("graft-jobdesc")
+    val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
+    val batch = Tables.documents(spark, sf)
+      .filter(h >= "cc" && h < "ee").select("doc_id", "text")
+    Models.buildRetrievalArtifacts(spark, dir)
+    val sc = spark.sparkContext
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.job.description"))
+            .orNull))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription("caller")
+      Models.postingsAppend(spark, dir, batch, "doc_id", "text",
+        dedupeIds = true)
+      Models.compactModelArtifacts(spark, dir)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      // the bus delivers in order: once a sentinel job's start arrives,
+      // every maintenance job's has
+      sc.setJobDescription("sentinel")
+      spark.range(1).collect()
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!descs.contains("sentinel") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = descs.asScala.toSeq.takeWhile(_ != "sentinel")
+    assert(descs.contains("sentinel"), "listener bus never drained")
+    assert(seen.contains("models:postings:fold") &&
+      seen.contains("models:postings:compact"), seen.distinct.toString)
+    assert(seen.forall(_.startsWith("models:")), seen.distinct.toString)
+    Models.drop(spark, dir)
   }
 }
