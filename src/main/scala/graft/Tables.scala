@@ -29,8 +29,10 @@ object Tables {
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
+    val schema = schemaCache.computeIfAbsent(path, _ =>
+      Materialize.described(spark, s"tables:$name:schema") {
+        spark.read.parquet(path).schema
+      })
     spark.read.schema(schema).parquet(path)
   }
 

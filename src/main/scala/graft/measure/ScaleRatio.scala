@@ -3,7 +3,7 @@ package graft.measure
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Measure, SfSynth, Tables}
+import graft.{Materialize, Measure, SfSynth, Tables}
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Models
 
@@ -212,8 +212,9 @@ object ScaleRatio {
         "embedding").filter(size(col("qv")) === 64).localCheckpoint(true)
       val (cents, cbRows, codes) =
         Models.ivfPqIndex(spark, dir, nList = 16 * k)
-      () => Similarity.ivfPqScoreWith(prep, cents, cbRows, codes, k = 5,
-        queryLimit = 10L, nProbe = 8, m = 8, dim = 64, rerank = 50)
+      () => Materialize("scale:sim_ivfpq_scaled_nlist:score",
+        Similarity.ivfPqScorePlan(prep, cents, cbRows, codes, k = 5,
+          queryLimit = 10L, nProbe = 8, m = 8, dim = 64, rerank = 50))
     }),
     ("tx_bm25_local_terms", (spark, dir, _) => {
       val df = Models.dfTable(spark, dir)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Deduplication kernels for the training-data pipeline: exact
   * (hash-groupBy), n-gram Jaccard (prefix-filtered inverted-index join),
   * MinHash+LSH banding, and SimHash hamming buckets.
@@ -143,7 +145,7 @@ object Dedup {
       .select(col("i"), col("j"))
       .distinct()
 
-    finishWithUnpersist(
+    Materialize("dedup:jaccard_pairs:verify",
       verify(cand, sets).filter(col("jac") >= threshold), sets)
   }
 
@@ -160,31 +162,6 @@ object Dedup {
       .select(col("i"), col("j"),
         (col("inter").cast("double") /
           (col("ni") + col("nj") - col("inter"))).as("jac"))
-  }
-
-  /** Materialize the (small) verified-pair result eagerly, then release
-    * the pinned shingle-set cache — repeated invocations in a
-    * long-lived session must not accumulate cached partitions.
-    * `localCheckpoint` truncates lineage so the result no longer
-    * depends on `cached`. */
-  private def finishWithUnpersist(out: DataFrame, cached: DataFrame*): DataFrame = {
-    val checkpointed = labeled(out.sparkSession, "dedup: verify+materialize") {
-      out.localCheckpoint(true)
-    }
-    cached.foreach(_.unpersist())
-    checkpointed
-  }
-
-  /** Run `body` under a Spark job description (guide §1.5 — the UI/
-    * listener attribution for multi-job operators), restoring the
-    * thread's previous description so the label never leaks into the
-    * caller's later jobs. */
-  private def labeled[A](spark: org.apache.spark.sql.SparkSession,
-      desc: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
   }
 
   // ---- benchmark decontamination -----------------------------------------
@@ -342,15 +319,16 @@ object Dedup {
     // (executor-storage) or reliable (shared-fs), chosen by the caller;
     // each reliable round gets its own subdir so superseded rounds can
     // be reclaimed by path, not by chasing RDD checkpoint files
-    def snap(df: DataFrame): DataFrame =
-      labeled(ids.sparkSession, s"components: round $round") {
-        scoped match {
-          case Some(base) =>
-            sc.setCheckpointDir(s"$base/round_$round")
-            df.checkpoint(eager = true)
-          case None => df.localCheckpoint(true)
+    def snap(df: DataFrame): DataFrame = {
+      val label = s"dedup:components:round_$round"
+      scoped match {
+        case Some(base) => Materialize.described(ids.sparkSession, label) {
+          sc.setCheckpointDir(s"$base/round_$round")
+          df.checkpoint(eager = true)
         }
+        case None => Materialize(label, df)
       }
+    }
     def dropRound(r: Int): Unit = scoped.foreach { base =>
       val p = new org.apache.hadoop.fs.Path(s"$base/round_$r")
       val fsys = p.getFileSystem(sc.hadoopConfiguration)
@@ -418,7 +396,8 @@ object Dedup {
         val updated = snap(jumped
           .select(col("id"), col("nl").as("label"),
             (col("nl") =!= col("old")).as("changed")))
-        converged = labeled(ids.sparkSession, s"components: probe $round") {
+        converged = Materialize.described(ids.sparkSession,
+            s"dedup:components:probe_$round") {
           updated.filter(col("changed")).limit(1).count() == 0
         }
         labels = updated.select("id", "label")
@@ -551,10 +530,10 @@ object Dedup {
   def incrementalDedupIndexed(indexBands: DataFrame, indexSets: DataFrame,
       batch: DataFrame, idCol: String, textCol: String, threshold: Double,
       k: Int = 32, bands: Int = 16, w: Int = 3): DataFrame =
-    dedupSummaryFromPairs(
+    Materialize("dedup:incremental_indexed:summary", dedupSummaryFromPairs(
       crossSplitPairsIndexed(indexBands, indexSets, batch,
         idCol, textCol, threshold, k, bands, w),
-      batch, idCol).localCheckpoint(true)
+      batch, idCol))
 
   /** [[incrementalDedupIndexed]]'s per-doc survivor/duplicate summary
     * derived from ALREADY-PROBED pairs — the shared reduction for
@@ -615,7 +594,8 @@ object Dedup {
       .select(col("i"), col("j"),
         (col("inter").cast("double") /
           (col("ni") + col("nj") - col("inter"))).as("jac"))
-    finishWithUnpersist(withJac.filter(col("jac") >= threshold), bSets)
+    Materialize("dedup:cross_split_indexed:verify",
+      withJac.filter(col("jac") >= threshold), bSets)
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → signature → banded
@@ -628,7 +608,7 @@ object Dedup {
     val sets = shingleSets(docs, idCol, textCol, w).cache()
     val cand = lshCandidates(minhashSignatureSets(sets, k), bands, k / bands,
       hotThreshold, tiles)
-    finishWithUnpersist(
+    Materialize("dedup:minhash:verify",
       verify(cand, sets).filter(col("jac") >= threshold), sets)
   }
 
@@ -678,7 +658,7 @@ object Dedup {
       .groupBy(col("j").as("id"))
       .agg(count(lit(1)).as("n_dups"), min("i").as("canon_id"),
         max("jac").as("best_jac"))
-    finishWithUnpersist(
+    Materialize("dedup:incremental:verify",
       newIds.join(matched, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("n_dups"), lit(0L)).as("n_dups"),
@@ -896,7 +876,8 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       tNum: Int = 9, tDen: Int = 10, saltFactor: Int = 8): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol).localCheckpoint(true)
+    val sets = Materialize("dedup:containment_pairs:shingles",
+      shingleSets(docs, idCol, textCol))
     val probes = sets.select(col("id").as("i"), explode(expr(
       s"slice(hs, 1, cast(n - ((n * $tNum + ${tDen - 1}) div $tDen) + 1 as int))"))
       .as("sh"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Column profiling for the training-data pipeline: EXACT distributed
   * quantiles over discrete-domain columns via the two-phase
   * value-histogram shape.
@@ -33,7 +35,8 @@ object Profile {
   /** `(g, v) → c` count histogram of the pre-projected two-column
     * frame, eagerly materialized — the ONE corpus pass. */
   private def histogram(gv: DataFrame): DataFrame =
-    gv.groupBy("g", "v").agg(count(lit(1)).as("c")).localCheckpoint(true)
+    Materialize("profile:histogram:count",
+      gv.groupBy("g", "v").agg(count(lit(1)).as("c")))
 
   /** Phase 2 over an existing `(g, v, c)` histogram: one row per
     * group `(g, n, vmin, vmax, p<num>...)`, exact type-1 quantiles

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Exact distributed global ranking over a DISCRETE-domain sort key —
   * the two-phase replacement for `rank()/ntile(n)` over an
   * unpartitioned `Window.orderBy(v, id)`, which streams the whole
@@ -101,9 +103,9 @@ object Rank {
     val keyed = df.withColumn("_rk_g", expr(s"$idCol div $grpWidth"))
     // level 1: value histogram + exclusive prefix (histogram-sized
     // unpartitioned window, bounded by the value domain) → broadcast
-    val hist = keyed.groupBy(col(vCol).as("_rk_v"))
-      .agg(count(lit(1)).as("_rk_c"))
-      .localCheckpoint(true) // histogram-sized; feeds bases AND totals
+    // histogram-sized; feeds bases AND totals
+    val hist = Materialize("rank:ntile_exact:histogram",
+      keyed.groupBy(col(vCol).as("_rk_v")).agg(count(lit(1)).as("_rk_c")))
     val baseV = hist
       .withColumn("_rk_basev",
         coalesce(sum("_rk_c").over(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.GraftFunctions
 
 /** Similarity search over an embedding column (`array<float>`):
@@ -58,10 +59,43 @@ object Similarity {
       .filter(col("nid") =!= col("qid"))
       .select(col("qid"), col("nid"),
         cosine(idot(col("qqv"), col("nqv")), col("qn2"), col("nn2")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, "rank", col("cos").desc)
   }
+
+  /** The top `n` rows per query `qid` by `order`, ties to the smaller
+    * `nid`, numbered from 1 in `rankCol` — the one ranking step of
+    * every ANN path (shortlists, ground truth, final top-k). */
+  def topPerQuery(scored: DataFrame, n: Int, rankCol: String,
+      order: Column*): DataFrame =
+    scored.withColumn(rankCol, row_number().over(
+        Window.partitionBy("qid").orderBy(order :+ col("nid"): _*)))
+      .filter(col(rankCol) <= n)
+
+  /** `(a, b)` id pairs joined with both sides' quantized vectors and
+    * squared norms from `prep`, named `<ap>qv`/`<ap>n2` and
+    * `<bp>qv`/`<bp>n2` — the shared prelude of every exact rescore. */
+  private def withVectors(pairs: DataFrame, prep: DataFrame, a: String,
+      ap: String, b: String, bp: String): DataFrame =
+    pairs
+      .join(prep.select(col("id").as(a), col("qv").as(s"${ap}qv"),
+        col("n2").as(s"${ap}n2")), a)
+      .join(prep.select(col("id").as(b), col("qv").as(s"${bp}qv"),
+        col("n2").as(s"${bp}n2")), b)
+
+  /** Exact cosine of every `(a, b)` pair: `(a, b, cos)`. */
+  private def cosineRescore(pairs: DataFrame, prep: DataFrame, a: String,
+      ap: String, b: String, bp: String): DataFrame =
+    withVectors(pairs, prep, a, ap, b, bp)
+      .select(col(a), col(b), cosine(idot(col(s"${ap}qv"), col(s"${bp}qv")),
+        col(s"${ap}n2"), col(s"${bp}n2")).as("cos"))
+
+  /** Exact integer squared L2 of every `(qid, nid)` pair:
+    * `(qid, nid, d2)` — the rerank of every shortlist. */
+  private def l2Rescore(pairs: DataFrame, prep: DataFrame): DataFrame =
+    withVectors(pairs, prep, "qid", "q", "nid", "n")
+      .select(col("qid"), col("nid"),
+        (col("qn2") + col("nn2") -
+          lit(2L) * idot(col("qqv"), col("nqv"))).as("d2"))
 
   /** All pairs with cosine >= threshold — exact, for the near-dup gate.
     *
@@ -181,7 +215,7 @@ object Similarity {
     var cents = prep.filter(col("id") < nList)
       .select(col("id").as("cid"), col("qv").as("cv"), col("n2").as("cn2"))
     for (_ <- 1 to iters)
-      cents = lloydStep(prep, cents).localCheckpoint(true)
+      cents = Materialize("similarity:ivf:lloyd_step", lloydStep(prep, cents))
     cents
   }
 
@@ -196,16 +230,16 @@ object Similarity {
     // cached: cents/assign/probe/rescoring all branch from it — without
     // the cache each branch re-scans and re-quantizes the corpus
     val prep = prepared(embs, idCol, vecCol).cache()
-    ivfTopKWith(prep, refinedCentroids(prep, nList, refineIters),
-      k, queryLimit, nProbe)
+    Materialize("similarity:ivf_topk:rank",
+      ivfTopKPlan(prep, refinedCentroids(prep, nList, refineIters),
+        k, queryLimit, nProbe), prep)
   }
 
-  /** The IVF probe/rescore core against an EXISTING centroid table —
-    * the steady-state form where the quantizer is a persisted trained
-    * artifact ([[graft.sources.Models.ivfCentroids]]) rather than
-    * re-derived per query. `prep` must be cached by the caller; it is
-    * unpersisted here after the eager checkpoint. */
-  def ivfTopKWith(prep: DataFrame, cents: DataFrame, k: Int,
+  /** The un-materialized IVF probe/rescore plan against an EXISTING
+    * centroid table — the steady-state form where the quantizer is a
+    * persisted trained artifact ([[graft.sources.Models.ivfCentroids]])
+    * rather than re-derived per query. */
+  def ivfTopKPlan(prep: DataFrame, cents: DataFrame, k: Int,
       queryLimit: Long, nProbe: Int): DataFrame = {
     // Assignment is an in-row argmin; probe lists sort the distance
     // array ONLY for the (tiny) query-row slice — the former shared
@@ -220,19 +254,8 @@ object Similarity {
     val cand = probe.join(assign, "cid")
       .filter(col("qid") =!= col("nid"))
       .select("qid", "nid")
-    val scored = cand
-      .join(prep.select(col("id").as("qid"), col("qv").as("qqv"),
-        col("n2").as("qn2")), "qid")
-      .join(prep.select(col("id").as("nid"), col("qv").as("nqv"),
-        col("n2").as("nn2")), "nid")
-      .select(col("qid"), col("nid"),
-        cosine(idot(col("qqv"), col("nqv")), col("qn2"), col("nn2")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    val out = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    topPerQuery(cosineRescore(cand, prep, "qid", "q", "nid", "n"), k,
+      "rank", col("cos").desc)
   }
 
   /** SemDedup-style semantic deduplication (Abbas et al. 2023,
@@ -260,14 +283,15 @@ object Similarity {
       hotThreshold: Long = 100000L, tiles: Int = 8): DataFrame = {
     // cached: feeds centroid refinement, assignment, and the pair join
     val prep = prepared(embs, idCol, vecCol).cache()
-    semDedupWith(prep, refinedCentroids(prep, nList, refineIters),
+    try semDedupWith(prep, refinedCentroids(prep, nList, refineIters),
       threshold, hotThreshold, tiles)
+    finally prep.unpersist()
   }
 
   /** The SemDedup cell/drop core against an EXISTING centroid table —
     * the steady-state form with a persisted quantizer
-    * ([[graft.sources.Models.ivfCentroids]]). `prep` must be cached by
-    * the caller; it is unpersisted here after the eager checkpoint. */
+    * ([[graft.sources.Models.ivfCentroids]]). Materialized; the cell
+    * assignment it caches is released before returning. */
   def semDedupWith(prep: DataFrame, cents: DataFrame, threshold: Double,
       hotThreshold: Long = 100000L, tiles: Int = 8): DataFrame = {
     // the cell id is a per-row argmin over the broadcast centroid
@@ -280,14 +304,10 @@ object Similarity {
       .filter(cosine(idot(col("i_qv"), col("j_qv")),
         col("i_n2"), col("j_n2")) >= threshold)
       .select(col("j").as("id")).distinct()
-    val out = withCell
+    Materialize("similarity:sem_dedup:drop", withCell
       .join(dropped.withColumn("_dropped", lit(true)), Seq("id"), "left")
       .select(col("id").as("vec_id"), col("cid"),
-        col("_dropped").isNull.as("kept"))
-      .localCheckpoint(true)
-    withCell.unpersist()
-    prep.unpersist()
-    out
+        col("_dropped").isNull.as("kept")), withCell)
   }
 
   // ---- Product quantization (PQ/ADC — the memory-compression path) ------
@@ -319,10 +339,8 @@ object Similarity {
     // cached: feeds codebook, corpus encoding, and the query LUTs
     val prep = prepared(embs, idCol, vecCol)
       .filter(size(col("qv")) === dim).cache()
-    val out = pqTopKPlan(prep, k, queryLimit, m, ksub, dim)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    Materialize("similarity:pq_topk:rank",
+      pqTopKPlan(prep, k, queryLimit, m, ksub, dim), prep)
   }
 
   /** The un-materialized [[pqTopK]] plan over a prepared corpus —
@@ -359,9 +377,7 @@ object Similarity {
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"),
         GraftFunctions.adcSum(col("codes"), col("luts")).as("ad2"))
-    val w = Window.partitionBy("qid").orderBy(col("ad2"), col("nid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topPerQuery(scored, k, "rank", col("ad2"))
   }
 
   // ---- IVF-PQ (coarse cells + residual product quantization) ------------
@@ -416,24 +432,13 @@ object Similarity {
         graft.functions.GraftFunctions
           .pqCodes(col("rv"), col("_cb"), m).as("codes"))
 
-  /** The probe/score core against an EXISTING index (centroids +
-    * codebook rows + codes) — the steady-state form where all three are
-    * persisted trained artifacts ([[graft.sources.Models.ivfPqIndex]]).
-    * `prep` must be cached by the caller; unpersisted here after the
-    * eager checkpoint. */
-  def ivfPqScoreWith(prep: DataFrame, cents: DataFrame, cbRows: DataFrame,
-      codes: DataFrame, k: Int, queryLimit: Long, nProbe: Int, m: Int,
-      dim: Int, rerank: Int = 0): DataFrame = {
-    val out = ivfPqScorePlan(prep, cents, cbRows, codes, k, queryLimit,
-      nProbe, m, dim, rerank).localCheckpoint(true)
-    prep.unpersist()
-    out
-  }
-
-  /** The un-materialized probe/LUT/ADC/top-k plan of [[ivfPqScoreWith]]
-    * — separated so multi-configuration consumers ([[ivfPqSweep]]) can
-    * share one cached `prep`/index across configs without the public
-    * entry's eager checkpoint + unpersist per call.
+  /** The un-materialized probe/LUT/ADC/top-k plan against an EXISTING
+    * index (centroids + codebook rows + codes) — the steady-state form
+    * where all three are persisted trained artifacts
+    * ([[graft.sources.Models.ivfPqIndex]]). Callers materialize it
+    * ([[graft.Materialize]]) and release their own `prep` cache;
+    * multi-configuration consumers ([[ivfPqSweep]]) share one cached
+    * `prep`/index across configs.
     *
     * `rerank = 0` returns the pure-ADC ranking `(qid, nid, ad2, rank)`.
     * `rerank = R > 0` adds the FAISS-`refine` stage production IVF-PQ
@@ -488,28 +493,13 @@ object Similarity {
     * `(qid, nid, ad2)` scored table — pure-ADC top-k at `rerank = 0`,
     * the FAISS-`refine` shortlist + exact-L2 re-rank otherwise. */
   private[graft] def ivfPqRankFromScored(scored: DataFrame,
-      prep: DataFrame, k: Int, rerank: Int): DataFrame = {
-    val w = Window.partitionBy("qid").orderBy(col("ad2"), col("nid"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      prep: DataFrame, k: Int, rerank: Int): DataFrame =
+    if (rerank <= 0) topPerQuery(scored, k, "rank", col("ad2"))
     else {
-      val short = scored.withColumn("_srk", row_number().over(w))
-        .filter(col("_srk") <= rerank)
+      val short = topPerQuery(scored, rerank, "_srk", col("ad2"))
         .select("qid", "nid")
-      val exact = short
-        .join(prep.select(col("id").as("qid"), col("qv").as("qqv"),
-          col("n2").as("qn2")), "qid")
-        .join(prep.select(col("id").as("nid"), col("qv").as("nqv"),
-          col("n2").as("nn2")), "nid")
-        .select(col("qid"), col("nid"),
-          (col("qn2") + col("nn2") -
-            lit(2L) * idot(col("qqv"), col("nqv"))).as("d2"))
-      val w2 = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
-      exact.withColumn("rank", row_number().over(w2))
-        .filter(col("rank") <= k)
+      topPerQuery(l2Rescore(short, prep), k, "rank", col("d2"))
     }
-  }
 
   /** Exact-L2 top-`k` ground truth for the first `queryLimit` vectors —
     * the audit side of every recall measurement: brute-force integer
@@ -522,9 +512,7 @@ object Similarity {
       .select(col("qid"), col("id").as("nid"),
         (col("qn2") + col("n2") -
           lit(2L) * idot(col("qqv"), col("qv"))).as("d2"))
-    val w = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
-    gt.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k).select("qid", "nid")
+    topPerQuery(gt, k, "rk", col("d2")).select("qid", "nid")
   }
 
   /** IVF-PQ operating-point sweep: recall@`k` vs exact-L2 ground truth
@@ -549,16 +537,19 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val prep = prepared(embs, idCol, vecCol)
       .filter(size(col("qv")) === dim).cache()
-    val cents = refinedCentroids(prep, nList, iters).localCheckpoint(true)
-    val res = ivfPqResiduals(prep, cents).localCheckpoint(true)
-    val gt = exactL2TopK(prep, k, queryLimit).localCheckpoint(true)
+    val cents = Materialize("similarity:ivfpq_sweep:centroids",
+      refinedCentroids(prep, nList, iters))
+    val res = Materialize("similarity:ivfpq_sweep:residuals",
+      ivfPqResiduals(prep, cents))
+    val gt = Materialize("similarity:ivfpq_sweep:ground_truth",
+      exactL2TopK(prep, k, queryLimit))
     val denom = (queryLimit * k).toDouble
     val arms = for {
       ksub <- ksubs
-      codes = ivfPqCodes(res,
+      codes = Materialize("similarity:ivfpq_sweep:codes", ivfPqCodes(res,
         res.filter(col("id") < ksub)
           .select(col("id").as("cid"), col("rv").as("cv")),
-        m, ksub, dim).localCheckpoint(true)
+        m, ksub, dim))
       nProbe <- nProbes
       rerank <- reranks
     } yield {
@@ -572,9 +563,8 @@ object Similarity {
           lit(rerank).as("rerank"), col("n_hits"),
           (col("n_hits").cast("double") / lit(denom)).as(s"recall_at_$k"))
     }
-    val out = arms.reduce(_.unionAll(_)).localCheckpoint(true)
-    prep.unpersist()
-    out
+    Materialize("similarity:ivfpq_sweep:recall",
+      arms.reduce(_.unionAll(_)), prep)
   }
 
   def ivfPqTopK(embs: DataFrame, idCol: String, vecCol: String, k: Int,
@@ -584,14 +574,16 @@ object Similarity {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val prep = prepared(embs, idCol, vecCol)
       .filter(size(col("qv")) === dim).cache()
-    val cents = refinedCentroids(prep, nList, iters).localCheckpoint(true)
-    val res = ivfPqResiduals(prep, cents)
-      .localCheckpoint(true) // feeds codebook AND corpus encoding
+    val cents = Materialize("similarity:ivfpq_topk:centroids",
+      refinedCentroids(prep, nList, iters))
+    // feeds codebook AND corpus encoding
+    val res = Materialize("similarity:ivfpq_topk:residuals",
+      ivfPqResiduals(prep, cents))
     val cbRows = res.filter(col("id") < ksub)
       .select(col("id").as("cid"), col("rv").as("cv"))
     val codes = ivfPqCodes(res, cbRows, m, ksub, dim)
-    ivfPqScoreWith(prep, cents, cbRows, codes, k, queryLimit, nProbe, m,
-      dim, rerank)
+    Materialize("similarity:ivfpq_topk:score", ivfPqScorePlan(prep, cents,
+      cbRows, codes, k, queryLimit, nProbe, m, dim, rerank), prep)
   }
 
   /** Post-append drift audit over an IVF-PQ index: per-cell member
@@ -705,17 +697,10 @@ object Similarity {
     // cached: prep feeds candidate generation plus both rescore joins —
     // without the cache each consumer re-scans and re-signs the corpus
     val prep = srpPrepared(embs, idCol, vecCol, nBits, dim).cache()
-    val out = srpCandidates(prep.select("id", "sig"), bands, nBits / bands)
-      .join(prep.select(col("id").as("i"), col("qv").as("aqv"),
-        col("n2").as("an2")), "i")
-      .join(prep.select(col("id").as("j"), col("qv").as("bqv"),
-        col("n2").as("bn2")), "j")
-      .select(col("i"), col("j"),
-        cosine(idot(col("aqv"), col("bqv")), col("an2"), col("bn2")).as("cos"))
-      .filter(col("cos") >= threshold)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    Materialize("similarity:near_dup_blocked:rescore", cosineRescore(
+        srpCandidates(prep.select("id", "sig"), bands, nBits / bands),
+        prep, "i", "a", "j", "b")
+      .filter(col("cos") >= threshold), prep)
   }
 
   def annLsh(embs: DataFrame, idCol: String, vecCol: String, k: Int,
@@ -727,17 +712,10 @@ object Similarity {
       hotThreshold, tiles)
     // score both orientations so every id gets neighbors
     val sym = cand.unionAll(cand.select(col("j").as("i"), col("i").as("j")))
-    val scored = sym
-      .join(prep.select(col("id").as("i"), col("qv").as("aqv"), col("n2").as("an2")), "i")
-      .join(prep.select(col("id").as("j"), col("qv").as("bqv"), col("n2").as("bn2")), "j")
-      .select(col("i").as("qid"), col("j").as("nid"),
-        cosine(idot(col("aqv"), col("bqv")), col("an2"), col("bn2")).as("cos"))
-    val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
-    val out = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    val scored = cosineRescore(sym, prep, "i", "a", "j", "b")
+      .select(col("i").as("qid"), col("j").as("nid"), col("cos"))
+    Materialize("similarity:ann_lsh:rank",
+      topPerQuery(scored, k, "rank", col("cos").desc), prep)
   }
 
   // ---- Random-projection retrieval (Johnson-Lindenstrauss) ---------------
@@ -797,23 +775,10 @@ object Similarity {
       .select(col("qid"), col("id").as("nid"),
         (col("qrn2") + col("rn2") -
           lit(2L) * idot(col("qrp"), col("rp"))).as("rd2"))
-    val w = Window.partitionBy("qid").orderBy(col("rd2"), col("nid"))
-    val short = scored.withColumn("_srk", row_number().over(w))
-      .filter(col("_srk") <= rerank).select("qid", "nid")
-    val exact = short
-      .join(prep.select(col("id").as("qid"), col("qv").as("qqv"),
-        col("n2").as("qn2")), "qid")
-      .join(prep.select(col("id").as("nid"), col("qv").as("nqv"),
-        col("n2").as("nn2")), "nid")
-      .select(col("qid"), col("nid"),
-        (col("qn2") + col("nn2") -
-          lit(2L) * idot(col("qqv"), col("nqv"))).as("d2"))
-    val w2 = Window.partitionBy("qid").orderBy(col("d2"), col("nid"))
-    val out = exact.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    val short = topPerQuery(scored, rerank, "_srk", col("rd2"))
+      .select("qid", "nid")
+    Materialize("similarity:rp_topk:rerank",
+      topPerQuery(l2Rescore(short, prep), k, "rank", col("d2")), prep)
   }
 
   // ---- MMR diversification (retrieve-then-rerank) ------------------------
@@ -843,19 +808,15 @@ object Similarity {
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id").as("nid"), col("qv"),
         idot(col("qqv"), col("qv")).as("qdot"))
-    val w = Window.partitionBy("qid").orderBy(col("qdot").desc, col("nid"))
-    val pool = scored.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= poolN)
+    val pool = topPerQuery(scored, poolN, "_rn", col("qdot").desc)
       .groupBy("qid")
       .agg(collect_list(struct(col("nid"), col("qdot"), col("qv")))
         .as("cands"))
-    val out = pool
+    Materialize("similarity:mmr_topk:select", pool
       .select(col("qid"), explode(
         GraftFunctions.mmrSelect(col("cands"), k)).as("m"))
-      .select(col("qid"), col("m.nid").as("nid"), col("m.rank").as("rank"))
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+      .select(col("qid"), col("m.nid").as("nid"), col("m.rank").as("rank")),
+      prep)
   }
 
   // ---- Scalar quantization (SQ8 — the byte-per-dimension path) ----------
@@ -915,11 +876,7 @@ object Similarity {
       .select(col("qid"), col("nid"),
         (col("qn2s") + col("recn2") -
           lit(2L * 255L) * idot(col("qqv"), col("rec"))).as("ad2"))
-    val w = Window.partitionBy("qid").orderBy(col("ad2"), col("nid"))
-    val out = scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .localCheckpoint(true)
-    prep.unpersist()
-    out
+    Materialize("similarity:sq_topk:rank",
+      topPerQuery(scored, k, "rank", col("ad2")), prep)
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Skew mitigation for hot join keys.
   *
   * At 100 TB a handful of keys (one giant bucket in the object table, a
@@ -16,16 +18,6 @@ import org.apache.spark.sql.functions._
   * size, and the plan stays a plain equi-join.
   */
 object Skew {
-
-  /** Run `body` under a Spark job description (guide §1.5), restoring
-    * the thread's previous description afterwards. */
-  private def labeled[A](spark: org.apache.spark.sql.SparkSession,
-      desc: String)(body: => A): A = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setJobDescription(prev)
-  }
 
   /** Equi-join `big ⋈ small` on `key` with the big side salted
     * `factor` ways. `small` is replicated `factor`× (explode over the
@@ -73,7 +65,7 @@ object Skew {
     * self-join would produce, with the same hot-bucket tiling.
     *
     * Cold-path cost control: the band table is materialized once
-    * (`localCheckpoint(true)` — it feeds every plan branch; left lazy,
+    * (an eager `localCheckpoint` — it feeds every plan branch; left lazy,
     * each branch recomputes the upstream scan). Its post-checkpoint
     * count is then a cheap cached-block scan, and when the WHOLE table
     * holds ≤ `hotThreshold` rows no bucket can be hot, so the hot-count
@@ -116,17 +108,18 @@ object Skew {
     val pruned = blocked
       .select(userCols.map(col): _*)
       .filter(col(idCol).isNotNull)
-    val bands = labeled(blocked.sparkSession, "skew: band materialize") {
-      checkpointDir match {
-        case Some(dir) =>
+    val bandsLabel = "skew:self_join:bands"
+    val bands = checkpointDir match {
+      case Some(dir) =>
+        Materialize.described(blocked.sparkSession, bandsLabel) {
           val sc = blocked.sparkSession.sparkContext
           val prev = sc.getCheckpointDir
           sc.setCheckpointDir(
             s"$dir/skew_${java.util.UUID.randomUUID.toString.take(8)}")
           try pruned.checkpoint(eager = true)
           finally sc.setCheckpointDir(prev.orNull)
-        case None => pruned.localCheckpoint(true)
-      }
+        }
+      case None => Materialize(bandsLabel, pruned)
     }
 
     def sided(df: DataFrame, side: String): DataFrame =
@@ -242,19 +235,17 @@ object Skew {
       // forced tiling: every bucket is hot by definition — no count
       // scan, no marking join
       tiledPairs(bands, allHot = true)
-    } else if (labeled(blocked.sparkSession, "skew: band count") {
-        bands.count() } <= hotThreshold) {
+    } else if (Materialize.described(blocked.sparkSession,
+        "skew:self_join:band_count")(bands.count()) <= hotThreshold) {
       // the whole band table fits under the threshold, so no single
       // bucket can exceed it: pure direct join, no hot-count job (and
       // the planner is free to broadcast a small side)
       directPairs(bands)
     } else {
-      val hot = labeled(blocked.sparkSession, "skew: hot-bucket count") {
+      val hot = Materialize("skew:self_join:hot_buckets",
         bands.groupBy(keys: _*).agg(count(lit(1)).as("_bn"))
           .filter(col("_bn") > hotThreshold)
-          .select(keys: _*).withColumn("_hot", lit(true))
-          .localCheckpoint(true)
-      }
+          .select(keys: _*).withColumn("_hot", lit(true)))
       // No hot bucket at all (the common case whenever the data is not
       // pathologically skewed, at ANY scale): the tiled join would run
       // every row through its cold path (one replica per side) but

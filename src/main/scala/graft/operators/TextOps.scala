@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Text-analysis kernels for the training-data pipeline surface: token
   * counting, language identification, quality scoring, fingerprinting.
   *
@@ -426,17 +428,14 @@ object TextOps {
     * exactly once, in [[bpeWordDict]]. */
   def bpeTrain(docs: DataFrame, textCol: String, rounds: Int = BpeRounds)
       : (DataFrame, DataFrame) = {
-    var segs = bpeWordDict(docs, textCol)
-      .withColumn("seg", bpeSeg0(col("word")))
-      .localCheckpoint(true)
+    var segs = Materialize("text:bpe_train:word_dict",
+      bpeWordDict(docs, textCol).withColumn("seg", bpeSeg0(col("word"))))
     val merges = Seq.newBuilder[DataFrame]
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
-      val best = bpePairCounts(segs)
-        .orderBy(col("pc").desc, col("pr"))
-        .limit(1)
-        .localCheckpoint(true)
+      val best = Materialize(s"text:bpe_train:best_pair_$r",
+        bpePairCounts(segs).orderBy(col("pc").desc, col("pr")).limit(1))
       if (best.isEmpty) {
         // no adjacent pairs remain (every word fully merged): stop —
         // an empty `best` cross-joined in would silently EMPTY the
@@ -445,11 +444,10 @@ object TextOps {
         // both sides emit merges only for the rounds that happened.
         exhausted = true
       } else {
-        segs = segs
+        segs = Materialize(s"text:bpe_train:merge_$r", segs
           .crossJoin(broadcast(best.select(col("pr").as("_pr"))))
           .withColumn("seg", bpeApply(col("seg"), col("_pr")))
-          .drop("_pr")
-          .localCheckpoint(true)
+          .drop("_pr"))
         merges += best.select(lit(r).as("round"), col("pr").as("pair"),
           col("pc").as("pair_count"))
         r += 1

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.operators.{Dedup, TextOps}
 
 /** Corpus-preparation operators for the training-data pipeline: the
@@ -373,9 +373,9 @@ object CorpusQueries {
           .withColumn("fp", TextOps.mdFingerprint(col("text")))
           .withColumn("_rn", row_number().over(fpW))
           .filter(col("_rn") === 1)
-        val toks = kept.select(col("doc_id"), col("source"),
-          TextOps.wsTokenCount(col("text")).cast("long").as("tokens"))
-          .localCheckpoint(true)
+        val toks = Materialize("corpus:ds_prep_pipeline:tokens",
+          kept.select(col("doc_id"), col("source"),
+            TextOps.wsTokenCount(col("text")).cast("long").as("tokens")))
         withTokenOffsets(toks, expr("doc_id div 64"))
           .withColumn("h",
             md5(encode(col("doc_id").cast("string"), "UTF-8")))
@@ -441,25 +441,26 @@ object CorpusQueries {
         graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val gated = docs.filter(TextOps.ingestGate(col("text")))
-        val surv = gated.join(
-          // resolved read: a stale-label row whose cluster merged away
-          // must NOT pass the id == label survivor gate
-          graft.sources.Models.dedupMapResolved(s, d)
-            .filter(col("id") === col("label"))
-            .select(col("id").as("doc_id")),
-          Seq("doc_id"), "left_semi")
-          .localCheckpoint(true) // feeds LM scoring AND token counts
-        val scored = TextQueries
-          .lmScoreWith(TextOps.lmDocs(surv),
-            graft.sources.Models.bigramLm(s, d))
-          .filter(col("decile") <= 7)
-          .select("doc_id", "nll_bits", "bucket")
-          .localCheckpoint(true) // feeds the keep join AND final cols
-        val toks = surv.join(scored.select("doc_id"), Seq("doc_id"),
-            "left_semi")
-          .select(col("doc_id"), col("source"),
-            TextOps.wsTokenCount(col("text")).cast("long").as("tokens"))
-          .localCheckpoint(true)
+        // feeds LM scoring AND token counts
+        val surv = Materialize("corpus:ds_daily_pipeline:survivors",
+          gated.join(
+            // resolved read: a stale-label row whose cluster merged
+            // away must NOT pass the id == label survivor gate
+            graft.sources.Models.dedupMapResolved(s, d)
+              .filter(col("id") === col("label"))
+              .select(col("id").as("doc_id")),
+            Seq("doc_id"), "left_semi"))
+        // feeds the keep join AND final cols
+        val scored = Materialize("corpus:ds_daily_pipeline:lm_keep",
+          TextQueries
+            .lmScoreWith(TextOps.lmDocs(surv),
+              graft.sources.Models.bigramLm(s, d))
+            .filter(col("decile") <= 7)
+            .select("doc_id", "nll_bits", "bucket"))
+        val toks = Materialize("corpus:ds_daily_pipeline:tokens",
+          surv.join(scored.select("doc_id"), Seq("doc_id"), "left_semi")
+            .select(col("doc_id"), col("source"),
+              TextOps.wsTokenCount(col("text")).cast("long").as("tokens")))
         withTokenOffsets(toks, expr("doc_id div 64"))
           .join(scored, "doc_id")
           .withColumn("h",

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.operators.Dedup
 
 /** Deduplication pipeline demos over `documents`. The approximate paths
@@ -603,13 +603,12 @@ object DedupQueries {
         val (bands, sets) = graft.sources.Models.lshIndex(s, tmp,
           sys.error("index exists — training must not run"),
           "doc_id", "text")
-        val out = Dedup.incrementalDedupIndexed(
-            bands, sets, docs.filter(h >= "cc"), "doc_id", "text", 0.8)
-          .withColumnRenamed("id", "doc_id")
-          .orderBy("doc_id").localCheckpoint(true)
         // result materialized: reclaim the run-private fold artifacts
-        graft.sources.Models.drop(s, tmp)
-        out
+        Materialize.releasing("dedup:dd_incremental_append:summary",
+          Dedup.incrementalDedupIndexed(
+              bands, sets, docs.filter(h >= "cc"), "doc_id", "text", 0.8)
+            .withColumnRenamed("id", "doc_id")
+            .orderBy("doc_id"))(graft.sources.Models.drop(s, tmp))
       },
       Some(incrementalOracle),
       doc = "incremental dedup served from a FOLDED LSH index (base " +
@@ -652,11 +651,10 @@ object DedupQueries {
         graft.sources.Models.dedupMapAppend(s, tmp,
           docs.filter(h >= "55" && h < "80").select("doc_id", "text"),
           "doc_id", "text", 80)
-        val out = graft.sources.Models.dedupMapResolved(s, tmp, 80)
-          .withColumnRenamed("id", "doc_id")
-          .orderBy("doc_id").localCheckpoint(true)
-        graft.sources.Models.drop(s, tmp)
-        out
+        Materialize.releasing("dedup:dd_map_append:resolve",
+          graft.sources.Models.dedupMapResolved(s, tmp, 80)
+            .withColumnRenamed("id", "doc_id")
+            .orderBy("doc_id"))(graft.sources.Models.drop(s, tmp))
       },
       Some(clustersWhereSql("0.8",
         "md5(CAST(doc_id AS VARCHAR)) < '80'")),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.operators.Multimodal
 
 /** Multimodal-column demos: binary payloads with typed metadata. The
@@ -105,8 +105,8 @@ object MultimodalQueries {
           .filter(length(col("frame")) === 128)
           .select((col("doc_id") * 1000 + col("frame_idx")).as("fid"),
             col("frame"))
-        val hashed = Multimodal.aHash60(frames, "frame")
-          .select("fid", "ahash").localCheckpoint(true)
+        val hashed = Materialize("multimodal:mm_phash:hash",
+          Multimodal.aHash60(frames, "frame").select("fid", "ahash"))
         val pairs = Multimodal.phashNearDups(hashed, 3)
         val cnt = pairs
           .select(explode(array(col("i"), col("j"))).as("fid"))

@@ -1,8 +1,9 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.functions.GraftFunctions
 import graft.operators.Similarity
 
@@ -84,6 +85,52 @@ object SimilarityQueries {
        |WHERE CAST(list_sum([a.qv[k]*b.qv[k] for k in range(1,65)]) AS DOUBLE)
        |    / (sqrt(CAST(a.n2 AS DOUBLE)) * sqrt(CAST(b.n2 AS DOUBLE))) >= $threshold
        |ORDER BY i, j""".stripMargin
+
+  /** Per-query recall@5 of `approx` against the exact-L2 top-5
+    * `gtTop` (both `(qid, nid)`): `(qid, n_hits, recall_at_5)` for
+    * every ground-truth query — the audit tail of the `*_recall`
+    * queries over exact-L2 indexes. */
+  private def recallAt5(approx: DataFrame, gtTop: DataFrame): DataFrame = {
+    val hits = approx.join(gtTop, Seq("qid", "nid"), "left_semi")
+      .groupBy("qid").agg(count(lit(1)).as("n_hits"))
+    gtTop.select("qid").distinct()
+      .join(hits, Seq("qid"), "left")
+      .select(col("qid"),
+        coalesce(col("n_hits"), lit(0L)).as("n_hits"),
+        (coalesce(col("n_hits"), lit(0L)).cast("double") /
+          lit(5.0).cast("double")).as("recall_at_5"))
+      .orderBy("qid")
+  }
+
+  /** DuckDB twin of [[recallAt5]], appended to a family's CTEs whose
+    * `ranked(qid, nid, d2)` is the approximate answer: its top 5 per
+    * query against the exact-L2 brute force over `p`. */
+  private def recallAt5Sql(ranked: String): String =
+    s""",
+       |appr AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
+       |                                        ORDER BY d2, nid) AS rank
+       |    FROM $ranked) WHERE rank <= 5),
+       |gt AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
+       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
+       |             a.n2 + b.n2 - 2*CAST(list_sum(
+       |               [a.qv[kk]*b.qv[kk] for kk in range(1,65)])
+       |               AS BIGINT),
+       |             b.vec_id) AS rk
+       |    FROM (SELECT * FROM p WHERE vec_id < 10) a
+       |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= 5),
+       |h AS (SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hits
+       |      FROM appr a JOIN gt USING (qid, nid) GROUP BY 1)
+       |SELECT q.vec_id AS qid,
+       |       coalesce(h.n_hits, CAST(0 AS BIGINT)) AS n_hits,
+       |       CAST(coalesce(h.n_hits, 0) AS DOUBLE)
+       |         / CAST(5 AS DOUBLE) AS recall_at_5
+       |FROM (SELECT vec_id FROM p WHERE vec_id < 10) q
+       |LEFT JOIN h ON h.qid = q.vec_id
+       |ORDER BY qid""".stripMargin
 
   /** DuckDB replay of the recall@k evaluation: brute-force top-k as
     * ground truth, SRP-LSH top-k as the candidate, per-query hit count
@@ -586,17 +633,15 @@ object SimilarityQueries {
           Tables.embeddings(s, d), "vec_id", "embedding", 5, dim = 64)
           .filter(col("qid") < 50)
           .select(col("qid"), col("nid")).withColumn("_hit", lit(1))
-        val out = brute.join(ann, Seq("qid", "nid"), "left")
-          .groupBy("qid")
-          .agg(sum(coalesce(col("_hit"), lit(0))).cast("long").as("hits"),
-            count(lit(1)).as("k"))
-          .select(col("qid"), col("hits"),
-            (col("hits").cast("double") / col("k").cast("double"))
-              .as("recall"))
-          .orderBy("qid")
-          .localCheckpoint(true)
-        prep.unpersist()
-        out
+        Materialize("similarity:sim_ann_recall:recall",
+          brute.join(ann, Seq("qid", "nid"), "left")
+            .groupBy("qid")
+            .agg(sum(coalesce(col("_hit"), lit(0))).cast("long").as("hits"),
+              count(lit(1)).as("k"))
+            .select(col("qid"), col("hits"),
+              (col("hits").cast("double") / col("k").cast("double"))
+                .as("recall"))
+            .orderBy("qid"), prep)
       },
       Some(annRecallSql(5, 50, 32, 4)),
       doc = "ANN index quality: recall@5 of SRP-LSH vs brute-force " +
@@ -665,7 +710,9 @@ object SimilarityQueries {
         val cents = graft.sources.Models.ivfCentroids(s, d, 16, 2)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding").cache()
-        Similarity.ivfTopKWith(prep, cents, 5, queryLimit = 10L, nProbe = 4)
+        Materialize("similarity:sim_ivf_indexed:rank",
+          Similarity.ivfTopKPlan(prep, cents, 5, queryLimit = 10L,
+            nProbe = 4), prep)
           .orderBy("qid", "rank")
       },
       Some(ivfOracleSql(5, 10, 16, 4, 2)),
@@ -795,8 +842,8 @@ object SimilarityQueries {
         val cents = graft.sources.Models.ivfCentroids(s, d, 16, 2)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding").cache()
-        Similarity.semDedupWith(prep, cents, 0.4)
-          .orderBy("vec_id")
+        try Similarity.semDedupWith(prep, cents, 0.4).orderBy("vec_id")
+        finally prep.unpersist()
       },
       Some(semDedupOracleSql(0.4, 16, 2)),
       doc = "SemDedup against the PERSISTED quantizer (shared with " +
@@ -898,9 +945,10 @@ object SimilarityQueries {
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
         val (cents, cbRows, codes) = graft.sources.Models.ivfPqIndex(s, d)
-        Similarity.ivfPqScoreWith(prep, cents, cbRows, codes,
-          k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
-          rerank = 50)
+        Materialize("similarity:sim_ivfpq_indexed:score",
+          Similarity.ivfPqScorePlan(prep, cents, cbRows, codes,
+            k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
+            rerank = 50), prep)
           .orderBy("qid", "rank")
       },
       Some(ivfPqRefinedOracleSql(k = 5, queryLimit = 10, nList = 16,
@@ -922,49 +970,17 @@ object SimilarityQueries {
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
-        val gtTop = Similarity.exactL2TopK(prep, 5, 10L)
-          .localCheckpoint(true)
+        val gtTop = Materialize("similarity:sim_ivfpq_recall:ground_truth",
+          Similarity.exactL2TopK(prep, 5, 10L))
         val (cents, cbRows, codes) = graft.sources.Models.ivfPqIndex(s, d)
-        val approx = Similarity.ivfPqScoreWith(prep, cents, cbRows, codes,
-          k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
-          rerank = 50)
-        val hits = approx.join(gtTop, Seq("qid", "nid"), "left_semi")
-          .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-        gtTop.select("qid").distinct()
-          .join(hits, Seq("qid"), "left")
-          .select(col("qid"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            (coalesce(col("n_hits"), lit(0L)).cast("double") /
-              lit(5.0).cast("double")).as("recall_at_5"))
-          .orderBy("qid")
+        val approx = Materialize("similarity:sim_ivfpq_recall:score",
+          Similarity.ivfPqScorePlan(prep, cents, cbRows, codes,
+            k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
+            rerank = 50), prep)
+        recallAt5(approx, gtTop)
       },
       Some(ivfPqRefinedCtes(queryLimit = 10, nList = 16, nProbe = 8,
-        iters = 2, m = 8, ksub = 256, rerank = 50) +
-        s""",
-           |appr AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-           |                                        ORDER BY d2, nid) AS rank
-           |    FROM rr) WHERE rank <= 5),
-           |gt AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-           |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-           |             a.n2 + b.n2 - 2*CAST(list_sum(
-           |               [a.qv[kk]*b.qv[kk] for kk in range(1,65)])
-           |               AS BIGINT),
-           |             b.vec_id) AS rk
-           |    FROM (SELECT * FROM p WHERE vec_id < 10) a
-           |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= 5),
-           |h AS (SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hits
-           |      FROM appr a JOIN gt USING (qid, nid) GROUP BY 1)
-           |SELECT q.vec_id AS qid,
-           |       coalesce(h.n_hits, CAST(0 AS BIGINT)) AS n_hits,
-           |       CAST(coalesce(h.n_hits, 0) AS DOUBLE)
-           |         / CAST(5 AS DOUBLE) AS recall_at_5
-           |FROM (SELECT vec_id FROM p WHERE vec_id < 10) q
-           |LEFT JOIN h ON h.qid = q.vec_id
-           |ORDER BY qid""".stripMargin),
+        iters = 2, m = 8, ksub = 256, rerank = 50) + recallAt5Sql("rr")),
       doc = "IVF-PQ recall@5 audit vs exact-L2 brute force at the " +
         "servable default (nProbe=8, 8-bit codes, rerank=50) — the " +
         "compressed index's quality metric, itself hash-deterministic"),
@@ -989,28 +1005,27 @@ object SimilarityQueries {
           "vec_id", "embedding").filter(size(col("qv")) === 64).cache()
         val batch = Similarity.prepared(embs.filter(h >= "cc"),
           "vec_id", "embedding").filter(size(col("qv")) === 64)
-        val cents = Similarity.refinedCentroids(old, 16, 2)
-          .localCheckpoint(true)
-        val resOld = Similarity.ivfPqResiduals(old, cents)
-          .localCheckpoint(true)
+        val cents = Materialize("similarity:sim_ivfpq_append:centroids",
+          Similarity.refinedCentroids(old, 16, 2))
+        val resOld = Materialize("similarity:sim_ivfpq_append:residuals",
+          Similarity.ivfPqResiduals(old, cents))
         val cbRows = resOld.filter(col("id") < 256)
           .select(col("id").as("cid"), col("rv").as("cv"))
         val codesOld = Similarity.ivfPqCodes(resOld, cbRows, 8, 256, 64)
-        val codesNew = Similarity.ivfPqCodes(
-          Similarity.ivfPqResiduals(batch, cents), cbRows, 8, 256, 64)
-          .localCheckpoint(true) // encode once: stats + code sum read it
+        // encode once: stats + code sum read it
+        val codesNew = Materialize("similarity:sim_ivfpq_append:encode",
+          Similarity.ivfPqCodes(
+            Similarity.ivfPqResiduals(batch, cents), cbRows, 8, 256, 64))
         val newSum = codesNew.groupBy("cid")
           .agg(sum(aggregate(col("codes"), lit(0L), (a, x) => a + x))
             .as("new_code_sum"))
-        val out = Similarity.ivfPqAppendStats(codesOld, codesNew)
-          .join(newSum, Seq("cid"), "left")
-          .select(col("cid"), col("n_index"), col("n_appended"),
-            col("n_total"),
-            coalesce(col("new_code_sum"), lit(0L)).as("new_code_sum"))
-          .orderBy("cid")
-          .localCheckpoint(true)
-        old.unpersist()
-        out
+        Materialize("similarity:sim_ivfpq_append:stats",
+          Similarity.ivfPqAppendStats(codesOld, codesNew)
+            .join(newSum, Seq("cid"), "left")
+            .select(col("cid"), col("n_index"), col("n_appended"),
+              col("n_total"),
+              coalesce(col("new_code_sum"), lit(0L)).as("new_code_sum"))
+            .orderBy("cid"), old)
       },
       Some(ivfPqAppendSql(nList = 16, iters = 2, m = 8, ksub = 256)),
       doc = "daily IVF-PQ append fold: batch encoded against the FROZEN " +
@@ -1060,16 +1075,18 @@ object SimilarityQueries {
         }
         val (cents, cbRows, codes) = graft.sources.Models
           .ivfPqRebuild(s, tmp, embs, "vec_id", "embedding")
-        // cached per ivfPqScoreWith's contract (the query/LUT/rerank
-        // sides all re-read it; it unpersists inside)
+        // cached: the query/LUT/rerank sides all re-read it
         val prep = Similarity.prepared(embs, "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
-        val out = Similarity.ivfPqScoreWith(prep, cents, cbRows, codes,
-          k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
-          rerank = 50)
-          .orderBy("qid", "rank").localCheckpoint(true)
-        graft.sources.Models.drop(s, tmp)
-        out
+        // materialized before the drop: the plan reads the rebuilt
+        // artifacts under tmp
+        Materialize.releasing("similarity:sim_ivfpq_rebuild:score",
+          Similarity.ivfPqScorePlan(prep, cents, cbRows, codes,
+            k = 5, queryLimit = 10L, nProbe = 8, m = 8, dim = 64,
+            rerank = 50)) {
+          prep.unpersist()
+          graft.sources.Models.drop(s, tmp)
+        }.orderBy("qid", "rank")
       },
       Some(ivfPqRefinedOracleSql(k = 5, queryLimit = 10, nList = 16,
         nProbe = 8, iters = 2, m = 8, ksub = 256, rerank = 50)),
@@ -1098,7 +1115,8 @@ object SimilarityQueries {
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
-        val gt = Similarity.exactL2TopK(prep, 5, 10L).localCheckpoint(true)
+        val gt = Materialize("similarity:sim_ivfpq_sweep:ground_truth",
+          Similarity.exactL2TopK(prep, 5, 10L))
         // ONE materialized ADC table per (ksub, nProbe): the probe/LUT/
         // ADC pipeline is the expensive half of every arm and is
         // identical across the two rerank variants — scoring it per
@@ -1121,10 +1139,10 @@ object SimilarityQueries {
               nProbe <- Seq(4, 8, 16)
             } yield s"sweep arm ksub=$ksub nProbe=$nProbe" ->
               scala.concurrent.Future {
-                (ksub, nProbe, Similarity
-                  .ivfPqAdcScored(prep, idx._1, idx._2, idx._3, 10L,
-                    nProbe, 8)
-                  .localCheckpoint(true))
+                (ksub, nProbe, Materialize(
+                  s"similarity:sim_ivfpq_sweep:adc_ksub${ksub}_probe$nProbe",
+                  Similarity.ivfPqAdcScored(prep, idx._1, idx._2, idx._3,
+                    10L, nProbe, 8)))
               })
           } finally pool.shutdown()
         val arms = for {
@@ -1137,11 +1155,9 @@ object SimilarityQueries {
           .select(lit(nProbe).as("n_probe"), lit(ksub).as("ksub"),
             lit(rerank).as("rerank"), col("n_hits"),
             (col("n_hits").cast("double") / lit(50.0)).as("recall_at_5"))
-        val out = arms.reduce(_.unionAll(_))
-          .orderBy("n_probe", "ksub", "rerank")
-          .localCheckpoint(true)
-        prep.unpersist()
-        out
+        Materialize("similarity:sim_ivfpq_sweep:recall",
+          arms.reduce(_.unionAll(_)).orderBy("n_probe", "ksub", "rerank"),
+          prep)
       },
       Some(ivfPqSweepSql(k = 5, queryLimit = 10, nList = 16, iters = 2,
         m = 8, nProbes = Seq(4, 8, 16), ksubs = Seq(16, 256),
@@ -1189,47 +1205,14 @@ object SimilarityQueries {
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
-        val gtTop = Similarity.exactL2TopK(prep, 5, 10L)
-          .localCheckpoint(true)
-        prep.unpersist()
+        val gtTop = Materialize("similarity:sim_rp_recall:ground_truth",
+          Similarity.exactL2TopK(prep, 5, 10L), prep)
         val approx = Similarity.rpTopK(Tables.embeddings(s, d), "vec_id",
           "embedding", k = 5, queryLimit = 10L)
-        val hits = approx.join(gtTop, Seq("qid", "nid"), "left_semi")
-          .groupBy("qid").agg(count(lit(1)).as("n_hits"))
-        gtTop.select("qid").distinct()
-          .join(hits, Seq("qid"), "left")
-          .select(col("qid"),
-            coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            (coalesce(col("n_hits"), lit(0L)).cast("double") /
-              lit(5.0).cast("double")).as("recall_at_5"))
-          .orderBy("qid")
+        recallAt5(approx, gtTop)
       },
       Some(rpCtes(queryLimit = 10, kDim = 32, rerank = 150, seed = 11L) +
-        s""",
-           |appr AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-           |                                        ORDER BY d2, nid) AS rank
-           |    FROM ex) WHERE rank <= 5),
-           |gt AS (
-           |  SELECT qid, nid FROM (
-           |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-           |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-           |             a.n2 + b.n2 - 2*CAST(list_sum(
-           |               [a.qv[kk]*b.qv[kk] for kk in range(1,65)])
-           |               AS BIGINT),
-           |             b.vec_id) AS rk
-           |    FROM (SELECT * FROM p WHERE vec_id < 10) a
-           |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= 5),
-           |h AS (SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hits
-           |      FROM appr a JOIN gt USING (qid, nid) GROUP BY 1)
-           |SELECT q.vec_id AS qid,
-           |       coalesce(h.n_hits, CAST(0 AS BIGINT)) AS n_hits,
-           |       CAST(coalesce(h.n_hits, 0) AS DOUBLE)
-           |         / CAST(5 AS DOUBLE) AS recall_at_5
-           |FROM (SELECT vec_id FROM p WHERE vec_id < 10) q
-           |LEFT JOIN h ON h.qid = q.vec_id
-           |ORDER BY qid""".stripMargin),
+        recallAt5Sql("ex")),
       doc = "RP index quality: recall@5 vs exact-L2 ground truth — the " +
         "JL family's hash-deterministic audit"),
 
@@ -1279,15 +1262,12 @@ object SimilarityQueries {
           .groupBy("qid")
           .agg(collect_list(struct(col("nid"), col("qdot"), col("qv")))
             .as("cands"))
-        val out = pool
+        Materialize("similarity:sim_mmr_ivfpq:select", pool
           .select(col("qid"), explode(
             GraftFunctions.mmrSelect(col("cands"), 5)).as("m"))
           .select(col("qid"), col("m.nid").as("nid"),
             col("m.rank").as("rank"))
-          .orderBy("qid", "rank")
-          .localCheckpoint(true)
-        prep.unpersist()
-        out
+          .orderBy("qid", "rank"), prep)
       },
       Some(ivfPqRefinedCtes(queryLimit = 10, nList = 16, nProbe = 8,
         iters = 2, m = 8, ksub = 256, rerank = 50) +

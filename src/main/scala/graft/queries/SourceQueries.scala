@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 
 /** Source-format surface (SURVEY.md §2.A1/A16 breadth): the engine
   * ingests more than parquet — binary files (the blob ingest edge),
@@ -264,14 +264,15 @@ object SourceQueries {
         val pageSize = 2 // tiny pages: 3 NON-EMPTY pages at every sf
         var marker: Option[String] = None
         val pages = (1 to 3).map { pg =>
-          val page = store.read(s, "objects")
-            .filter(graft.operators.Listing.scanPredicate("src2",
-              graft.operators.Listing.ListParams(prefix = Some("en/"),
-                marker = marker)))
-            .select("object", "size", "checksum")
-            .orderBy("object").limit(pageSize)
-            .withColumn("page", lit(pg.toLong))
-            .localCheckpoint(true) // marker read + union both consume it
+          // marker read + union both consume it
+          val page = Materialize(s"source:src_casv2_paging:page_$pg",
+            store.read(s, "objects")
+              .filter(graft.operators.Listing.scanPredicate("src2",
+                graft.operators.Listing.ListParams(prefix = Some("en/"),
+                  marker = marker)))
+              .select("object", "size", "checksum")
+              .orderBy("object").limit(pageSize)
+              .withColumn("page", lit(pg.toLong)))
           page.select("object").orderBy(col("object").desc).limit(1)
             .collect().headOption
             .foreach(r => marker = Some(r.getString(0)))

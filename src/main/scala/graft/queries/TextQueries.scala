@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.{Materialize, QueryDef, Tables}
 import graft.functions.GraftFunctions
 import graft.operators.{Dedup, TextOps}
 
@@ -368,7 +368,7 @@ object TextQueries {
     // size both derive from it. Without the checkpoint, Spark re-runs
     // the train-corpus explode+count once per derived table — three
     // full passes instead of one.
-    lmScoreWith(docs, TextOps.lmFit(docs).localCheckpoint(true))
+    lmScoreWith(docs, Materialize("text:lm:fit", TextOps.lmFit(docs)))
 
   /** The scoring half of [[lmPlan]] against an EXISTING fitted bigram
     * table — the steady-state form where the model is a persisted
@@ -380,7 +380,7 @@ object TextQueries {
     // per-doc table from four plan branches (value histogram,
     // tie-group counts, row-level window, total) — left lazy, each
     // branch re-runs the whole bigram scoring join
-    val perDoc = lmPerDoc(docs, c2).localCheckpoint(true)
+    val perDoc = Materialize("text:lm:score", lmPerDoc(docs, c2))
     graft.operators.Rank
       .ntileExact(perDoc, 10, "nll_bits", "doc_id", "decile")
       .select(col("doc_id"), col("n_bi"), col("nll_bits"),
@@ -953,9 +953,7 @@ object TextQueries {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
           .cache()
-        val out = rarityPlan(docs).localCheckpoint(true)
-        docs.unpersist()
-        out
+        Materialize("text:tx_rarity:score", rarityPlan(docs), docs)
       },
       Some(
         """WITH w AS (
@@ -1011,11 +1009,9 @@ object TextQueries {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
           .cache()
-        val df = TextOps.dfTable(docs).localCheckpoint(true)
-        val out = bm25With(docs, df, bm25QueryTerms(df))
-          .localCheckpoint(true)
-        docs.unpersist()
-        out
+        val df = Materialize("text:tx_bm25_topk:df", TextOps.dfTable(docs))
+        Materialize("text:tx_bm25_topk:score",
+          bm25With(docs, df, bm25QueryTerms(df)), docs)
       },
       Some(bm25OracleSql),
       doc = "BM25 top-20 (k1=1.2, b=0.75) against the df-rank-11..15 " +
@@ -1074,11 +1070,10 @@ object TextQueries {
         graft.sources.Models.postingsAppend(s, tmp,
           docs.filter(h >= "e6").select("doc_id", "text"),
           "doc_id", "text", dedupeIds = true)
-        val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
         // the result is materialized: reclaim the run-private fold
         // corpus's artifacts so repeated runs don't accumulate them
-        graft.sources.Models.drop(s, tmp)
-        out
+        Materialize.releasing("text:tx_bm25_append:score",
+          bm25FromArtifacts(s, tmp))(graft.sources.Models.drop(s, tmp))
       },
       Some(bm25OracleSql),
       doc = "BM25 served from FOLDED artifacts (base build + " +
@@ -1138,9 +1133,8 @@ object TextQueries {
         graft.sources.Models.postingsAppend(s, tmp,
           docs.filter(h >= "ee").select("doc_id", "text"),
           "doc_id", "text", dedupeIds = true)
-        val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
-        graft.sources.Models.drop(s, tmp)
-        out
+        Materialize.releasing("text:maint_vacuum_cutover:score",
+          bm25FromArtifacts(s, tmp))(graft.sources.Models.drop(s, tmp))
       },
       Some(bm25OracleSql),
       doc = "crashed-maintenance lifecycle: fold, plant torn staging " +
@@ -1166,11 +1160,10 @@ object TextQueries {
     "maint_history" -> QueryDef(
       (s, d) => {
         val tmp = maintDay(s, d)
-        graft.sources.MaintenanceLog.events(s,
-          graft.sources.Models.root(tmp))
+        Materialize("text:maint_history:read", graft.sources.MaintenanceLog
+          .events(s, graft.sources.Models.root(tmp))
           .select(col("seq"), col("kind"), col("family"), col("n_rows"))
-          .orderBy("seq")
-          .localCheckpoint(true)
+          .orderBy("seq"))
       },
       Some(
         """WITH h AS (
@@ -1211,8 +1204,9 @@ object TextQueries {
     "maint_rollup" -> QueryDef(
       (s, d) => {
         val tmp = maintDay(s, d)
-        val ev = graft.sources.MaintenanceLog.events(s,
-          graft.sources.Models.root(tmp)).localCheckpoint(true)
+        val ev = Materialize("text:maint_rollup:read",
+          graft.sources.MaintenanceLog.events(s,
+            graft.sources.Models.root(tmp)))
         // effectiveness receipt: bounded (2-row) collect over the
         // compact events only
         val comp = ev.filter(col("kind") === "compact")
@@ -1222,13 +1216,13 @@ object TextQueries {
           r.getLong(1) > r.getLong(2)),
           "compaction receipts missing or ineffective: " +
             comp.mkString(","))
-        ev.groupBy(col("kind"), col("family"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("n_rows")).as("total_rows"),
-            min(col("seq")).as("first_seq"),
-            max(col("seq")).as("last_seq"))
-          .orderBy("first_seq")
-          .localCheckpoint(true)
+        Materialize("text:maint_rollup:rollup",
+          ev.groupBy(col("kind"), col("family"))
+            .agg(count(lit(1)).as("n_events"),
+              sum(col("n_rows")).as("total_rows"),
+              min(col("seq")).as("first_seq"),
+              max(col("seq")).as("last_seq"))
+            .orderBy("first_seq"))
       },
       Some(
         """WITH h AS (
@@ -1293,9 +1287,8 @@ object TextQueries {
           s"compaction ineffective: files $before -> $after " +
             s"(want > ${graft.sources.Models.IndexBuckets} before, " +
             s"<= ${graft.sources.Models.IndexBuckets} after)")
-        val out = bm25FromArtifacts(s, tmp).localCheckpoint(true)
-        graft.sources.Models.drop(s, tmp)
-        out
+        Materialize.releasing("text:tx_bm25_compacted:score",
+          bm25FromArtifacts(s, tmp))(graft.sources.Models.drop(s, tmp))
       },
       Some(bm25OracleSql),
       doc = "BM25 served from the COMPACTED index after two daily " +
@@ -1454,9 +1447,7 @@ object TextQueries {
     "tx_lm_score" -> QueryDef(
       (s, d) => {
         val docs = TextOps.lmDocs(Tables.documents(s, d)).cache()
-        val out = lmPlan(docs).localCheckpoint(true)
-        docs.unpersist()
-        out
+        Materialize("text:tx_lm_score:score", lmPlan(docs), docs)
       },
       Some(lmOracleSql),
       doc = "CCNet-style LM quality scoring: train-split Laplace bigram " +
@@ -1471,10 +1462,8 @@ object TextQueries {
     "tx_lm_score_indexed" -> QueryDef(
       (s, d) => {
         val docs = TextOps.lmDocs(Tables.documents(s, d)).cache()
-        val out = lmScoreWith(docs, graft.sources.Models.bigramLm(s, d))
-          .localCheckpoint(true)
-        docs.unpersist()
-        out
+        Materialize("text:tx_lm_score_indexed:score",
+          lmScoreWith(docs, graft.sources.Models.bigramLm(s, d)), docs)
       },
       Some(lmOracleSql),
       doc = "LM quality scoring from the PERSISTED bigram model: " +
@@ -1531,9 +1520,7 @@ object TextQueries {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
           .cache()
-        val out = tfidfPlan(docs).localCheckpoint(true)
-        docs.unpersist()
-        out
+        Materialize("text:tx_tfidf_terms:score", tfidfPlan(docs), docs)
       },
       Some(
         """WITH w AS (
@@ -1837,7 +1824,9 @@ object TextQueries {
     "tx_kmv_setops" -> QueryDef(
       (s, d) => {
         GraftFunctions.register(s)
-        val hs = Tables.documents(s, d)
+        // feeds sketches AND exact counts
+        val hs = Materialize("text:tx_kmv_setops:shingles",
+          Tables.documents(s, d)
           .filter(col("source").isin(srcs: _*))
           .select(col("source"), TextOps.tokens(col("text")).as("toks"))
           .select(col("source"), explode(expr(
@@ -1848,8 +1837,7 @@ object TextQueries {
           .select(col("source"),
             conv(substring(md5(encode(col("s3"), "UTF-8")), 1, 13), 16, 10)
               .cast("long").as("h"))
-          .distinct()
-          .localCheckpoint(true) // feeds sketches AND exact counts
+          .distinct())
         val sk = hs.groupBy("source")
           .agg(GraftFunctions.kmvMins(col("h"), k).as("mins"))
         val pairs = sk

@@ -163,15 +163,11 @@ object Models {
   /** Run `body` with every Spark job it launches described as
     * `models:<family>:<phase>` (train, fold, compact, rebuild, vacuum)
     * — the maintenance layer's jobs are attributable in listeners and
-    * the UI — and restore the caller's description afterwards. */
+    * the UI — nested under the caller's description
+    * ([[graft.Materialize.described]]), which is restored afterwards. */
   private def step[A](spark: SparkSession, family: String, phase: String)
-      (body: => A): A = {
-    val sc = spark.sparkContext
-    val key = "spark.job.description" // SparkContext.SPARK_JOB_DESCRIPTION
-    val prev = sc.getLocalProperty(key)
-    sc.setJobDescription(s"models:$family:$phase")
-    try body finally sc.setLocalProperty(key, prev)
-  }
+      (body: => A): A =
+    graft.Materialize.described(spark, s"models:$family:$phase")(body)
 
   /** Record one maintenance event on `root` — every event carries its
     * duration since `t0`. `nRows` and `detail` are by-name, so no count

@@ -272,6 +272,16 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
   private def parseSegments(content: String): Seq[String] =
     content.split('\n').iterator.map(_.trim).filter(_.nonEmpty).toSeq
 
+  /** The segment list of manifest `name` under `dir`. IO failures
+    * propagate: each caller classifies a missing or unreadable
+    * manifest its own way. */
+  private def manifest(f: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, name: String): Seq[String] = {
+    val in = f.open(new org.apache.hadoop.fs.Path(dir, name))
+    try parseSegments(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+    finally in.close()
+  }
+
   /** Highest committed `(version, segments)`, if any. Retries until
     * the listing converges: a concurrent GC may unlink an older
     * manifest between the listing and the open — never the MAX
@@ -291,11 +301,7 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
         if (versions.isEmpty) None
         else {
           val n = versions.max
-          val in = f.open(new org.apache.hadoop.fs.Path(dir, s"$n.commit"))
-          val content =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          Some((n, parseSegments(content)))
+          Some((n, manifest(f, dir, s"$n.commit")))
         }
       }
     var attempts = 0
@@ -347,21 +353,16 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
     * exactly Delta's VACUUM-vs-time-travel trade). */
   def readVersion(spark: SparkSession, table: String,
       version: Long): DataFrame = {
-    val f = fs(spark)
-    val p = new org.apache.hadoop.fs.Path(logDir(table), s"$version.commit")
     // open directly — an exists-then-open pair races a concurrent GC
     // unlinking this manifest between the two calls
-    val in =
-      try f.open(p)
+    val segments =
+      try manifest(fs(spark), logDir(table), s"$version.commit")
       catch {
         case _: java.io.FileNotFoundException =>
           throw new NoSuchElementException(
             s"no snapshot v$version for '$table' (GC'd or never committed)")
       }
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    readSegments(spark, parseSegments(content))
+    readSegments(spark, segments)
   }
 
   override def write(df: DataFrame, table: String, mode: SaveMode): Unit = {
@@ -463,7 +464,9 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
     staged
   }
 
-  /** Claim a version by atomic manifest rename, publishing `segments`.
+  /** Claim a version by atomic no-overwrite publish of the manifest
+    * ([[Generations.claim]] — rename, hard link on `file://`, or a
+    * conditional put), publishing `segments`.
     * `exact = Some(n)` claims only version n (append's serializable
     * form) — returns false on conflict, leaving the staged segments
     * intact for the caller's retry; `exact = None` (overwrite) walks
@@ -482,7 +485,8 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
       committed(spark, table).map(_._1 + 1L).getOrElse(1L))
     var claimed = false
     while (!claimed) {
-      claimed = claim(f, tmp, new org.apache.hadoop.fs.Path(dir, s"$n.commit"))
+      claimed = Generations.claim(f, tmp,
+        new org.apache.hadoop.fs.Path(dir, s"$n.commit"))
       if (!claimed) {
         if (exact.isDefined) { // append lost the race: retry the LIST
           f.delete(tmp, false)
@@ -496,44 +500,6 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
     true
   }
 
-  /** Atomically publish `tmp` as `dst`, failing (false) when `dst`
-    * already exists — the claim primitive the whole protocol rests on.
-    * On HDFS-like filesystems `rename` has exactly these semantics.
-    * On `file://` it does NOT (Java's rename silently REPLACES an
-    * existing destination), so the local claim is an atomic hard link
-    * (`link(2)` fails with EEXIST when the destination exists). Object
-    * stores without atomic no-overwrite rename need a consistent
-    * layer, same as any file-pointer commit log. */
-  private def claim(f: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean = f match {
-    case cs: ConditionalStore =>
-      // conditional-put stores (round 20): the native If-None-Match
-      // create IS the no-overwrite publish — no consistent rename
-      // layer needed there
-      val content = {
-        val in = f.open(tmp)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val b = new Array[Byte](4096)
-          var n = in.read(b)
-          while (n >= 0) { buf.write(b, 0, n); n = in.read(b) }
-          buf.toByteArray
-        } finally in.close()
-      }
-      cs.putIfAbsent(dst, content)
-    case _ if f.getScheme == "file" =>
-      try {
-        java.nio.file.Files.createLink(
-          java.nio.file.Paths.get(dst.toUri.getPath),
-          java.nio.file.Paths.get(tmp.toUri.getPath))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
-    case _ => f.rename(tmp, dst)
-  }
-
   /** Unlink manifests (first — readers resolve max only) older than
     * the newest `keep` snapshots, then drop the segments they
     * reference that NO surviving manifest still lists — append chains
@@ -544,12 +510,8 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
     val f = fs(spark)
     val dir = logDir(table)
     def segsOf(n: Long): Option[Seq[String]] =
-      try {
-        val in = f.open(new org.apache.hadoop.fs.Path(dir, s"$n.commit"))
-        try Some(parseSegments(
-          scala.io.Source.fromInputStream(in, "UTF-8").mkString))
-        finally in.close()
-      } catch { case _: java.io.IOException => None }
+      try Some(manifest(f, dir, s"$n.commit"))
+      catch { case _: java.io.IOException => None }
     val versions = f.listStatus(dir).map(_.getPath.getName)
       .filter(_.endsWith(".commit"))
       .map(_.stripSuffix(".commit").toLong)
@@ -608,12 +570,8 @@ class VersionedStore(inner: Store, logRoot: String, keep: Int = 2,
     val live = statuses.map(_.getPath.getName)
       .filter(_.endsWith(".commit"))
       .flatMap { c =>
-        try {
-          val in = f.open(new org.apache.hadoop.fs.Path(dir, c))
-          try parseSegments(
-            scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-          finally in.close()
-        } catch { case _: java.io.IOException => Seq.empty }
+        try manifest(f, dir, c)
+        catch { case _: java.io.IOException => Seq.empty }
       }.toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     statuses

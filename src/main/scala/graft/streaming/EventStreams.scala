@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.Materialize
+
 /** Structured-Streaming form of the reporter/metering surface
   * (reference: src/io/pithos/reporter.clj — put/delete events fanned to
   * reporters; our engine models the event feed as a stream and the
@@ -262,12 +264,13 @@ object EventStreams {
           batchId: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          val surv = batch.toDF()
-            .join(graft.sources.Models.dedupMapResolved(spark, sfDir)
-              .filter(col("id") === col("label"))
-              .select(col("id").as("doc_id")),
-              Seq("doc_id"), "left_semi")
-            .localCheckpoint(true) // fold-sized; feeds scoring twice
+          // fold-sized; feeds scoring twice
+          val surv = Materialize("stream:daily_pipeline:survivors",
+            batch.toDF()
+              .join(graft.sources.Models.dedupMapResolved(spark, sfDir)
+                .filter(col("id") === col("label"))
+                .select(col("id").as("doc_id")),
+                Seq("doc_id"), "left_semi"))
           val scored = graft.queries.TextQueries
             .lmScoreWith(graft.operators.TextOps.lmDocs(surv),
               graft.sources.Models.bigramLm(spark, sfDir))
@@ -305,13 +308,15 @@ object EventStreams {
     val marker = new org.apache.hadoop.fs.Path(s"$markerDir/$batchId")
     val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(marker)) {
-      val fold = df.localCheckpoint(true) // ids + append read it
+      // ids + append read it
+      val fold = Materialize("stream:versioned_fold_sink:fold", df)
       val fresh =
         try {
-          val present = vs.read(spark, table)
-            .join(broadcast(fold.select(col(idCol))), Seq(idCol),
-              "left_semi")
-            .select(col(idCol)).localCheckpoint(true)
+          val present = Materialize("stream:versioned_fold_sink:present",
+            vs.read(spark, table)
+              .join(broadcast(fold.select(col(idCol))), Seq(idCol),
+                "left_semi")
+              .select(col(idCol)))
           fold.join(broadcast(present), Seq(idCol), "left_anti")
         } catch {
           case _: NoSuchElementException => fold // no snapshot yet
@@ -374,11 +379,7 @@ object EventStreams {
       checkpointDir: String, compactEvery: Int)
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/applied/$batchId")
-    val f = marker.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker) && !batch.isEmpty) {
+    appliedOnce(checkpointDir, compactEvery, batch, batchId) {
       // a TRANSIENT foreign fence — a double-launched maintenance job,
       // a racing nightly batch compact — must not kill the stream: the
       // fold is replay-idempotent (dedupeIds + per-artifact guards),
@@ -390,17 +391,33 @@ object EventStreams {
         graft.sources.Models.postingsAppend(spark, sfDir,
           batch.toDF(), "doc_id", "text", dedupeIds = true)
       }
-      // the stream-level crash seam: dying HERE (fold durable, marker
-      // lost) is the at-least-once window the dedupeIds layer covers
+    } {
+      graft.sources.Models.compactRetrievalIndexes(spark, sfDir)
+    }
+  }
+
+  /** The skeleton every maintenance loop's per-micro-batch body shares:
+    * unless `batchId`'s applied marker (`<checkpointDir>/applied/<id>`)
+    * exists or the batch is empty, run `fold`, pass the
+    * `stream_after_fold` crash point (dying there — fold durable,
+    * marker lost — is the at-least-once window each fold's `dedupeIds`
+    * layer covers), write the marker, and after every
+    * `compactEvery`-th batch run `compact` under the transient-fence
+    * retry ([[graft.sources.Generations.retryingConcurrent]]). */
+  private def appliedOnce(checkpointDir: String, compactEvery: Int,
+      batch: Dataset[org.apache.spark.sql.Row], batchId: Long)
+      (fold: => Unit)(compact: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(
+      s"$checkpointDir/applied/$batchId")
+    val f = marker.getFileSystem(
+      batch.sparkSession.sparkContext.hadoopConfiguration)
+    if (!f.exists(marker) && !batch.isEmpty) {
+      fold
       graft.sources.Models.crashHook("stream_after_fold")
       f.mkdirs(marker.getParent)
       f.create(marker, true).close()
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        graft.sources.Generations.retryingConcurrent() {
-          graft.sources.Models.compactRetrievalIndexes(spark, sfDir)
-        }
-        ()
-      }
+      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+        graft.sources.Generations.retryingConcurrent()(compact)
     }
   }
 
@@ -464,13 +481,10 @@ object EventStreams {
       compactEvery: Int, foldMap: Boolean, k: Int, b: Int, w: Int)
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/applied/$batchId")
-    val f = marker.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker) && !batch.isEmpty) {
-      val bdf = batch.toDF().select("doc_id", "text")
-        .localCheckpoint(true) // probe + fold both read it
+    appliedOnce(checkpointDir, compactEvery, batch, batchId) {
+      // probe + fold both read it
+      val bdf = Materialize("stream:dedup_fold:batch",
+        batch.toDF().select("doc_id", "text"))
       val (bands, sets) = graft.sources.Models.lshIndex(spark, sfDir,
         sys.error("dedupMaintenance requires a trained index " +
           "(call lshIndex first)"), "doc_id", "text", k, b, w)
@@ -479,8 +493,8 @@ object EventStreams {
       // write barrier that keeps the sink decisions pinned to the
       // PRE-fold index state): the sink summary and the fold's
       // every consumer read these two checkpointed frames
-      val bSets = graft.operators.Dedup
-        .shingleSets(bdf, "doc_id", "text", w).localCheckpoint(true)
+      val bSets = Materialize("stream:dedup_fold:shingles",
+        graft.operators.Dedup.shingleSets(bdf, "doc_id", "text", w))
       val pairs = graft.operators.Dedup.crossSplitPairsIndexed(
         bands, sets, bdf, "doc_id", "text", threshold, k, b, w,
         precomputedSets = Some(bSets))
@@ -505,21 +519,14 @@ object EventStreams {
             precomputedSets = Some(bSets))
         }
       }
-      graft.sources.Models.crashHook("stream_after_fold")
-      f.mkdirs(marker.getParent)
-      f.create(marker, true).close()
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        graft.sources.Generations.retryingConcurrent() {
-          graft.sources.Models.compactBucketed(spark,
-            graft.sources.Models.lshBandsPath(sfDir, k, b, w))
-          graft.sources.Models.compactBucketed(spark,
-            graft.sources.Models.lshSetsPath(sfDir, w))
-          if (foldMap) {
-            graft.sources.Models.compactDedupMap(spark, sfDir,
-              math.round(threshold * 100).toInt)
-          }
-        }
-        ()
+    } {
+      graft.sources.Models.compactBucketed(spark,
+        graft.sources.Models.lshBandsPath(sfDir, k, b, w))
+      graft.sources.Models.compactBucketed(spark,
+        graft.sources.Models.lshSetsPath(sfDir, w))
+      if (foldMap) {
+        graft.sources.Models.compactDedupMap(spark, sfDir,
+          math.round(threshold * 100).toInt)
       }
     }
   }
@@ -584,11 +591,9 @@ object EventStreams {
       m: Int, ksub: Int, dim: Int)
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/applied/$batchId")
-    val f = marker.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(marker) && !batch.isEmpty) {
+    // marker AFTER the append: a crash in between replays the batch,
+    // which dedupeIds then folds to a no-op
+    appliedOnce(checkpointDir, compactEvery, batch, batchId) {
       // transient-fence retry: see retrievalFoldBatch
       graft.sources.Generations.retryingConcurrent() {
         graft.sources.Models.ivfPqIndexAppend(spark,
@@ -596,19 +601,10 @@ object EventStreams {
           nList = nList, iters = iters, m = m, ksub = ksub, dim = dim,
           maxCellShareMilli = maxCellShareMilli, dedupeIds = true)
       }
-      // marker AFTER the append: a crash in between replays the
-      // batch, which dedupeIds then folds to a no-op
-      graft.sources.Models.crashHook("stream_after_fold")
-      f.mkdirs(marker.getParent)
-      f.create(marker, true).close()
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        graft.sources.Generations.retryingConcurrent() {
-          graft.sources.Models.compactBucketed(spark,
-            graft.sources.Models.ivfPqCodesPath(sfDir,
-              nList = nList, iters = iters, m = m, ksub = ksub))
-        }
-        ()
-      }
+    } {
+      graft.sources.Models.compactBucketed(spark,
+        graft.sources.Models.ivfPqCodesPath(sfDir,
+          nList = nList, iters = iters, m = m, ksub = ksub))
     }
   }
 

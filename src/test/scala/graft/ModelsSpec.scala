@@ -1728,7 +1728,8 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // every Spark job of a fold and a compaction walk carries the
-  // maintenance step's description, and the caller's is restored
+  // maintenance step's description under the caller's, and the
+  // caller's is restored
   test("maintenance jobs are described models:<family>:<phase>") {
     val dir = sliceCorpus("graft-jobdesc")
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
@@ -1767,9 +1768,12 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import scala.jdk.CollectionConverters._
     val seen = descs.asScala.toSeq.takeWhile(_ != "sentinel")
     assert(descs.contains("sentinel"), "listener bus never drained")
-    assert(seen.contains("models:postings:fold") &&
-      seen.contains("models:postings:compact"), seen.distinct.toString)
-    assert(seen.forall(_.startsWith("models:")), seen.distinct.toString)
+    // the step label nests under the caller's: neither is lost
+    assert(seen.contains("caller > models:postings:fold") &&
+      seen.contains("caller > models:postings:compact"),
+      seen.distinct.toString)
+    assert(seen.forall(_.startsWith("caller > models:")),
+      seen.distinct.toString)
     Models.drop(spark, dir)
   }
 }

@@ -398,4 +398,51 @@ class SimilaritySpec extends AnyFunSuite {
     assert(r.nonEmpty)
     assert(r.forall { case (q, n) => q < 100L && n < 100L })
   }
+
+  // The materialization step's two duties, observed from outside: every
+  // job a builder starts (checkpoints, Lloyd steps, hot-bucket counts)
+  // carries a job description, and the caches it takes are released by
+  // the time it returns its DataFrame.
+  test("builders describe every job they start and leave no cache entry") {
+    val sf = "/root/testdata/sf0.01"
+    val sc = spark.sparkContext
+    val cache = spark.sharedState.cacheManager
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+        ()
+      }
+    }
+    // the bus delivers in order: once a marker job's start arrives,
+    // every earlier job's has
+    def mark(m: String): Unit = {
+      sc.setJobDescription(m)
+      try spark.range(1).collect() finally sc.setJobDescription(null)
+      val deadline = System.currentTimeMillis() + 30000L
+      while (!descs.contains(m) && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(descs.contains(m), s"listener bus never delivered $m")
+    }
+    import scala.jdk.CollectionConverters._
+    sc.addSparkListener(listener)
+    try {
+      for (name <- Seq("sim_ivf_topk", "sim_ivfpq", "dd_minhash_lsh",
+          "tx_bm25_topk")) {
+        spark.catalog.clearCache()
+        mark(s"before $name")
+        SparkEntry.queries(name)(spark, sf)
+        assert(cache.isEmpty, s"$name left a cache entry behind")
+        mark(s"after $name")
+        val seen = descs.asScala.toSeq.dropWhile(_ != s"before $name")
+          .drop(1).takeWhile(_ != s"after $name")
+        assert(seen.nonEmpty, s"$name started no job while building")
+        assert(seen.forall(_.nonEmpty),
+          s"$name started undescribed jobs: ${seen.distinct}")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
 }
