@@ -22,15 +22,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   sbt "runMain graft.Measure anchor <dir> <q1,q2,...> [passes] [tpch=N] [objects=N]"
   *   sbt "runMain graft.Measure plan <outDir> <name...>"
   *   sbt "runMain graft.Measure time <repeats> <name...>"
-  *   sbt "runMain graft.Measure jobs <name>"
+  *   sbt "runMain graft.Measure jobs <name...>"
   * }}}
   *
-  * Every subcommand measures under one session recipe ([[session]]),
-  * next to one CPU canary, with one min-of-passes timer
+  * Every subcommand measures under one session ([[session]], the
+  * [[graft.sql.GraftExtensions.localSession]] recipe that [[Bench]] also
+  * runs on), next to one CPU canary, with one min-of-passes timer
   * ([[timePasses]]) that materialises every column, one job/stage
   * recorder ([[Recorder]]) and one JSON writer ([[obj]], [[write]]).
-  * [[Bench]] keeps its own session (its settings are part of its
-  * contract) but times with the same timer.
   *
   * Environment: `SPARK_GRAFT_CPUS` (default 32), `SPARK_GRAFT_SF_DIR`
   * (default: the sf0.1 test data, as for [[Bench]]), `SPARK_GRAFT_EXTRA_CONF`
@@ -43,25 +42,15 @@ object Measure {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  /** The shared local session: every ratio compares numbers taken
-    * under the same configuration, so the recipe lives in one place. */
+  /** The measurement session: the shared local recipe with this main's
+    * cpus default and the `SPARK_GRAFT_EXTRA_CONF` overrides applied. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
       .split(';').filter(_.contains('=')).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.sql.GraftExtensions)
-    val s = extra.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
-    s
+    graft.sql.GraftExtensions.localSession(cpus, extra.toSeq: _*)
   }
 
   def seconds(f: => Unit): Double = {
@@ -248,12 +237,12 @@ object Measure {
         println(obj(("canary" -> t.canaries.map(r3)) +: t.samples.map {
           case (n, ts) => n -> obj("min" -> r3(t.min(n)), "all" -> ts.map(r3))
         }: _*))
-      case "jobs" :: name :: Nil => jobs(spark, name)
+      case "jobs" :: names if names.nonEmpty => names.foreach(jobs(spark, _))
       case other =>
         System.err.println("usage: scale <copies> | audit | skew | " +
           "anchor <dir> <names> [passes] [tpch=N] [objects=N] | " +
           s"plan <outDir> <names...> | time <repeats> <names...> | " +
-          s"jobs <name>; got: $other")
+          s"jobs <names...>; got: $other")
         sys.exit(2)
     } finally spark.stop()
   }

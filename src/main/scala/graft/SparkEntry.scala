@@ -29,7 +29,8 @@ object SparkEntry {
       graft.queries.PolicyQueries.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The ListObjects kernel (SURVEY §3.1) over the derived objects view. */
+    * The ListObjects kernel (SURVEY §3.1) over the derived objects view;
+    * like [[queries]], it installs the function surface first. */
   def entry(spark: SparkSession): DataFrame = {
     functions.GraftFunctions.register(spark)
     operators.Listing.entries(
@@ -38,8 +39,16 @@ object SparkEntry {
         prefix = None, delimiter = Some("/"), maxKeys = 1000))
   }
 
+  /** The registry's builders. A caller may hand in a session built
+    * without [[sql.GraftExtensions]], so each first installs graft's
+    * function surface ([[functions.GraftFunctions.register]], at once a
+    * no-op on an extension-built session). */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (k, v) => k -> v.fn }
+    registry.map { case (k, v) =>
+      k -> { (s: SparkSession, dir: String) =>
+        functions.GraftFunctions.register(s); v.fn(s, dir)
+      }
+    }
 
   def oracleSql: Map[String, String] =
     registry.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }

@@ -86,8 +86,9 @@ object Dedup {
     * (id, hs, n) the caller already derived — the fold paths shingle a
     * batch ONCE and feed every consumer (tokenize+shingle is the
     * fold's dominant per-row cost; re-deriving it per consumer triples
-    * it). Cached here and unpersisted on return; a caller-checkpointed
-    * frame stays valid. */
+    * it). They are read as handed in (the callers hand over a local
+    * checkpoint); only sets derived here are cached, and released on
+    * return. */
   def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       threshold: Double, w: Int = 3,
       hotThreshold: Long = 100000L, tiles: Int = 8,
@@ -103,8 +104,9 @@ object Dedup {
     require(math.abs(tNum / tDen.toDouble - threshold) < 1e-12,
       s"threshold must be exact at 6 decimals, got $threshold")
 
-    val sets = precomputedSets
-      .getOrElse(shingleSets(docs, idCol, textCol, w)).cache()
+    val own = Option.when(precomputedSets.isEmpty)(
+      shingleSets(docs, idCol, textCol, w).cache())
+    val sets = precomputedSets.orElse(own).get
     val exploded = sets.select(col("id"), col("n"), explode(col("hs")).as("sh"))
 
     // Global document frequency per shingle → rarest-first order.
@@ -146,7 +148,7 @@ object Dedup {
       .distinct()
 
     Materialize("dedup:jaccard_pairs:verify",
-      verify(cand, sets).filter(col("jac") >= threshold), sets)
+      verify(cand, sets).filter(col("jac") >= threshold), own.toSeq: _*)
   }
 
   /** Exact Jaccard of candidate pairs: two array lookups per pair + a
@@ -568,14 +570,16 @@ object Dedup {
     * generation (band-key equi-join, index side never re-enumerated,
     * index rows with batch ids anti-joined away so replays never match
     * a document to itself) and the same exact sorted-intersect
-    * verification. The returned frame is materialized; the batch-side
-    * shingle cache is released before returning. */
+    * verification. The returned frame is materialized. Handed-in
+    * `precomputedSets` are read as they are; batch sets shingled here
+    * are cached and released before returning. */
   def crossSplitPairsIndexed(indexBands: DataFrame, indexSets: DataFrame,
       batch: DataFrame, idCol: String, textCol: String, threshold: Double,
       k: Int = 32, bands: Int = 16, w: Int = 3,
       precomputedSets: Option[DataFrame] = None): DataFrame = {
-    val bSets = precomputedSets
-      .getOrElse(shingleSets(batch, idCol, textCol, w)).cache()
+    val own = Option.when(precomputedSets.isEmpty)(
+      shingleSets(batch, idCol, textCol, w).cache())
+    val bSets = precomputedSets.orElse(own).get
     val bBands = bandTable(minhashSignatureSets(bSets, k),
       bands, k / bands)
     val cand = indexBands
@@ -595,7 +599,7 @@ object Dedup {
         (col("inter").cast("double") /
           (col("ni") + col("nj") - col("inter"))).as("jac"))
     Materialize("dedup:cross_split_indexed:verify",
-      withJac.filter(col("jac") >= threshold), bSets)
+      withJac.filter(col("jac") >= threshold), own.toSeq: _*)
   }
 
   /** MinHash-LSH near-dup pipeline: shingle → signature → banded
@@ -705,8 +709,7 @@ object Dedup {
   /** 60-bit SimHash per doc over distinct whitespace tokens: bit j is
     * the sign of Σ_tokens (±1 by bit j of hash(token)). Fused one-pass
     * expression ([[graft.functions.SimHash60]]) — a zero-shuffle
-    * projection of the corpus scan; requires
-    * [[graft.functions.GraftFunctions.register]] on the session. */
+    * projection of the corpus scan. */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("id"),
       graft.functions.GraftFunctions

@@ -115,7 +115,6 @@ object Listing {
     * so the two forms agree for every delimiter, multi-character
     * included.
     *
-    * Requires [[graft.functions.GraftFunctions.register]] (inc_prefix).
     * The requests side is broadcast: a request batch is bounded (API
     * frontends batch at most thousands of in-flight listings) while
     * `objects` is the 100 TB side — never shuffle the big side for a

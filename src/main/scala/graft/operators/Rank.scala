@@ -71,20 +71,10 @@ object Rank {
     * the rule's full rewrite, and nothing here mutates session conf
     * (the r19 `excludedRules` read-modify-write raced concurrent
     * callers and outlived the query — ADVICE r19). */
-  def boundedGlobal(s: org.apache.spark.sql.SparkSession,
-      orderCols: Column*): org.apache.spark.sql.expressions.WindowSpec = {
-    // the key resolves through the session's function registry at
-    // analysis time; register only when absent (a blanket re-register
-    // per call would WARN-spam "function replaced" — the noise the
-    // declared-bounded key exists to remove)
-    if (!s.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(
-          "bounded_global_key"))) {
-      graft.functions.GraftFunctions.register(s)
-    }
+  def boundedGlobal(orderCols: Column*)
+      : org.apache.spark.sql.expressions.WindowSpec =
     Window.partitionBy(graft.functions.GraftFunctions.boundedGlobalKey())
       .orderBy(orderCols: _*)
-  }
 
   /** `df` + `outCol` = the exact 1-based global `row_number() OVER
     * (ORDER BY vCol, idCol)`, computed with the three-level bounded
@@ -109,7 +99,7 @@ object Rank {
     val baseV = hist
       .withColumn("_rk_basev",
         coalesce(sum("_rk_c").over(
-          boundedGlobal(df.sparkSession, col("_rk_v"))
+          boundedGlobal(col("_rk_v"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("_rk_v").as(vCol), col("_rk_basev"))
     // level 2: per-(v, g) counts, exclusive prefix within each tie set

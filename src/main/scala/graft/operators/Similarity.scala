@@ -21,8 +21,7 @@ import graft.functions.GraftFunctions
   * reproducible by the oracle.
   *
   * Hot loop: the int64 dot product is a native codegen'd Catalyst
-  * expression ([[graft.functions.LongArrayDot]]) — callers must run
-  * [[GraftFunctions.register]] on the session once.
+  * expression ([[graft.functions.LongArrayDot]]).
   */
 object Similarity {
 

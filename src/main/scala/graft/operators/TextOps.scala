@@ -116,9 +116,7 @@ object TextOps {
     // native char_grams kernel: the HOF spelling paid an interpreted
     // lambda + a sliced-string allocation per (word × length ×
     // position) — millions per corpus scan; equivalence (order
-    // included) pinned in TextOpsSpec. register() is idempotent-guarded
-    // (some callers reach here without having registered).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+    // included) pinned in TextOpsSpec.
     docs.select(explode(tokens(col("text"))).as("wd"))
       .select(explode(graft.functions.GraftFunctions
         .charGrams(col("wd"), SubwordMinGram, SubwordMaxGram)).as("gram"))
@@ -358,8 +356,7 @@ object TextOps {
     md5(encode(normText(text), "UTF-8"))
 
   /** 64-bit rolling polynomial fingerprint of the normal form
-    * ([[graft.functions.RollingHash]]; needs
-    * [[graft.functions.GraftFunctions.register]] on the session). */
+    * ([[graft.functions.RollingHash]]). */
   def rollFingerprint(text: Column): Column =
     call_function("rolling_hash", normText(text))
 

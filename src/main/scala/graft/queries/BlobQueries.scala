@@ -26,14 +26,12 @@ object BlobQueries {
 
     // D2 aggregate path: custom TypedImperativeAggregate.
     "d2_chunked_md5_agg" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Tables.chunks(s, d)
           .groupBy("inode")
           .agg(GraftFunctions.chunkedMd5(col("offset"), col("payload"))
             .as("checksum"))
-          .orderBy("inode")
-      },
+          .orderBy("inode"),
       Some(
         """SELECT doc_id AS inode, md5(text) AS checksum
           |FROM documents ORDER BY inode""".stripMargin),

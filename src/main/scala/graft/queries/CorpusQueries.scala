@@ -82,8 +82,7 @@ object CorpusQueries {
       .withColumn("_bkt", substring(col("k"), 1, 2))
     val wLocal = Window.partitionBy("_bkt").orderBy("k", "doc_id")
     // 256-row bucket-count window: declared-bounded constant partition
-    val wBase = graft.operators.Rank
-      .boundedGlobal(docs.sparkSession, col("_bkt"))
+    val wBase = graft.operators.Rank.boundedGlobal(col("_bkt"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val bases = keyed.groupBy("_bkt").agg(count(lit(1)).as("_c"))
       .withColumn("_base", coalesce(sum(col("_c")).over(wBase), lit(0L)))
@@ -264,7 +263,6 @@ object CorpusQueries {
     // shard SQL over the recursive-CTE tokenizer replay.
     "ds_token_shards_subword" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val vocab = graft.sources.Models.subwordVocabSeq(s, d)
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
@@ -438,7 +436,6 @@ object CorpusQueries {
     // cluster's content was rejected).
     "ds_daily_pipeline" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val gated = docs.filter(TextOps.ingestGate(col("text")))
         // feeds LM scoring AND token counts
@@ -709,8 +706,7 @@ object CorpusQueries {
         val wLocal = Window.partitionBy("tier", "_bkt")
           .orderBy("k", "doc_id")
         // (tier, bucket)-count window (≤ 8·256 rows): declared-bounded
-        val wBase = graft.operators.Rank
-          .boundedGlobal(s, col("tier"), col("_bkt"))
+        val wBase = graft.operators.Rank.boundedGlobal(col("tier"), col("_bkt"))
           .rowsBetween(Window.unboundedPreceding, -1)
         val bases = keyed.groupBy("tier", "_bkt")
           .agg(count(lit(1)).as("_c"))

@@ -323,22 +323,18 @@ object DedupQueries {
 
     // Prefix-filtered similarity join == brute-force pairwise >= 0.5.
     "dd_jaccard_pairs" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.jaccardPairs(
-          Tables.documents(s, d), "doc_id", "text", 0.5).orderBy("i", "j")
-      },
+          Tables.documents(s, d), "doc_id", "text", 0.5).orderBy("i", "j"),
       Some(pairwiseJaccardSql("0.5")),
       doc = "n-gram Jaccard near-dup: prefix-filtered inverted-index " +
         "join + exact verify (All-Pairs/SSJoin)"),
 
     // MinHash-LSH banding + exact verify == brute-force pairwise >= 0.8.
     "dd_minhash_lsh" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.minhashDedup(
-          Tables.documents(s, d), "doc_id", "text", 0.8).orderBy("i", "j")
-      },
+          Tables.documents(s, d), "doc_id", "text", 0.8).orderBy("i", "j"),
       Some(pairwiseJaccardSql("0.8")),
       doc = "MinHash(k=32) + LSH(16 bands x 2 rows) candidates, " +
         "exact-Jaccard verified at 0.8"),
@@ -349,7 +345,6 @@ object DedupQueries {
     // the transitive closure with a recursive CTE.
     "dd_clusters" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
           .select("i", "j")
@@ -436,7 +431,6 @@ object DedupQueries {
     // near-dup cluster (min doc_id), with the cluster size it absorbs.
     "dd_survivors" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
           .select("i", "j")
@@ -460,7 +454,6 @@ object DedupQueries {
     // co-partitioned behind one shuffle.
     "dd_dup_weights" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 0.5)
           .select("i", "j")
@@ -499,7 +492,6 @@ object DedupQueries {
     // the cross-split members of the planted near-dup clusters.
     "dd_decontaminate" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         Dedup.contamination(
@@ -533,7 +525,6 @@ object DedupQueries {
     // cross-split pairwise Jaccard, so the oracle is the brute join.
     "dd_incremental" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         Dedup.incrementalDedup(
@@ -557,7 +548,6 @@ object DedupQueries {
     // never moves, the batch does.
     "dd_incremental_indexed" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         val (bands, sets) = graft.sources.Models.lshIndex(
@@ -584,8 +574,7 @@ object DedupQueries {
     // iff the fold really produced the whole index.
     "dd_incremental_append" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        val tmp = TextQueries.foldTempDir("graft_lsh_fold")
+        val tmp = SourceQueries.tempDir("graft_lsh_fold")
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         // base band + shingle-set artifacts from the MEMOIZED scene
@@ -629,8 +618,7 @@ object DedupQueries {
     // labels, which only the remap layer can express).
     "dd_map_append" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
-        val tmp = TextQueries.foldTempDir("graft_map_fold")
+        val tmp = SourceQueries.tempDir("graft_map_fold")
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         // third-sized base + a ~17% fold batch: the gate's content is
@@ -712,7 +700,6 @@ object DedupQueries {
     // contract; the oracle rebuilds the identical filter.
     "dd_bloom_probe" -> QueryDef(
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         Dedup.bloomProbe(
@@ -767,12 +754,10 @@ object DedupQueries {
     // chars, so DuckDB replays the identical signature, banding, and
     // popcount verify (generated SQL; constants can't drift).
     "dd_simhash" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.simhashPairs(
           Dedup.simhash(Tables.documents(s, d), "doc_id", "text"))
-          .orderBy("i", "j")
-      },
+          .orderBy("i", "j"),
       Some(simhashOracleSql(3)),
       doc = "SimHash-60 near-dup: 4x15-bit band blocking + popcount verify"),
 
@@ -783,12 +768,10 @@ object DedupQueries {
     // pairwise containment, so the hash match proves the prefix filter
     // loses nothing.
     "dd_containment" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.containmentPairs(Tables.documents(s, d), "doc_id", "text",
           ContainTNum, ContainTDen)
-          .orderBy("i", "j")
-      },
+          .orderBy("i", "j"),
       Some(
         s"""WITH $shingleCtes
            |SELECT a.doc_id AS i, b.doc_id AS j,
@@ -811,10 +794,8 @@ object DedupQueries {
     // aggregate (source, digest) counts, map-side combined. Equal
     // digests imply equal lengths, so the two-level aggregate is exact.
     "dd_cdc_chunks" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.cdcChunks(Tables.documents(s, d), "text")
-      }
         .groupBy(col("source"), col("chunk_digest"))
         .agg(min("chunk_len").as("clen"), count(lit(1)).as("cnt"))
         .groupBy("source")
@@ -852,12 +833,10 @@ object DedupQueries {
     // character mass. Digest self-join is skew-tiled (boilerplate
     // chunks are hot keys by construction).
     "dd_cdc_cross" -> QueryDef(
-      (s, d) => {
-        graft.functions.GraftFunctions.register(s)
+      (s, d) =>
         Dedup.cdcCross(Tables.documents(s, d), "doc_id", "text",
           minShared = CdcCrossMinShared, minLen = CdcCrossMinLen)
-          .orderBy("i", "j")
-      },
+          .orderBy("i", "j"),
       Some(
         s"""WITH $cdcSegCtes,
            |ch AS (SELECT DISTINCT s.doc_id,

@@ -17,11 +17,10 @@ object MetaQueries {
 
     // ---- D1/B1/B2/G1/G3/F1/F2: the ListObjects kernel -------------------
     "d1_list_prefixes" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Listing.entries(Tables.objects(s, d), "src1",
-          ListParams(prefix = Some("en/"), delimiter = Some("/"), maxKeys = 100))
-      },
+          ListParams(prefix = Some("en/"), delimiter = Some("/"),
+            maxKeys = 100)),
       Some(withCtes(
         """SELECT * FROM (SELECT * FROM keys UNION ALL SELECT * FROM prefixes)
           |ORDER BY entry LIMIT 101""".stripMargin,
@@ -41,11 +40,9 @@ object MetaQueries {
       doc = "meta.clj:230-251 get-prefixes, delimiter grouping"),
 
     "d1_list_page_truncated" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Listing.entries(Tables.objects(s, d), "src1",
-          ListParams(prefix = None, delimiter = Some("/"), maxKeys = 3))
-      },
+          ListParams(prefix = None, delimiter = Some("/"), maxKeys = 3)),
       Some(withCtes(
         """SELECT * FROM (
           |  SELECT object AS entry, 'key' AS kind FROM objects
@@ -63,7 +60,6 @@ object MetaQueries {
     // ---- D1 batched: runtime-parameter listings as one join plan --------
     "d1_list_batch" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         import s.implicits._
         val requests = Seq(
           (1, "src1", "en/", "/", "", 100), // delimiter grouping
@@ -121,11 +117,9 @@ object MetaQueries {
       doc = "meta.clj:285-290 per-request params as one join plan (batched D1)"),
 
     "d1_list_nodelim_marker" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Listing.entries(Tables.objects(s, d), "src3",
-          ListParams(marker = Some("en/"), maxKeys = 50))
-      },
+          ListParams(marker = Some("en/"), maxKeys = 50)),
       Some(withCtes(
         """SELECT object AS entry, 'key' AS kind FROM objects
           |WHERE bucket = 'src3' AND object > 'en/'
@@ -135,15 +129,13 @@ object MetaQueries {
 
     // ---- A6: range scan with inc_prefix upper bound ---------------------
     "a6_range_scan" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Tables.objects(s, d)
           .filter(col("bucket") === "src2" &&
             col("object") >= "es/" &&
             col("object") < GraftFunctions.incPrefix(lit("es/")))
           .select("object", "size", "checksum")
-          .orderBy("object").limit(25)
-      },
+          .orderBy("object").limit(25),
       Some(withCtes(
         """SELECT object, size, checksum FROM objects
           |WHERE bucket = 'src2' AND object >= 'es/' AND object < 'es0'
@@ -270,14 +262,12 @@ object MetaQueries {
 
     // ---- H1: inc_prefix as a Catalyst expression ------------------------
     "h1_inc_prefix" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Tables.objects(s, d)
           .select(regexp_extract(col("object"), "^([^/]*/).*$", 1).as("prefix"))
           .filter(col("prefix") =!= "").distinct()
           .withColumn("upper_bound", GraftFunctions.incPrefix(col("prefix")))
-          .orderBy("prefix")
-      },
+          .orderBy("prefix"),
       Some(withCtes(
         """SELECT DISTINCT regexp_extract(object, '^([^/]*/).*$', 1) AS prefix,
           |  left(regexp_extract(object, '^([^/]*/).*$', 1),

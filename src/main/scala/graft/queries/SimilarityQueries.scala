@@ -561,7 +561,6 @@ object SimilarityQueries {
     // Brute-force cosine top-5 for 10 query vectors.
     "sim_topk_brute" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
         Similarity.topK(prep, prep.filter(col("id") < 10), 5)
@@ -585,12 +584,10 @@ object SimilarityQueries {
 
     // Exact embedding near-duplicate pairs at cosine >= 0.4.
     "sim_cosine_neardup" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.nearDupPairs(
           Similarity.prepared(Tables.embeddings(s, d), "vec_id", "embedding"),
-          0.4).orderBy("i", "j")
-      },
+          0.4).orderBy("i", "j"),
       Some(
         s"""WITH $duckPrep
            |SELECT a.vec_id AS i, b.vec_id AS j,
@@ -605,12 +602,10 @@ object SimilarityQueries {
     // SRP-LSH bucketed ANN — integer planes make the blocking exactly
     // reproducible, so even the approximate path is hash-checked.
     "sim_ann_lsh" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.annLsh(
           Tables.embeddings(s, d), "vec_id", "embedding", 5, dim = 64)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(annOracleSql(5, 32, 4)),
       doc = "random-hyperplane LSH blocking (32 bits, 4x8-bit bands) + " +
         "exact rescoring, top-5 per vector"),
@@ -624,7 +619,6 @@ object SimilarityQueries {
     // count is one left join on (qid, nid).
     "sim_ann_recall" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding").cache()
         val brute = Similarity.topK(prep, prep.filter(col("id") < 50), 5)
@@ -651,12 +645,10 @@ object SimilarityQueries {
     // cosine >= 0.4 — the scalable (recall < 1 by design) counterpart of
     // the exact sim_cosine_neardup; never all pairs.
     "sim_neardup_blocked" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.nearDupPairsBlocked(
           Tables.embeddings(s, d), "vec_id", "embedding", 0.4, dim = 64)
-          .orderBy("i", "j")
-      },
+          .orderBy("i", "j"),
       Some(neardupBlockedOracleSql(0.4, 32, 4)),
       doc = "SRP-banded near-dup pairs (32 bits, 4x8-bit bands) + exact " +
         "rescoring at cosine >= 0.4 — the 100 TB near-dup gate"),
@@ -667,7 +659,6 @@ object SimilarityQueries {
     // sources compose.
     "sim_neardup_survivors" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val embs = Tables.embeddings(s, d)
         val pairs = Similarity.nearDupPairsBlocked(
           embs, "vec_id", "embedding", 0.4, dim = 64).select("i", "j")
@@ -686,13 +677,11 @@ object SimilarityQueries {
     // Lloyd iterations, probe 4 cells, top-5 — integer centroids keep
     // the whole refined index replayable by the oracle.
     "sim_ivf_topk" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.ivfTopK(
           Tables.embeddings(s, d), "vec_id", "embedding", 5,
           queryLimit = 10L, nList = 16, nProbe = 4, refineIters = 2)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(ivfOracleSql(5, 10, 16, 4, 2)),
       doc = "IVF ANN: 16-cell coarse quantizer + 2 Lloyd iterations " +
         "(exact trunc-div integer centroids), 4-cell probe, exact " +
@@ -706,7 +695,6 @@ object SimilarityQueries {
     // SQL — the hash match proves reload == retrain).
     "sim_ivf_indexed" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val cents = graft.sources.Models.ivfCentroids(s, d, 16, 2)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding").cache()
@@ -727,12 +715,10 @@ object SimilarityQueries {
     // Exact int64 end to end — encoding, LUTs, and the summed ad2 all
     // hash-match the oracle with no float handling at all.
     "sim_pq_adc" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.pqTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           5, queryLimit = 10L)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(
         """WITH q AS (
           |  SELECT vec_id,
@@ -773,12 +759,10 @@ object SimilarityQueries {
     // hash-matches the oracle like PQ does; the whole model is 2 ints
     // per dimension broadcast as one row.
     "sim_sq8" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.sqTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           5, queryLimit = 10L)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(
         """WITH q AS (
           |  SELECT vec_id,
@@ -820,13 +804,11 @@ object SimilarityQueries {
     // enumeration is skew-guarded — the semantic-dedup pass a 100 TB
     // training pipeline runs after exact + near-dup text dedup.
     "dd_semdedup" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.semDedup(
           Tables.embeddings(s, d), "vec_id", "embedding", 0.4,
           nList = 16, refineIters = 2)
-          .orderBy("vec_id")
-      },
+          .orderBy("vec_id"),
       Some(semDedupOracleSql(0.4, 16, 2)),
       doc = "SemDedup semantic dedup: IVF cells (16, 2 Lloyd iters) + " +
         "within-cell lower-id drop at cosine >= 0.4"),
@@ -838,7 +820,6 @@ object SimilarityQueries {
     // result, identical oracle.
     "dd_semdedup_indexed" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val cents = graft.sources.Models.ivfCentroids(s, d, 16, 2)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding").cache()
@@ -857,26 +838,22 @@ object SimilarityQueries {
     // nList=16, dies at sqrt(n)": the broadcast-centroid form must stay
     // oracle-green, not merely plannable, when nList is 64x wider.
     "sim_ivf_wide" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.ivfTopK(
           Tables.embeddings(s, d), "vec_id", "embedding", 5,
           queryLimit = 10L, nList = 1024, nProbe = 4, refineIters = 1)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(ivfOracleSql(5, 10, 1024, 4, 1)),
       doc = "IVF ANN at wide nList (1024 cells, 1 Lloyd iter): the " +
         "broadcast-centroid scale path oracle-checked at sqrt(n)-class " +
         "cell counts"),
 
     "dd_semdedup_wide" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.semDedup(
           Tables.embeddings(s, d), "vec_id", "embedding", 0.4,
           nList = 1024, refineIters = 1)
-          .orderBy("vec_id")
-      },
+          .orderBy("vec_id"),
       Some(semDedupOracleSql(0.4, 1024, 1)),
       doc = "SemDedup at wide nList (1024 cells, 1 Lloyd iter): " +
         "within-cell drop rule at sqrt(n)-class cell counts"),
@@ -890,7 +867,6 @@ object SimilarityQueries {
     // assignment pass, and the only double is the final milli rendering.
     "sim_ivf_stats" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
         val cents = Similarity.refinedCentroids(prep, 16, 2)
@@ -916,12 +892,10 @@ object SimilarityQueries {
     // the oracle replays the Lloyd-refined quantizer, every residual,
     // every code assignment, and every asymmetric distance.
     "sim_ivfpq" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.ivfPqTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           k = 5, queryLimit = 10L)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(ivfPqOracleSql(k = 5, queryLimit = 10, nList = 16, nProbe = 4,
         iters = 2, m = 8, ksub = 16)),
       doc = "IVF-PQ ANN: Lloyd-refined coarse cells + residual product " +
@@ -940,7 +914,6 @@ object SimilarityQueries {
     // retrain for all three artifacts at once.
     "sim_ivfpq_indexed" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
@@ -966,7 +939,6 @@ object SimilarityQueries {
     // ground truth are exact-int, so the recall itself hash-matches.
     "sim_ivfpq_recall" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
@@ -998,7 +970,6 @@ object SimilarityQueries {
     // ModelsSpec's daily-loop test.
     "sim_ivfpq_append" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val h = md5(encode(col("vec_id").cast("string"), "UTF-8"))
         val embs = Tables.embeddings(s, d)
         val old = Similarity.prepared(embs.filter(h < "cc"),
@@ -1049,8 +1020,7 @@ object SimilarityQueries {
     // the new quantizer's LUTs would mis-rank and fail the gate).
     "sim_ivfpq_rebuild" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
-        val tmp = TextQueries.foldTempDir("graft_ivfpq_rebuild")
+        val tmp = SourceQueries.tempDir("graft_ivfpq_rebuild")
         val embs = Tables.embeddings(s, d)
         val h = md5(encode(col("vec_id").cast("string"), "UTF-8"))
         // base + one fold build the STALE pre-rebuild state (a
@@ -1111,7 +1081,6 @@ object SimilarityQueries {
     // a reload==retrain proof across every cell.
     "sim_ivfpq_sweep" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
@@ -1179,12 +1148,10 @@ object SimilarityQueries {
     // bits); sign-explicit shifted projections keep every coordinate
     // exact int64, so the whole path hash-matches the replay.
     "sim_rp_topk" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.rpTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           k = 5, queryLimit = 10L)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(rpCtes(queryLimit = 10, kDim = 32, rerank = 150, seed = 11L) +
         """
           |SELECT qid, nid, d2, CAST(rank AS INT) AS rank FROM (
@@ -1201,7 +1168,6 @@ object SimilarityQueries {
     // hash-deterministic end to end.
     "sim_rp_recall" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()
@@ -1224,12 +1190,10 @@ object SimilarityQueries {
     // over the collected pool per query; the oracle unrolls all five
     // steps, so every selection decision is hash-pinned.
     "sim_mmr" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Similarity.mmrTopK(Tables.embeddings(s, d), "vec_id", "embedding",
           k = 5, poolN = 20, queryLimit = 10L)
-          .orderBy("qid", "rank")
-      },
+          .orderBy("qid", "rank"),
       Some(mmrOracleSql(k = 5, poolN = 20, queryLimit = 10)),
       doc = "MMR diversified retrieval: top-20 exact pool, greedy " +
         "relevance-minus-redundancy selection, oracle replays each step"),
@@ -1245,7 +1209,6 @@ object SimilarityQueries {
     // two retrievers.
     "sim_mmr_ivfpq" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val prep = Similarity.prepared(
           Tables.embeddings(s, d), "vec_id", "embedding")
           .filter(size(col("qv")) === 64).cache()

@@ -16,19 +16,23 @@ object SourceQueries {
     * keeps the oracle's `read_blob` path and ours identical. */
   private val BinDir = "/root/testdata/sf0.001"
 
-  /** Temp dir for a round-trip demo, recursively deleted on JVM exit so
-    * repeated harness runs don't accumulate dataset copies under /tmp. */
-  private def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  /** Run-private temp dir (a round-trip demo, a fold or maintenance
+    * gate), recursively deleted on JVM exit so repeated harness runs
+    * don't accumulate dataset copies under /tmp. */
+  private[queries] def tempDir(prefix: String): String =
+    deleteAtExit(java.nio.file.Files.createTempDirectory(prefix).toString)
+
+  /** Recursively delete `dir` at JVM exit; returns `dir`. */
+  private[queries] def deleteAtExit(dir: String): String = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
+      import java.nio.file.{Files, Path, Paths}
+      val p = Paths.get(dir)
       if (Files.exists(p)) {
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
+        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
           .forEach(f => { val _ = Files.deleteIfExists(f) })
       }
     }))
-    p.toString
+    dir
   }
 
   val defs: Map[String, QueryDef] = Map(

@@ -46,6 +46,25 @@ object TextQueries {
           .as("mean_df"))
       .orderBy("doc_id")
 
+  /** DuckDB replay of [[rarityPlan]] — ONE spelling for `tx_rarity`
+    * (df derived per run) and `tx_rarity_indexed` (persisted df): the
+    * oracle always retrains, so the indexed entry's match proves
+    * reload == retrain. */
+  private val rarityOracleSql =
+    """WITH w AS (
+      |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
+      |  FROM documents),
+      |df AS (
+      |  SELECT tok, count(*) AS df FROM (
+      |    SELECT unnest(list_distinct(w)) AS tok FROM w)
+      |  GROUP BY tok),
+      |occ AS (SELECT doc_id, unnest(w) AS tok FROM w)
+      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+      |  CAST(CAST(sum(df) AS BIGINT) AS DOUBLE)
+      |    / CAST(count(*) AS DOUBLE) AS mean_df
+      |FROM occ JOIN df USING (tok)
+      |GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
   /** BM25 retrieval (Robertson/Spärck Jones; k1=1.2, b=0.75) — the
     * lexical ranking a training-data platform runs for targeted corpus
     * queries (find documents about X for curation/inspection). Scores
@@ -67,11 +86,20 @@ object TextQueries {
     * the global top-k (`TakeOrderedAndProject`). */
   def bm25With(docs: DataFrame, df: DataFrame, qTerms: DataFrame,
       k: Int = 20): DataFrame = {
-    val lens = docs.select(col("doc_id"), size(col("w")).cast("long").as("dl"))
-    val tot = lens.agg(count(lit(1)).as("nn"), sum("dl").as("s"))
     val tf = docs.select(col("doc_id"), explode(col("w")).as("tok"))
       .join(broadcast(qTerms.select("tok")), "tok")
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+    bm25Score(tf, df,
+      docs.select(col("doc_id"), size(col("w")).cast("long").as("dl")), k)
+  }
+
+  /** The BM25 arithmetic and top-`k` cut over query-term `(doc_id, tok,
+    * tf)` rows, the `(tok, df)` table and the `(doc_id, dl)` lengths —
+    * one spelling for the retrain ([[bm25With]]) and artifact-served
+    * ([[bm25FromArtifacts]]) entries. */
+  private def bm25Score(tf: DataFrame, df: DataFrame, lens: DataFrame,
+      k: Int): DataFrame = {
+    val tot = lens.agg(count(lit(1)).as("nn"), sum("dl").as("s"))
     tf
       .join(broadcast(df), "tok")
       .join(lens, "doc_id")
@@ -99,8 +127,8 @@ object TextQueries {
 
   /** BM25 served ENTIRELY from the persisted retrieval artifacts of
     * `corpusDir` — tf from the tok-bucketed postings, dl from the
-    * stored length table, df/q from the stored df table; the identical
-    * arithmetic spelling as [[bm25With]]. */
+    * stored length table, df/q from the stored df table; scored by the
+    * same [[bm25Score]] as [[bm25With]]. */
   def bm25FromArtifacts(s: org.apache.spark.sql.SparkSession,
       corpusDir: String): DataFrame = {
     // first use on a corpus: derive all three artifacts in ONE
@@ -108,40 +136,8 @@ object TextQueries {
     graft.sources.Models.buildRetrievalArtifacts(s, corpusDir)
     val df = graft.sources.Models.dfTable(s, corpusDir)
     val lens = graft.sources.Models.docLens(s, corpusDir)
-    val tot = lens.agg(count(lit(1)).as("nn"), sum("dl").as("s"))
-    graft.sources.Models.postings(s, corpusDir)
-      .join(broadcast(bm25QueryTerms(df)), "tok")
-      .join(broadcast(df), "tok")
-      .join(lens, "doc_id")
-      .crossJoin(broadcast(tot))
-      .withColumn("idf",
-        log((lit(2L) * (col("nn") - col("df")) + lit(1L)).cast("double")) -
-          log((lit(2L) * col("df") + lit(1L)).cast("double")))
-      .withColumn("t",
-        col("idf") * (col("tf").cast("double") * lit(2.2)) /
-          (col("tf").cast("double") + (lit(0.3) + lit(0.9) *
-            ((col("dl") * col("nn")).cast("double") /
-              col("s").cast("double")))))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hits"), sum("t").as("sc"))
-      .select(col("doc_id"), col("n_hits"), round(col("sc"), 4).as("score"))
-      .orderBy(col("score").desc, col("doc_id")).limit(20)
-  }
-
-  /** Run-private temp dir, reclaimed on JVM exit (same contract as
-    * SourceQueries' round-trip demos; shared with DedupQueries'
-    * fold-gate entry). */
-  private[queries] def foldTempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      if (Files.exists(p)) {
-        Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => { val _ = Files.deleteIfExists(f) })
-      }
-    }))
-    p.toString
+    bm25Score(graft.sources.Models.postings(s, corpusDir)
+      .join(broadcast(bm25QueryTerms(df)), "tok"), df, lens, 20)
   }
 
   /** The scripted maintenance DAY the two ledger queries share
@@ -157,16 +153,15 @@ object TextQueries {
     * with the right counts — is the LEDGER, which every read replays
     * against the same oracle. The artifacts stay alive for the JVM
     * (bench passes re-read them) and are reclaimed at JVM exit: the
-    * temp dir by [[foldTempDir]]'s hook, the model root (which lives
-    * under the models base, keyed by this dir) by the hook added
-    * here. */
+    * temp dir and the model root (which lives under the models base,
+    * keyed by this dir) both by [[SourceQueries.deleteAtExit]]. */
   private val maintDayDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private def maintDay(s: org.apache.spark.sql.SparkSession,
       d: String): String =
     maintDayDirs.computeIfAbsent(d, _ => {
-      val tmp = foldTempDir("graft_maint_day")
+      val tmp = SourceQueries.tempDir("graft_maint_day")
       val docs = Tables.documents(s, d)
       val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
       graft.sources.MaintenanceLog.enable(graft.sources.Models.root(tmp))
@@ -183,18 +178,7 @@ object TextQueries {
         "doc_id", "text", dedupeIds = true)
       graft.sources.Models.compactRetrievalIndexes(s, tmp)
       graft.sources.Models.vacuum(s, tmp, minAgeMs = 0L)
-      val mroot = graft.sources.Models.root(tmp)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        val p = java.nio.file.Paths.get(mroot)
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator
-              .reverseOrder[java.nio.file.Path]())
-            .forEach(f => {
-              val _ = java.nio.file.Files.deleteIfExists(f)
-            })
-        }
-      }))
+      SourceQueries.deleteAtExit(graft.sources.Models.root(tmp))
       tmp
     })
 
@@ -607,8 +591,7 @@ object TextQueries {
         // single-partition window over the K-row TakeOrdered result —
         // bounded by SubwordVocabK, never corpus-sized; declared so
         // via the constant partition key (Rank.boundedGlobal)
-        val w = graft.operators.Rank
-          .boundedGlobal(s, col("cnt").desc, col("gram"))
+        val w = graft.operators.Rank.boundedGlobal(col("cnt").desc, col("gram"))
         TextOps.subwordVocab(Tables.documents(s, d))
           .withColumn("rank", row_number().over(w).cast("int"))
           .select("rank", "gram", "cnt")
@@ -632,7 +615,6 @@ object TextQueries {
     // exchange before the final sort (PlanSpec pin).
     "tx_subword_tokens" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val vocab = graft.sources.Models.subwordVocabSeq(s, d)
         Tables.documents(s, d)
           .select(col("doc_id"),
@@ -955,20 +937,7 @@ object TextQueries {
           .cache()
         Materialize("text:tx_rarity:score", rarityPlan(docs), docs)
       },
-      Some(
-        """WITH w AS (
-          |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-          |  FROM documents),
-          |df AS (
-          |  SELECT tok, count(*) AS df FROM (
-          |    SELECT unnest(list_distinct(w)) AS tok FROM w)
-          |  GROUP BY tok),
-          |occ AS (SELECT doc_id, unnest(w) AS tok FROM w)
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-          |  CAST(CAST(sum(df) AS BIGINT) AS DOUBLE)
-          |    / CAST(count(*) AS DOUBLE) AS mean_df
-          |FROM occ JOIN df USING (tok)
-          |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      Some(rarityOracleSql),
       doc = "corpus-relative rarity: mean token document frequency per " +
         "doc (boilerplate scores high, noise scores low)"),
 
@@ -984,20 +953,7 @@ object TextQueries {
           .select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
         rarityScoreWith(docs, graft.sources.Models.dfTable(s, d))
       },
-      Some(
-        """WITH w AS (
-          |  SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS w
-          |  FROM documents),
-          |df AS (
-          |  SELECT tok, count(*) AS df FROM (
-          |    SELECT unnest(list_distinct(w)) AS tok FROM w)
-          |  GROUP BY tok),
-          |occ AS (SELECT doc_id, unnest(w) AS tok FROM w)
-          |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-          |  CAST(CAST(sum(df) AS BIGINT) AS DOUBLE)
-          |    / CAST(count(*) AS DOUBLE) AS mean_df
-          |FROM occ JOIN df USING (tok)
-          |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      Some(rarityOracleSql),
       doc = "rarity from the PERSISTED df table: derive once, " +
         "broadcast-score per run — oracle retrains from scratch"),
 
@@ -1056,7 +1012,7 @@ object TextQueries {
     // postings-only append would silently corrupt.
     "tx_bm25_append" -> QueryDef(
       (s, d) => {
-        val tmp = foldTempDir("graft_bm25_fold")
+        val tmp = SourceQueries.tempDir("graft_bm25_fold")
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         // base artifacts from the MEMOIZED scene (bit-identical to the
@@ -1095,7 +1051,7 @@ object TextQueries {
     // preserved every row.
     "maint_vacuum_cutover" -> QueryDef(
       (s, d) => {
-        val tmp = foldTempDir("graft_maint_vacuum")
+        val tmp = SourceQueries.tempDir("graft_maint_vacuum")
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         graft.sources.Scenes.cloneScene(s, d, "retr_cc", tmp,
@@ -1264,7 +1220,7 @@ object TextQueries {
     // fold→compact→serve lifecycle, not just the append half.
     "tx_bm25_compacted" -> QueryDef(
       (s, d) => {
-        val tmp = foldTempDir("graft_bm25_compact")
+        val tmp = SourceQueries.tempDir("graft_bm25_compact")
         val docs = Tables.documents(s, d)
         val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
         // base artifacts from the MEMOIZED "retr_cc" scene (shared
@@ -1640,7 +1596,6 @@ object TextQueries {
     // mainstream sketch an independent engine reproduces exactly).
     "tx_vocab_kmv" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         val k = 256
         val toks = Tables.documents(s, d)
           .select(col("source"),
@@ -1695,14 +1650,12 @@ object TextQueries {
         "(map-side partials), estimate vs exact on display"),
 
     "tx_fingerprint" -> QueryDef(
-      (s, d) => {
-        GraftFunctions.register(s)
+      (s, d) =>
         Tables.documents(s, d)
           .select(col("doc_id"),
             TextOps.mdFingerprint(col("text")).as("fp_md5"),
             TextOps.rollFingerprint(col("text")).as("fp_roll"))
-          .orderBy("doc_id")
-      },
+          .orderBy("doc_id"),
       Some(
         """SELECT doc_id, md5(norm) AS fp_md5,
           |  CAST(CASE WHEN fp >= 9223372036854775808::HUGEINT
@@ -1823,7 +1776,6 @@ object TextQueries {
     val srcs = Seq("src0", "src1", "src2", "src3")
     "tx_kmv_setops" -> QueryDef(
       (s, d) => {
-        GraftFunctions.register(s)
         // feeds sketches AND exact counts
         val hs = Materialize("text:tx_kmv_setops:shingles",
           Tables.documents(s, d)

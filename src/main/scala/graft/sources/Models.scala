@@ -754,7 +754,6 @@ object Models {
   def dedupMap(spark: SparkSession, sfDir: String,
       tPct: Int = 50): DataFrame =
     ensure(spark, dedupMapPath(sfDir, tPct)) {
-      graft.functions.GraftFunctions.register(spark)
       val docs = graft.Tables.documents(spark, sfDir)
       val pairs = Dedup
         .jaccardPairs(docs, "doc_id", "text", tPct / 100.0)

@@ -6,13 +6,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
+import graft.functions.GraftFunctions
 import graft.operators.Listing
 import graft.operators.Listing.ListParams
 
-/** SQL surface for the flagship listing operator (SURVEY §4 item 3):
-  * registers `list_objects(table, bucket, prefix, delimiter, marker,
-  * max_keys)` as a table-valued function, so the reference's
-  * `get-prefixes` listing (meta.clj:230-251) has a SQL spelling:
+/** Graft's SQL surface: every Catalyst function of
+  * [[graft.functions.GraftFunctions.builders]] (`ldot`, `pq_luts`,
+  * `minhash_sig`, `bounded_global_key`, …) and, for the flagship
+  * listing operator (SURVEY §4 item 3), `list_objects(table, bucket,
+  * prefix, delimiter, marker, max_keys)` as a table-valued function, so
+  * the reference's `get-prefixes` listing (meta.clj:230-251) has a SQL
+  * spelling:
   *
   * {{{
   * SELECT entry, kind
@@ -20,12 +24,14 @@ import graft.operators.Listing.ListParams
   * }}}
   *
   * Install with `SparkSession.builder.withExtensions(new
-  * GraftExtensions)` or `spark.sql.extensions=graft.sql.GraftExtensions`
-  * (both public Spark mechanisms — no internal registry access). The
-  * builder resolves the named table/view through the active session's
-  * catalog and returns [[Listing.entries]]' logical plan, so the SQL
-  * spelling and the Scala API share one kernel: same pushed range scan,
-  * same truncation contract (`max_keys + 1` rows), same plan shape.
+  * GraftExtensions)` (as [[GraftExtensions.localSession]] does) or
+  * `spark.sql.extensions=graft.sql.GraftExtensions` (both public Spark
+  * mechanisms); every session built so, `newSession()` children
+  * included, resolves the whole surface by name. `list_objects`
+  * resolves the named table/view through the active session's catalog
+  * and returns [[Listing.entries]]' logical plan, so the SQL spelling
+  * and the Scala API share one kernel: same pushed range scan, same
+  * truncation contract (`max_keys + 1` rows), same plan shape.
   *
   * CONTRACT: all six arguments must be foldable (literals or
   * constant-foldable expressions) — the plan is built at resolution
@@ -40,6 +46,10 @@ import graft.operators.Listing.ListParams
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftFunctions.builders.foreach { case (name, b) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), b))
+    }
     ext.injectTableFunction((
       FunctionIdentifier("list_objects"),
       new ExpressionInfo(classOf[GraftExtensions].getName, "list_objects"),
@@ -48,6 +58,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** The local session every graft main and the test suites run on:
+    * `local[cpus]` with as many shuffle partitions, UTC, no UI, graft's
+    * SQL surface installed, WARN logging; `conf` is applied last. */
+  def localSession(cpus: String, conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+    val s = conf.foldLeft(b) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Evaluate a foldable argument to its string value ("" for null). */
   private def strArg(e: Expression, name: String): String = {

@@ -25,7 +25,6 @@ class CodegenSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    GraftFunctions.register(spark)
   }
   override def afterAll(): Unit = {
     spark.conf.set("spark.sql.codegen.fallback", savedFallback)

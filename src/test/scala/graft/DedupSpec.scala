@@ -30,7 +30,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("native minhash_sig matches the exploded groupBy-min signature " +
       "(all 32 columns, incl. negative raw hashes)") {
-    graft.functions.GraftFunctions.register(spark)
     val k = 32
     val sets = Dedup.shingleSets(docs, "doc_id", "text")
     val native = Dedup.minhashSignatureSets(sets, k)
@@ -191,7 +190,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("incrementalDedup flags cross-split near-dups only, with canon id") {
-    graft.functions.GraftFunctions.register(spark)
     val other = "completely different words all over here my friend " +
       "nothing alike at all today"
     val index = Seq((0L, base), (2L, "some indexed but unrelated " +
@@ -213,7 +211,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("bloomProbe flags exactly the train docs sharing a held-out 5-gram") {
-    graft.functions.GraftFunctions.register(spark)
     val heldOut = Seq(
       (100L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
     val train = Seq(
@@ -260,5 +257,40 @@ class DedupSpec extends AnyFunSuite {
     val pairs = Dedup.simhashPairs(Dedup.simhash(docs, "doc_id", "text"))
       .as[(Long, Long, Int)].collect().map(p => (p._1, p._2)).toSet
     assert(pairs.contains((0L, 3L)))
+  }
+
+  // A caller's checkpointed shingle sets are read as handed in: caching
+  // them again would hold the batch's sets twice during the probe.
+  test("crossSplitPairsIndexed and jaccardPairs cache only the shingle " +
+      "sets they derive themselves") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val index = docs.filter($"doc_id" < 3)
+    val batch = docs.filter($"doc_id" >= 3)
+    val iSets = Dedup.shingleSets(index, "doc_id", "text").localCheckpoint(true)
+    val iBands = Dedup.bandTable(Dedup.minhashSignatureSets(iSets, 32), 16, 2)
+      .localCheckpoint(true)
+    val bSets = Dedup.shingleSets(batch, "doc_id", "text").localCheckpoint(true)
+    def cachedIn(run: => Unit): Seq[InMemoryRelation] =
+      Measure.executions(spark)(run)._2.flatMap(_.optimizedPlan.collect {
+        case r: InMemoryRelation => r
+      })
+    def wrapsBSets(r: InMemoryRelation) =
+      r.cacheBuilder.logicalPlan.sameResult(bSets.queryExecution.analyzed)
+    var pairs = Set.empty[(Long, Long)]
+    val handedIn = cachedIn {
+      pairs = Dedup.crossSplitPairsIndexed(iBands, iSets, batch, "doc_id",
+        "text", 0.5, precomputedSets = Some(bSets))
+        .select($"i", $"j").as[(Long, Long)].collect().toSet
+    } ++ cachedIn {
+      Dedup.jaccardPairs(batch, "doc_id", "text", 0.5,
+        precomputedSets = Some(bSets)).collect(); ()
+    }
+    assert(pairs.contains((0L, 3L)))
+    assert(!handedIn.exists(wrapsBSets), handedIn.mkString("\n"))
+    // without sets handed in, the function caches the ones it shingles
+    assert(cachedIn {
+      Dedup.crossSplitPairsIndexed(iBands, iSets, batch, "doc_id", "text",
+        0.5).collect(); ()
+    }.nonEmpty)
   }
 }

@@ -107,7 +107,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   test("pq_codes equals the array_min(transform(...)) HOF spelling, " +
       "ties to the smaller position") {
-    GraftFunctions.register(spark)
     // random-ish but deterministic vectors + a codebook with a
     // deliberate exact tie (two identical entries) to pin first-wins
     val dim = 16

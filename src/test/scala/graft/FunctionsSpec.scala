@@ -30,7 +30,6 @@ class FunctionsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
-    GraftFunctions.register(spark)
     // values 0..999 shuffled with every value duplicated, over many
     // partitions so map-side partials and merge() both execute
     val vals = scala.util.Random.shuffle((0L until 1000L) ++ (0L until 1000L))
@@ -97,5 +96,35 @@ class FunctionsSpec extends AnyFunSuite {
       == "/%E1%88%B4")
     assert(GraftFunctions.awsUriEncode("a b/c", keepSlash = false)
       == "a%20b%2Fc")
+  }
+
+  // The extension, not a register call, gives a session graft's SQL
+  // surface: a child session resolves every function and the registry
+  // builders that use them build and run there as they are.
+  test("a newSession() of an extension-built session resolves every " +
+      "graft function and builds the queries that use them") {
+    val s = TestSpark.spark.newSession()
+    val names = GraftFunctions.builders.map(_._1)
+    assert(names.size == 18)
+    names.foreach(n => assert(s.catalog.functionExists(n), n))
+    Seq("sim_ivfpq", "dd_minhash_lsh", "d1_list_prefixes").foreach { q =>
+      val df = SparkEntry.registry(q).fn(s, "/root/testdata/sf0.01")
+      assert(df.sparkSession eq s)
+      Measure.materialize(df)
+    }
+  }
+
+  test("register installs the surface on a session that lacks it, once") {
+    val s = TestSpark.spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    val names = GraftFunctions.builders.map(_._1)
+    names.foreach(n => reg.dropFunction(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(!names.exists(s.catalog.functionExists))
+    GraftFunctions.register(s)
+    names.foreach(n => assert(s.catalog.functionExists(n), n))
+    assert(s.sql("SELECT inc_prefix('foo/') AS p").head().getString(0) ==
+      "foo0")
+    GraftFunctions.register(s) // already there: returns at once
   }
 }

@@ -69,7 +69,6 @@ class ListingPropertySpec extends AnyFunSuite {
   // ---- properties ---------------------------------------------------------
 
   test("one page agrees with the pure model: content, order, truncation") {
-    graft.functions.GraftFunctions.register(spark)
     cases(15).foreach { case (keys, p) =>
       val want = model(keys, p)
       val got: ListResult = Listing.listObjects(df(keys), "b1", p)
@@ -93,7 +92,6 @@ class ListingPropertySpec extends AnyFunSuite {
     // batched forms. Exercise that claim: delimiters of length 2-3
     // (incl. 'ab' and 'xay') over keys whose alphabet makes partial
     // delimiter overlaps common.
-    graft.functions.GraftFunctions.register(spark)
     val genKeyM: Gen[String] = for {
       len <- Gen.choose(1, 6)
       cs <- Gen.listOfN(len, Gen.oneOf('a', 'b', 'x', 'y'))
@@ -129,7 +127,6 @@ class ListingPropertySpec extends AnyFunSuite {
   }
 
   test("marker pagination concatenates to the one-shot listing") {
-    graft.functions.GraftFunctions.register(spark)
     cases(10).foreach { case (keys, p0) =>
       val oneShot = model(keys, p0).map(_._1)
       var marker: Option[String] = None

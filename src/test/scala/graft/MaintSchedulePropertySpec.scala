@@ -510,7 +510,6 @@ class MaintSchedulePropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       "commit markers leaves serving on the old internally consistent " +
       "triple (the codes-marker pairing), and a re-run rebuild " +
       "converges to the clean twin's triple") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, "/root/testdata/sf0.001")
       .localCheckpoint(true)
     val h = md5(encode(col("vec_id").cast("string"), "UTF-8"))

@@ -56,7 +56,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(stored) == rows(retrained))
     assert(stored.count() == 16)
     // and the indexed query equals the retrain-per-run query
-    graft.functions.GraftFunctions.register(spark)
     val a = SparkEntry.queries("sim_ivf_indexed")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("sim_ivf_topk")(spark, sf)
@@ -149,7 +148,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup map: reload == retrain, bucketed by id") {
-    graft.functions.GraftFunctions.register(spark)
     val stored = Models.dedupMap(spark, sf)
     val docs = Tables.documents(spark, sf)
     val retrained = graft.operators.Dedup.components(
@@ -180,7 +178,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ivf-pq index: reload == retrain, codes bucketed by cell") {
-    graft.functions.GraftFunctions.register(spark)
     val (cents, cbRows, codes) = Models.ivfPqIndex(spark, sf)
     val prep = graft.operators.Similarity.prepared(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
@@ -220,7 +217,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf-pq daily loop: appended batch encodes against the frozen " +
       "model and keeps the bucket spec") {
-    graft.functions.GraftFunctions.register(spark)
     val (cents, cbRows, codes0) = Models.ivfPqIndex(spark, sf)
     val before = codes0.count()
     // day 1: three new vectors, exact copies of existing corpus rows
@@ -267,7 +263,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf-pq append replay folds to a no-op with dedupeIds " +
       "(at-least-once crash window)") {
-    graft.functions.GraftFunctions.register(spark)
     val (_, _, codes0) = Models.ivfPqIndex(spark, sf)
     val before = codes0.count()
     val src = Tables.embeddings(spark, sf)
@@ -290,7 +285,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf-pq streaming maintenance: micro-batches fold into the " +
       "persisted index via the frozen model") {
-    graft.functions.GraftFunctions.register(spark)
     val (_, _, codes0) = Models.ivfPqIndex(spark, sf)
     val before = codes0.count()
     val src = Tables.embeddings(spark, sf)
@@ -342,7 +336,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf-pq streaming maintenance: a tripped drift guard FAILS the " +
       "stream instead of silently degrading") {
-    graft.functions.GraftFunctions.register(spark)
     Models.ivfPqIndex(spark, sf) // ensure trained
     val src = Tables.embeddings(spark, sf).orderBy("vec_id").limit(1)
       .collect().head
@@ -368,7 +361,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("postings index: reload == retokenize, bucketed by tok, " +
       "bm25 over artifacts equals the retrain query") {
-    graft.functions.GraftFunctions.register(spark)
     val stored = Models.postings(spark, sf)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -398,7 +390,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("postings daily fold: appended batch + refreshed df/lens equal " +
       "a from-scratch retokenize of the grown corpus") {
-    graft.functions.GraftFunctions.register(spark)
     // base corpus = ~90% of the docs (md5 split), batch = the rest —
     // written as its own corpus dir so the artifacts train on the base
     val all = Tables.documents(spark, sf)
@@ -510,7 +501,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("positional postings: reload == retokenize, bucketed by tok; " +
       "phrase/proximity/boolean queries equal independent spellings") {
-    graft.functions.GraftFunctions.register(spark)
     val stored = Models.positionalPostings(spark, sf)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -580,7 +570,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("positional postings daily fold: postingsAppend maintains the " +
       "positional index; folded phrase serving == grown-corpus scan") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val baseDir = java.nio.file.Files
@@ -630,7 +619,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("index compaction: daily folds accumulate small files; " +
       "compact rewrites one file per bucket with rows and bucket " +
       "layout unchanged, and later folds still land") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val baseDir = java.nio.file.Files
@@ -684,7 +672,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "leaves the old head serving; a concurrent reader across the " +
       "cutover sees old-or-new rows, never mixed or missing; " +
       "compactBucketed generalizes to the LSH band index") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val dir = java.nio.file.Files
@@ -761,7 +748,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("retrieval streaming maintenance: micro-batches fold into the " +
       "postings artifacts; replayed batches fold to a no-op") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val baseDir = java.nio.file.Files
@@ -867,7 +853,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup streaming maintenance: micro-batches probe the persisted " +
       "LSH index then fold in; decisions equal the sequential batch " +
       "replay, replays are no-ops, in-loop compaction holds the layout") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val base = all.filter(h < "cc")
@@ -950,7 +935,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup streaming maintenance with foldMap: the cluster map " +
       "folds in-loop, bridge merges land, in-loop compaction folds " +
       "the remap ledger; streamed == sequential replay") {
-    graft.functions.GraftFunctions.register(spark)
     // same crafted geometry as the batch map-fold test: E(50) bridges
     // X={10,11} with Y={20}; F(60) then bridges the merged cluster
     // with Z={30} — across TWO micro-batches
@@ -1012,7 +996,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     assert(m(stored) == m(retrained))
-    graft.functions.GraftFunctions.register(spark)
     val a = SparkEntry.queries("tx_rarity_indexed")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("tx_rarity")(spark, sf)
@@ -1027,7 +1010,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
     assert(m(stored) == m(retrained))
-    graft.functions.GraftFunctions.register(spark)
     val a = SparkEntry.queries("tx_lm_score_indexed")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("tx_lm_score")(spark, sf)
@@ -1051,7 +1033,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p.contains("Exchange hashpartitioning(word"),
       s"bpe dictionary not bucketed:\n$p")
     // and the registered indexed query agrees with the retraining one
-    graft.functions.GraftFunctions.register(spark)
     val a = SparkEntry.queries("tx_bpe_segment_indexed")(spark, sf)
       .collect().map(_.toString).toSeq
     val b = SparkEntry.queries("tx_bpe_segment")(spark, sf)
@@ -1061,7 +1042,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compactBucketed edges: idempotent re-compact, and a crashed " +
       "partial staging dir (no _SUCCESS) is reclaimed, not renamed in") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val dir = java.nio.file.Files
@@ -1107,7 +1087,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compactModelArtifacts: every bucketed family — appended and " +
       "one-shot — compacts to <= IndexBuckets files with rows and " +
       "bucket layout unchanged") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val dir = java.nio.file.Files
@@ -1180,7 +1159,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf-pq rebuild: the drift repair retrains all three artifact " +
       "families in place, byte-identical to a from-scratch retrain") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.embeddings(spark, sf)
     val h = md5(encode(col("vec_id").cast("string"), "UTF-8"))
     // base corpus = the < cc slice; the fold brings the rest
@@ -1289,7 +1267,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("maintenance valves honor non-default hyperparameters: the " +
       "streaming loops fold and compact the EXACT artifact family " +
       "their params name, never the default one") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
@@ -1384,7 +1361,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("vacuum: staging debris across families — orphan generations, " +
       "tok_staging, legacy dirs, crashed _tmp_ markers — is reclaimed; " +
       "committed artifacts are untouched") {
-    graft.functions.GraftFunctions.register(spark)
     val all = Tables.documents(spark, sf)
     val h = md5(encode(col("doc_id").cast("string"), "UTF-8"))
     val dir = java.nio.file.Files
@@ -1476,7 +1452,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "ivfPqRebuild repairs, the restarted stream replays the tripped " +
       "batch idempotently and folds new data against the NEW " +
       "generation") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val all = Tables.embeddings(spark, sf)
     val h = md5(encode(col("vec_id").cast("string"), "UTF-8"))
@@ -1570,7 +1545,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("dedup map fold: batch rows land, a bridge doc MERGES base " +
       "clusters through the remap ledger, resolved map == retrain; " +
       "compactDedupMap folds the ledger in") {
-    graft.functions.GraftFunctions.register(spark)
     // 40 distinct tokens per doc, w=3 shingles (38/doc): 2 consecutive
     // interior changed tokens flip 4 shingles -> J = 34/42 = 0.8095
     // (just above the 0.8 gate); 4 changed flip 6 -> 32/44 = 0.727

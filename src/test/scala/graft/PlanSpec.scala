@@ -33,7 +33,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("listing page = TakeOrderedAndProject (sort+limit fused, no global sort)") {
-    graft.functions.GraftFunctions.register(spark)
     val p = plan(Listing.entries(Tables.objects(spark, sf), "src1",
       ListParams(prefix = None, delimiter = Some("/"), maxKeys = 10)))
     assert(p.contains("TakeOrderedAndProject"), p)
@@ -50,7 +49,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("brute-force topK broadcasts the query side, never shuffles the corpus") {
-    graft.functions.GraftFunctions.register(spark)
     val prep = Similarity.prepared(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
     val p = plan(Similarity.topK(prep, prep.filter(col("id") < 5), 3))
@@ -73,7 +71,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("subword tokenization is a zero-shuffle scan-stage projection " +
       "with the vocab embedded as a plan literal") {
-    graft.functions.GraftFunctions.register(spark)
     val vocab = Seq("er", "in", "me", "mer", "row", "scan")
     val p = plan(Tables.documents(spark, sf)
       .select(col("doc_id"),
@@ -110,7 +107,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("kmv sketch aggregates with map-side partials (bounded state)") {
-    graft.functions.GraftFunctions.register(spark)
     val p = plan(Tables.documents(spark, sf)
       .select(col("source"), xxhash64(col("text")).as("h"))
       .groupBy("source")
@@ -123,7 +119,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("PQ/ADC: codebook and query LUTs broadcast, corpus never shuffles") {
-    graft.functions.GraftFunctions.register(spark)
     val prep = Similarity.prepared(Tables.embeddings(spark, sf),
       "vec_id", "embedding").filter(size(col("qv")) === 64)
     val p = plan(Similarity.pqTopKPlan(prep, 5, 10L, 8, 16, 64))
@@ -166,7 +161,6 @@ class PlanSpec extends AnyFunSuite {
     // Caveat: queries whose builders eagerly localCheckpoint return a
     // LogicalRDD scan, so their INTERNAL joins are not visible here —
     // those pipelines' operators are asserted directly in the next test.
-    graft.functions.GraftFunctions.register(spark)
     // tx_kmv_setops cross-pairs per-SOURCE sketch rows (|sources|² pairs
     // of 256-long arrays — source-domain-bounded, never corpus-sized)
     // tx_bm25_indexed/_postings cross-join the ONE-ROW corpus totals
@@ -236,7 +230,6 @@ class PlanSpec extends AnyFunSuite {
     // one nested loop allowed is the single-row broadcast of the
     // centroid array (cell assignment); the pair join itself must not
     // be one.
-    graft.functions.GraftFunctions.register(spark)
     val prep = Similarity.prepared(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
     val cents = Similarity.refinedCentroids(prep, 4, 0)
@@ -388,7 +381,6 @@ class PlanSpec extends AnyFunSuite {
     // the expression tree: at SemDedup-realistic nList ≈ √n the literal
     // is megabytes inside every serialized task and a codegen bomb.
     // The broadcast-array form must plan the same size at any nList.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val prep = Similarity.prepared(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
@@ -406,7 +398,6 @@ class PlanSpec extends AnyFunSuite {
   test("candidate generators plan equi-joins, never cartesians") {
     // The checkpointed pipelines' inner enumeration, asserted at the
     // operator level where the join plan is still lazy/inspectable.
-    graft.functions.GraftFunctions.register(spark)
     def noCartesian(p: String, who: String): Unit = {
       assert(!p.contains("CartesianProduct"), s"$who:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$who:\n$p")
@@ -432,7 +423,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("SQ8 scoring broadcasts bounds and queries — corpus never " +
       "shuffles before the top-k window") {
-    graft.functions.GraftFunctions.register(spark)
     val prep = Similarity.prepared(
       Tables.embeddings(spark, sf), "vec_id", "embedding")
     val rng = broadcast(Similarity.sqRanges(prep))

@@ -13,7 +13,6 @@ class RenderSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   private def xmls(query: String): Seq[String] = {
-    graft.functions.GraftFunctions.register(spark)
     SparkEntry.queries(query)(spark, sf)
       .select("xml").as[String].collect().toSeq
   }
@@ -40,7 +39,6 @@ class RenderSpec extends AnyFunSuite {
   }
 
   test("bucket-config renders parse with per-config roots") {
-    graft.functions.GraftFunctions.register(spark)
     val rows = SparkEntry.queries("a19_bucket_config")(spark, sf)
       .select("config", "xml").as[(String, String)].collect()
     val want = Map("location" -> "LocationConstraint",

@@ -45,7 +45,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("nearest_cell matches the HOF array_min spelling incl. edge cases") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // centroids: cid-sorted; cid 2 ties cid 3 in distance (tie → smaller
     // cid); cid 9 is ragged (len 2) and must be skipped by both forms
     val rows = Seq(
@@ -92,7 +91,6 @@ class SimilaritySpec extends AnyFunSuite {
   test("pq_luts / adc_sum match the interpreted HOF spellings " +
       "(transform-of-transform subD2 tables; aggregate-zip_with " +
       "element_at sum), incl. the 1-based code positions") {
-    graft.functions.GraftFunctions.register(spark)
     val m = 4
     val dim = 8
     val subDim = dim / m
@@ -173,7 +171,6 @@ class SimilaritySpec extends AnyFunSuite {
     // min aggregate, a completely different plan from the in-row
     // argmin over the broadcast array.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.1")
     val prep = Similarity.prepared(embs, "vec_id", "embedding").cache()
     try {
@@ -201,7 +198,6 @@ class SimilaritySpec extends AnyFunSuite {
     // and a plain within-cell self-join drop rule, no Skew tiling, no
     // broadcast array.
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val embs = Tables.embeddings(spark, "/root/testdata/sf0.1")
     val t = 0.85
     val got = Similarity
@@ -344,7 +340,6 @@ class SimilaritySpec extends AnyFunSuite {
       (2L, Array(1.2f, 0.0f)),
       (3L, Array(0.0f, 0.5f))
     ).toDF("vec_id", "embedding")
-    graft.functions.GraftFunctions.register(TestSpark.spark)
     val got = Similarity.mmrTopK(e, "vec_id", "embedding",
         k = 3, poolN = 3, queryLimit = 1L)
       .select("nid", "rank").as[(Long, Int)].collect().sortBy(_._2)
@@ -353,7 +348,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivfPqSweep: full-probe + full-rerank arm recovers exact " +
       "ground truth (recall 1.0)") {
-    graft.functions.GraftFunctions.register(spark)
     val sweep = Similarity.ivfPqSweep(vecs, "vec_id", "embedding",
       k = 2, queryLimit = 2L, nProbes = Seq(1, 2), ksubs = Seq(2),
       reranks = Seq(0, 4), nList = 2, iters = 1, m = 3, dim = 3)
@@ -370,7 +364,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("rpTopK: a corpus-covering shortlist IS brute force") {
-    graft.functions.GraftFunctions.register(spark)
     // rerank >= corpus: the reduced space only orders the shortlist,
     // which covers everything — the exact rerank must return the true
     // top-k regardless of projection distortion

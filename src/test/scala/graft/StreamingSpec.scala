@@ -516,7 +516,6 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming daily pipeline: one fold equals the batch capstone") {
     import scala.jdk.CollectionConverters._
     val sf = "/root/testdata/sf0.001"
-    graft.functions.GraftFunctions.register(spark)
     // batch side FIRST: trains/loads the persisted artifacts both
     // surfaces consume
     val want = SparkEntry.queries("ds_daily_pipeline")(spark, sf)

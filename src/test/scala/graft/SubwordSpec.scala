@@ -20,7 +20,6 @@ class SubwordSpec extends AnyFunSuite {
 
   test("native char_grams matches the HOF subwordGrams spelling, " +
       "order included (multi-byte chars, short words, empty string)") {
-    GraftFunctions.register(spark)
     val words = Seq("hello", "ab", "a", "", "naïve日本語x", "abcd",
       "ééé", "word boundary")
     val both = words.toDF("wd")
@@ -82,7 +81,6 @@ class SubwordSpec extends AnyFunSuite {
   }
 
   test("SQL callers can pass the vocab as array(...), not only a Literal") {
-    GraftFunctions.register(spark)
     val got = spark.sql(
       "SELECT subword_tokens(array('abcd'), array('ab','cd')) AS t")
       .as[Seq[String]].collect().head

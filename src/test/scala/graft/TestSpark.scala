@@ -4,17 +4,6 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .withExtensions(new sql.GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    sql.GraftExtensions.localSession("4", "spark.app.name" -> "graft-test")
 }

@@ -39,14 +39,14 @@ class WindowBoundSpec extends AnyFunSuite {
       .toDF("id", "v").repartition(8)
     val globalW = Window.orderBy(col("v"), col("id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val boundedW = Rank.boundedGlobal(spark, col("v"), col("id"))
+    val boundedW = Rank.boundedGlobal(col("v"), col("id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val g = df.withColumn("s", coalesce(sum("id").over(globalW), lit(0L)))
       .withColumn("rk", row_number().over(
         Window.orderBy(col("v"), col("id"))))
     val b = df.withColumn("s", coalesce(sum("id").over(boundedW), lit(0L)))
       .withColumn("rk", row_number().over(
-        Rank.boundedGlobal(spark, col("v"), col("id"))))
+        Rank.boundedGlobal(col("v"), col("id"))))
     val got = b.collect().map(_.toString).sorted.toSeq
     val want = g.collect().map(_.toString).sorted.toSeq
     assert(got == want, "constant-partition window diverged from the " +

@@ -49,7 +49,7 @@ RULES = [
     (re.compile(r"[0-9a-f]{12,}"), "H"),
     (re.compile(r"\d{9,}"), "N"),
 ]
-BLOCK = re.compile(r"^== intermediate QueryExecution #\d+ ==$", re.M)
+BLOCK = re.compile(r"^== intermediate QueryExecution #\d* ==$", re.M)
 JOBS = re.compile(r"^\[jobs\] (\S+) total=\S+ s, (\d+) jobs$", re.M)
 
 
