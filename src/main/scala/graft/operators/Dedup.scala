@@ -30,25 +30,13 @@ object Dedup {
 
   // ---- shingling ---------------------------------------------------------
 
-  /** Distinct `w`-gram word shingles per row, exploded to
-    * `(id, shingle)`. Rows with fewer than `w` tokens produce nothing. */
-  def shingles(docs: DataFrame, idCol: String, textCol: String,
-      w: Int = 3): DataFrame = {
-    val toks = TextOps.tokens(col(textCol))
-    val sh = when(size(toks) >= w,
-      array_distinct(transform(sequence(lit(1), size(toks) - (w - 1)),
-        i => array_join(slice(toks, i, lit(w)), " "))))
-      .otherwise(typedLit(Seq.empty[String]))
-    docs.select(col(idCol).as("id"), explode(sh).as("shingle"))
-  }
-
   /** Per-doc shingle sets as sorted int64-hash arrays:
     * `(id, hs array<long>, n)` — a *zero-shuffle* projection of the
     * corpus scan via the fused [[graft.functions.ShingleHashes]]
     * expression (hash-identical to exploding + `xxhash64` + regrouping;
     * collision probability over a few hundred shingles/doc is ~2^-50 —
     * negligible vs the string-exact oracle). Docs with fewer than `w`
-    * tokens produce no row, matching [[shingles]]. */
+    * tokens produce no row. */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       w: Int = 3): DataFrame =
     docs
@@ -224,15 +212,10 @@ object Dedup {
       textCol: String, wTok: Int = 5, m: Int = 1 << 14): DataFrame = {
     val mm = m.toLong
     // per-doc gram instances: (id, gh) for every wTok-token window
-    def grams(df: DataFrame): DataFrame = {
-      val toks = TextOps.tokens(col(textCol))
-      df.select(col(idCol).as("id"),
-        explode(when(size(toks) >= wTok,
-          transform(sequence(lit(1), size(toks) - (wTok - 1)),
-            i => array_join(slice(toks, i, lit(wTok)), " ")))
-          .otherwise(typedLit(Seq.empty[String]))).as("win"))
+    def grams(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("w"))
+        .select(col("id"), explode(TextOps.ngrams(col("w"), wTok)).as("win"))
         .select(col("id"), tokenHash60(col("win")).as("gh"))
-    }
     // k=3 positions: base-m digits of the 60-bit hash (gh >= 0, so
     // Spark `div` == DuckDB `//` — no negative-division divergence)
     def positions(gh: String): Column = array_sort(array_distinct(array(
@@ -804,13 +787,10 @@ object Dedup {
     * document-sized, embarrassingly parallel. */
   def substringDups(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 5, saltFactor: Int = 8): DataFrame = {
-    val toks = TextOps.tokens(col(textCol))
     val wins = docs
-      .select(col(idCol).as("id"),
-        posexplode(when(size(toks) >= k,
-          transform(sequence(lit(1), size(toks) - (k - 1)),
-            i => array_join(slice(toks, i, lit(k)), " ")))
-          .otherwise(typedLit(Seq.empty[String]))).as(Seq("pos", "win")))
+      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("w"))
+      .select(col("id"),
+        posexplode(TextOps.ngrams(col("w"), k)).as(Seq("pos", "win")))
       .select(col("id"), col("pos"), tokenHash60(col("win")).as("wh"))
     val repeated = wins.groupBy("wh")
       .agg(count(lit(1)).as("cnt")).filter(col("cnt") >= 2)

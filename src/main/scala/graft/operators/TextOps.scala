@@ -207,9 +207,16 @@ object TextOps {
 
   // ---- repetition signals (Gopher-style quality filters) -----------------
 
-  /** Space-joined word n-grams of a token array (empty below n tokens —
-    * the `when` guard matters: Spark's `sequence(1, size-n+1)` would
-    * generate a *descending* sequence when size < n). */
+  /** Space-joined word n-grams of a token array in position order, the
+    * one word-window spelling (empty below n tokens — the `when` guard
+    * matters: `sequence(1, size-n+1)` would descend when size < n).
+    *
+    * `w` must be a BOUND column, projected by an earlier select (e.g.
+    * `tokens(text).as("w")`), never an inline expression: `transform` is
+    * interpreted (`CodegenFallback`) and evaluates a lambda-free subtree
+    * of its body once per element, so an inline `tokens(text)` re-splits
+    * the document once per token. `PlanSpec` "no lambda re-derives its
+    * input per element" enforces this for every registered query. */
   def ngrams(w: Column, n: Int): Column =
     when(size(w) >= n,
       transform(sequence(lit(1), size(w) - (n - 1)),
@@ -247,8 +254,7 @@ object TextOps {
 
   /** Characters inside occurrences-beyond-the-first of each distinct
     * element of a SORTED string array (duplicates are adjacent — one
-    * linear walk, zero shuffle). Pass a MATERIALIZED sorted column:
-    * `element_at` references re-evaluate an inline subtree per access. */
+    * linear walk, zero shuffle). `s` must be bound, as for [[ngrams]]. */
   def dupAdjacentChars(s: Column): Column =
     when(size(s) >= 2,
       aggregate(sequence(lit(2), size(s)), lit(0L),
@@ -317,12 +323,10 @@ object TextOps {
     * replays inference bit-identically. */
   val QmWeightRange = 2001L
 
-  /** fastText-style feature set: unigrams plus space-joined word
-    * bigrams (word n-gram features are the fastText signature — §2.1). */
-  def qmFeatures(text: Column): Column = {
-    val t = tokens(text)
-    concat(t, ngrams(t, 2))
-  }
+  /** fastText-style feature set of a bound token column `w` ([[ngrams]]):
+    * unigrams plus space-joined word bigrams (word n-gram features are
+    * the fastText signature — §2.1). */
+  def qmFeatures(w: Column): Column = concat(w, ngrams(w, 2))
 
   /** Deterministic stand-in for a trained weight vector: bucket b gets
     * weight `hash60("w:" + b) mod 2001 - 1000`. A real deployment swaps
@@ -334,15 +338,23 @@ object TextOps {
     Dedup.tokenHash60(concat(lit("w:"), bucket.cast("string"))) %
       QmWeightRange - lit(1000L)
 
-  /** Linear-model score: mean over features of the weight of the
-    * feature's hash bucket, normalized to [-1, 1] doubles by the weight
-    * scale. Sum and count are exact int64 (< 2^53), so the single
-    * closing division is IEEE-deterministic cross-engine. */
-  def qmScoreCols(feats: Column): (Column, Column, Column) = {
-    val wsum = aggregate(feats, lit(0L),
-      (acc, f) => acc + qmWeight(Dedup.tokenHash60(f) % QmBuckets))
-    val n = size(feats).cast("long")
-    (n, wsum, wsum.cast("double") / (n * lit(1000L)).cast("double"))
+  /** Classifier inference: `(idCol, n_feats, w_sum, score)`, the score
+    * being the mean feature weight normalized to [-1, 1] by the weight
+    * scale. Tokens, features and sums are each bound before the next
+    * stage reads them ([[ngrams]]). Sum and count are exact int64
+    * (< 2^53), so the one closing division is IEEE-deterministic. */
+  def qmScored(docs: DataFrame, idCol: String, textCol: String)
+      : DataFrame = {
+    val id = col(idCol)
+    docs.select(id, tokens(col(textCol)).as("w"))
+      .select(id, qmFeatures(col("w")).as("feats"))
+      .select(id, size(col("feats")).cast("long").as("n_feats"),
+        aggregate(col("feats"), lit(0L),
+          (acc, f) => acc + qmWeight(Dedup.tokenHash60(f) % QmBuckets))
+          .as("w_sum"))
+      .select(id, col("n_feats"), col("w_sum"),
+        (col("w_sum").cast("double") /
+          (col("n_feats") * lit(1000L)).cast("double")).as("score"))
   }
 
   // ---- fingerprinting ----------------------------------------------------
@@ -383,15 +395,10 @@ object TextOps {
     concat(lit(" "), array_join(split(word, ""), " "), lit(" "))
 
   /** Frequency of each adjacent symbol pair over the current
-    * segmentations, weighted by word count. The `IF` guard matters for
-    * single-symbol words: `sequence(0, -1)` would descend. */
+    * segmentations, weighted by word count. */
   def bpePairCounts(segs: DataFrame): DataFrame =
     segs.select(col("c"), split(trim(col("seg")), " ").as("toks"))
-      .select(col("c"), explode(expr(
-        """IF(size(toks) >= 2,
-          |   transform(sequence(0, size(toks) - 2),
-          |     i -> concat(toks[i], ' ', toks[i + 1])),
-          |   CAST(array() AS ARRAY<STRING>))""".stripMargin)).as("pr"))
+      .select(col("c"), explode(ngrams(col("toks"), 2)).as("pr"))
       .groupBy("pr").agg(sum("c").as("pc"))
 
   /** One merge application: every ` a b ` becomes ` ab `. Two

@@ -102,17 +102,18 @@ object SimilarityQueries {
       .orderBy("qid")
   }
 
-  /** DuckDB twin of [[recallAt5]], appended to a family's CTEs whose
-    * `ranked(qid, nid, d2)` is the approximate answer: its top 5 per
-    * query against the exact-L2 brute force over `p`. */
-  private def recallAt5Sql(ranked: String): String =
-    s""",
-       |appr AS (
+  /** `name(qid, nid)`: the top `k` per query of `src` by (`key`, nid). */
+  private def apprSql(name: String, src: String, key: String, k: Int): String =
+    s"""$name AS (
        |  SELECT qid, nid FROM (
        |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |                                        ORDER BY d2, nid) AS rank
-       |    FROM $ranked) WHERE rank <= 5),
-       |gt AS (
+       |                                        ORDER BY $key, nid) AS rank
+       |    FROM $src) WHERE rank <= $k)""".stripMargin
+
+  /** Exact-L2 ground truth `gt(qid, nid)`: the top `k` neighbours over
+    * `p` of each vector with id below `queryLimit`. */
+  private def gtSql(queryLimit: Int, k: Int, mat: String = ""): String =
+    s"""gt AS $mat(
        |  SELECT qid, nid FROM (
        |    SELECT a.vec_id AS qid, b.vec_id AS nid,
        |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
@@ -120,8 +121,16 @@ object SimilarityQueries {
        |               [a.qv[kk]*b.qv[kk] for kk in range(1,65)])
        |               AS BIGINT),
        |             b.vec_id) AS rk
-       |    FROM (SELECT * FROM p WHERE vec_id < 10) a
-       |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= 5),
+       |    FROM (SELECT * FROM p WHERE vec_id < $queryLimit) a
+       |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= $k)""".stripMargin
+
+  /** DuckDB twin of [[recallAt5]], appended to a family's CTEs whose
+    * `ranked(qid, nid, d2)` is the approximate answer: its top 5 per
+    * query against the exact-L2 brute force over `p`. */
+  private def recallAt5Sql(ranked: String): String =
+    s""",
+       |${apprSql("appr", ranked, "d2", 5)},
+       |${gtSql(10, 5)},
        |h AS (SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hits
        |      FROM appr a JOIN gt USING (qid, nid) GROUP BY 1)
        |SELECT q.vec_id AS qid,
@@ -179,34 +188,37 @@ object SimilarityQueries {
   /** CTE chain `cents0 … cents<iters>` replaying
     * [[Similarity.refinedCentroids]] (seed sample + unrolled Lloyd
     * steps) — generated so the refinement arithmetic cannot drift from
-    * [[Similarity.lloydStep]]. Shared by the IVF and SemDedup oracles. */
-  private def centsSql(nList: Int, iters: Int): String = {
+    * [[Similarity.lloydStep]]. Shared by the IVF and SemDedup oracles.
+    * Every CTE name carries the suffix `tag`; `mat` ("" or
+    * "MATERIALIZED ") sits between `AS` and the CTE body. */
+  private def centsSql(nList: Int, iters: Int, tag: String = "",
+      mat: String = ""): String = {
     val lloyd = (1 to iters).map { i =>
-      val prev = s"cents${i - 1}"
+      val prev = s"cents${i - 1}$tag"
       // truncated integer mean per dimension: sign-explicit |s| // c
       // (DuckDB // floors, Spark div truncates — identical on |s|)
-      s"""assign$i AS (
+      s"""assign$i$tag AS $mat(
          |  SELECT vec_id, cid FROM (
          |    ${rankedSql(prev, "")}) WHERE rnk = 1),
-         |sums$i AS (
+         |sums$i$tag AS $mat(
          |  SELECT a.cid, t.k,
          |         CAST(sum(p.qv[CAST(t.k AS INT)]) AS BIGINT) AS s,
          |         count(*) AS c
-         |  FROM assign$i a JOIN p ON p.vec_id = a.vec_id,
+         |  FROM assign$i$tag a JOIN p ON p.vec_id = a.vec_id,
          |       UNNEST(range(1, 65)) AS t(k)
          |  GROUP BY a.cid, t.k),
-         |ref$i AS (
+         |ref$i$tag AS $mat(
          |  SELECT cid,
          |         list(CASE WHEN s < 0 THEN -(abs(s) // c)
          |              ELSE abs(s) // c END ORDER BY k) AS ncv
-         |  FROM sums$i GROUP BY cid),
-         |cents$i AS (
+         |  FROM sums$i$tag GROUP BY cid),
+         |cents$i$tag AS $mat(
          |  SELECT cid, cv,
          |         CAST(list_sum([cv[k]*cv[k] for k in range(1,65)]) AS BIGINT) AS cn2
          |  FROM (SELECT c0.cid, COALESCE(r.ncv, c0.cv) AS cv
-         |        FROM cents${i - 1} c0 LEFT JOIN ref$i r USING (cid)))""".stripMargin
+         |        FROM $prev c0 LEFT JOIN ref$i$tag r USING (cid)))""".stripMargin
     }.map(s => s",\n$s").mkString
-    s"cents0 AS (SELECT vec_id AS cid, qv AS cv, n2 AS cn2 FROM p WHERE vec_id < $nList)$lloyd"
+    s"cents0$tag AS $mat(SELECT vec_id AS cid, qv AS cv, n2 AS cn2 FROM p WHERE vec_id < $nList)$lloyd"
   }
 
   /** DuckDB replay of [[Similarity.ivfTopK]]. */
@@ -251,78 +263,106 @@ object SimilarityQueries {
          |                            ORDER BY ad2, nid) AS rank
          |  FROM adc) WHERE rank <= $k ORDER BY qid, rank""".stripMargin
 
-  /** The shared `WITH … adc` chain of the IVF-PQ oracles (through the
-    * unranked per-candidate ADC sums) — one spelling for the top-k
-    * query and the recall audit. */
-  private def ivfPqCtes(queryLimit: Int, nList: Int,
-      nProbe: Int, iters: Int, m: Int, ksub: Int): String = {
-    val cents = s"cents$iters"
-    val subDim = 64 / m
-    def subd2(a: String, b: String): String =
-      s"""CAST(list_sum([($a[CAST(t.m*$subDim+kk AS INT)]
-         | - $b[CAST(t.m*$subDim+kk AS INT)])
-         | * ($a[CAST(t.m*$subDim+kk AS INT)]
-         | - $b[CAST(t.m*$subDim+kk AS INT)])
-         |for kk in range(1, ${subDim + 1})]) AS BIGINT)""".stripMargin
-    s"""WITH $duckPrep,
-       |${centsSql(nList, iters)},
-       |asg AS (
+  /** Squared L2 distance between sub-vector `t.m` (width `subDim`) of
+    * the vectors `a` and `b`. */
+  private def subd2(a: String, b: String, subDim: Int): String =
+    s"""CAST(list_sum([($a[CAST(t.m*$subDim+kk AS INT)]
+       | - $b[CAST(t.m*$subDim+kk AS INT)])
+       | * ($a[CAST(t.m*$subDim+kk AS INT)]
+       | - $b[CAST(t.m*$subDim+kk AS INT)])
+       |for kk in range(1, ${subDim + 1})]) AS BIGINT)""".stripMargin
+
+  /** `name<tag>` under the alias `name` (plain `name` when untagged). */
+  private def tagged(name: String, tag: String): String =
+    if (tag.isEmpty) name else s"$name$tag $name"
+
+  /** The training half of the IVF-PQ oracles: refined centroids, cell
+    * assignment `asg`, residuals `res`, residual codebook `cb` and codes
+    * `cd`, every name suffixed by `tag`. */
+  private def ivfPqTrainCtes(nList: Int, iters: Int, m: Int, ksub: Int,
+      tag: String = "", mat: String = ""): String = {
+    val cents = s"cents$iters$tag"
+    s"""${centsSql(nList, iters, tag, mat)},
+       |asg$tag AS $mat(
        |  SELECT vec_id, cid FROM (
        |    ${rankedSql(cents, "")}) WHERE rnk = 1),
-       |res AS (
+       |res$tag AS $mat(
        |  SELECT p.vec_id, a.cid,
        |         [p.qv[kk] - c.cv[kk] for kk in range(1, 65)] AS rv
-       |  FROM p JOIN asg a USING (vec_id) JOIN $cents c USING (cid)),
-       |cb AS (SELECT vec_id AS cbid, rv AS cbv FROM res
+       |  FROM p JOIN asg$tag a USING (vec_id) JOIN $cents c USING (cid)),
+       |cb$tag AS $mat(SELECT vec_id AS cbid, rv AS cbv FROM res$tag
        |       WHERE vec_id < $ksub),
-       |cd AS (
+       |cd$tag AS $mat(
        |  SELECT vec_id, cid, m, cbid FROM (
        |    SELECT r.vec_id, r.cid, t.m, c.cbid,
        |           row_number() OVER (PARTITION BY r.vec_id, t.m
-       |             ORDER BY ${subd2("r.rv", "c.cbv")}, c.cbid) AS rn
-       |    FROM res r, unnest(range(0, $m)) AS t(m), cb c)
-       |  WHERE rn = 1),
-       |probe AS (
+       |             ORDER BY ${subd2("r.rv", "c.cbv", 64 / m)}, c.cbid) AS rn
+       |    FROM res$tag r, unnest(range(0, $m)) AS t(m), cb$tag c)
+       |  WHERE rn = 1)""".stripMargin
+  }
+
+  /** The query half of the IVF-PQ oracles over the training CTEs tagged
+    * `train`: probe lists, per-cell query-residual LUT distances and the
+    * unranked per-candidate ADC sums `adc`, every name suffixed by `tag`
+    * (`adc` takes `mat`). */
+  private def ivfPqProbeCtes(queryLimit: Int, nProbe: Int, iters: Int,
+      m: Int, train: String = "", tag: String = "",
+      mat: String = ""): String = {
+    val cents = s"cents$iters$train"
+    s"""probe$tag AS (
        |  SELECT vec_id AS qid, cid FROM (
        |    ${rankedSql(cents, s" WHERE p.vec_id < $queryLimit")})
        |  WHERE rnk <= $nProbe),
-       |qres AS (
+       |qres$tag AS (
        |  SELECT pr.qid, pr.cid,
        |         [p.qv[kk] - c.cv[kk] for kk in range(1, 65)] AS qrv
-       |  FROM probe pr JOIN p ON p.vec_id = pr.qid
+       |  FROM probe$tag pr JOIN p ON p.vec_id = pr.qid
        |       JOIN $cents c USING (cid)),
-       |qd AS (
+       |qd$tag AS (
        |  SELECT q.qid, q.cid, t.m, c.cbid,
-       |         ${subd2("q.qrv", "c.cbv")} AS d2
-       |  FROM qres q, unnest(range(0, $m)) AS t(m), cb c),
-       |adc AS (
+       |         ${subd2("q.qrv", "c.cbv", 64 / m)} AS d2
+       |  FROM qres$tag q, unnest(range(0, $m)) AS t(m), cb$train c),
+       |adc$tag AS $mat(
        |  SELECT qd.qid, cd.vec_id AS nid, CAST(sum(qd.d2) AS BIGINT) AS ad2
-       |  FROM cd JOIN qd ON qd.cid = cd.cid AND qd.m = cd.m
+       |  FROM ${tagged("cd", train)} JOIN ${tagged("qd", tag)} ON qd.cid = cd.cid AND qd.m = cd.m
        |                 AND qd.cbid = cd.cbid
        |  WHERE qd.qid <> cd.vec_id
        |  GROUP BY 1, 2)""".stripMargin
   }
 
-  /** Extends [[ivfPqCtes]] with the exact-rerank refine stage: `short`
-    * (the ADC top-`rerank` shortlist per query) and `rr` (the shortlist
-    * re-scored with exact integer L2) — the oracle twin of
-    * [[Similarity.ivfPqScorePlan]]'s `rerank > 0` path. */
+  /** The shared `WITH … adc` chain of the IVF-PQ oracles (through the
+    * unranked per-candidate ADC sums) — one spelling for the top-k
+    * query and the recall audit. */
+  private def ivfPqCtes(queryLimit: Int, nList: Int,
+      nProbe: Int, iters: Int, m: Int, ksub: Int): String =
+    s"""WITH $duckPrep,
+       |${ivfPqTrainCtes(nList, iters, m, ksub)},
+       |${ivfPqProbeCtes(queryLimit, nProbe, iters, m)}""".stripMargin
+
+  /** The exact-rerank refine stage over `adc<probe>`: `short` (the ADC
+    * top-`rerank` shortlist per query) and `rr` (the shortlist
+    * re-scored with exact integer L2), both suffixed by `tag` — the
+    * oracle twin of [[Similarity.ivfPqScorePlan]]'s `rerank > 0` path. */
+  private def ivfPqRefineCtes(rerank: Int, probe: String = "",
+      tag: String = ""): String =
+    s"""short$tag AS (
+       |  SELECT qid, nid FROM (
+       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
+       |                                        ORDER BY ad2, nid) AS srk
+       |    FROM adc$probe) WHERE srk <= $rerank),
+       |rr$tag AS (
+       |  SELECT s.qid, s.nid,
+       |         a.n2 + b.n2 - 2*CAST(list_sum(
+       |           [a.qv[kk]*b.qv[kk] for kk in range(1,65)]) AS BIGINT)
+       |           AS d2
+       |  FROM short$tag s JOIN p a ON a.vec_id = s.qid
+       |       JOIN p b ON b.vec_id = s.nid)""".stripMargin
+
+  /** [[ivfPqCtes]] extended with [[ivfPqRefineCtes]]. */
   private def ivfPqRefinedCtes(queryLimit: Int, nList: Int, nProbe: Int,
       iters: Int, m: Int, ksub: Int, rerank: Int): String =
-    ivfPqCtes(queryLimit, nList, nProbe, iters, m, ksub) +
-      s""",
-         |short AS (
-         |  SELECT qid, nid FROM (
-         |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-         |                                        ORDER BY ad2, nid) AS srk
-         |    FROM adc) WHERE srk <= $rerank),
-         |rr AS (
-         |  SELECT s.qid, s.nid,
-         |         a.n2 + b.n2 - 2*CAST(list_sum(
-         |           [a.qv[kk]*b.qv[kk] for kk in range(1,65)]) AS BIGINT)
-         |           AS d2
-         |  FROM short s JOIN p a ON a.vec_id = s.qid
-         |       JOIN p b ON b.vec_id = s.nid)""".stripMargin
+    ivfPqCtes(queryLimit, nList, nProbe, iters, m, ksub) + ",\n" +
+      ivfPqRefineCtes(rerank)
 
   /** DuckDB replay of the refined (rerank > 0) IVF-PQ top-k. */
   private def ivfPqRefinedOracleSql(k: Int, queryLimit: Int, nList: Int,
@@ -335,53 +375,40 @@ object SimilarityQueries {
          |                            ORDER BY d2, nid) AS rank
          |  FROM rr) WHERE rank <= $k ORDER BY qid, rank""".stripMargin
 
-  /** One arm of the sweep oracle: a full independent replay of the
-    * IVF-PQ pipeline at one (nProbe, ksub) + the exact-L2 ground truth
-    * + the aggregate hit count, as a parenthesized subquery (DuckDB
-    * allows a WITH chain inside a derived table) — generated from the
-    * same parameters as the Spark arm, so the operating points can
-    * never drift between the two sides. */
-  private def ivfPqSweepArmSql(k: Int, queryLimit: Int, nList: Int,
-      nProbe: Int, iters: Int, m: Int, ksub: Int, rerank: Int): String = {
-    val ctes =
-      if (rerank <= 0) ivfPqCtes(queryLimit, nList, nProbe, iters, m, ksub)
-      else ivfPqRefinedCtes(queryLimit, nList, nProbe, iters, m, ksub, rerank)
-    val apprSrc = if (rerank <= 0) "adc" else "rr"
-    val apprKey = if (rerank <= 0) "ad2" else "d2"
-    s"""SELECT * FROM (
-       |$ctes,
-       |appr AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |                                        ORDER BY $apprKey, nid)
-       |             AS rank
-       |    FROM $apprSrc) WHERE rank <= $k),
-       |gt AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT a.vec_id AS qid, b.vec_id AS nid,
-       |           row_number() OVER (PARTITION BY a.vec_id ORDER BY
-       |             a.n2 + b.n2 - 2*CAST(list_sum(
-       |               [a.qv[kk]*b.qv[kk] for kk in range(1,65)])
-       |               AS BIGINT),
-       |             b.vec_id) AS rk
-       |    FROM (SELECT * FROM p WHERE vec_id < $queryLimit) a
-       |    JOIN p b ON b.vec_id <> a.vec_id) WHERE rk <= $k),
-       |h AS (SELECT CAST(count(*) AS BIGINT) AS n_hits
-       |      FROM appr JOIN gt USING (qid, nid))
-       |SELECT CAST($nProbe AS INT) AS n_probe, CAST($ksub AS INT) AS ksub,
-       |       CAST($rerank AS INT) AS rerank, n_hits,
-       |       CAST(n_hits AS DOUBLE) / CAST(${queryLimit * k} AS DOUBLE)
-       |         AS recall_at_$k
-       |FROM h)""".stripMargin
-  }
-
+  /** DuckDB replay of the operating-point sweep: recall@k of the IVF-PQ
+    * top-k against the exact-L2 ground truth `gt` per (nProbe, ksub,
+    * rerank) config, generated from the same parameters as the Spark
+    * arms so the operating points can never drift between the two
+    * sides. Each ksub retrains the whole quantizer from scratch (the
+    * reload==retrain proof against that ksub's stored index); training,
+    * `gt` and each (ksub, nProbe)'s ADC sums are MATERIALIZED CTEs that
+    * every arm reading them shares, so training runs once per ksub. */
   private def ivfPqSweepSql(k: Int, queryLimit: Int, nList: Int,
       iters: Int, m: Int, nProbes: Seq[Int], ksubs: Seq[Int],
-      reranks: Seq[Int]): String =
-    (for { ksub <- ksubs; nProbe <- nProbes; rerank <- reranks }
-      yield ivfPqSweepArmSql(k, queryLimit, nList, nProbe, iters, m, ksub,
-        rerank))
-      .mkString("", "\nUNION ALL\n", "\nORDER BY n_probe, ksub, rerank")
+      reranks: Seq[Int]): String = {
+    val mat = "MATERIALIZED "
+    val probes = for { ks <- ksubs; np <- nProbes } yield (ks, np)
+    val arms = for { (ks, np) <- probes; rr <- reranks } yield {
+      val (probe, arm) = (s"_k${ks}_p$np", s"_k${ks}_p${np}_r$rr")
+      val cte =
+        if (rr <= 0) apprSql(s"appr$arm", s"adc$probe", "ad2", k)
+        else s"${ivfPqRefineCtes(rr, probe, arm)},\n" +
+          apprSql(s"appr$arm", s"rr$arm", "d2", k)
+      (cte, s"""SELECT CAST($np AS INT) AS n_probe, CAST($ks AS INT) AS ksub,
+         |       CAST($rr AS INT) AS rerank, n_hits,
+         |       CAST(n_hits AS DOUBLE) / CAST(${queryLimit * k} AS DOUBLE)
+         |         AS recall_at_$k
+         |FROM (SELECT CAST(count(*) AS BIGINT) AS n_hits
+         |      FROM appr$arm JOIN gt USING (qid, nid))""".stripMargin)
+    }
+    (Seq(s"WITH $duckPrep", gtSql(queryLimit, k, mat)) ++
+      ksubs.map(ks => ivfPqTrainCtes(nList, iters, m, ks, s"_k$ks", mat)) ++
+      probes.map { case (ks, np) => ivfPqProbeCtes(queryLimit, np, iters, m,
+        s"_k$ks", s"_k${ks}_p$np", mat) } ++
+      arms.map(_._1)).mkString("", ",\n", "\n") +
+      arms.map(_._2).mkString("\nUNION ALL\n") +
+      "\nORDER BY n_probe, ksub, rerank"
+  }
 
   /** DuckDB replay of the daily append fold: the md5-split old corpus
     * trains the quantizer + residual codebook, the new batch is encoded
@@ -392,13 +419,6 @@ object SimilarityQueries {
   private def ivfPqAppendSql(nList: Int, iters: Int, m: Int,
       ksub: Int): String = {
     val cents = s"cents$iters"
-    val subDim = 64 / m
-    def subd2(a: String, b: String): String =
-      s"""CAST(list_sum([($a[CAST(t.m*$subDim+kk AS INT)]
-         | - $b[CAST(t.m*$subDim+kk AS INT)])
-         | * ($a[CAST(t.m*$subDim+kk AS INT)]
-         | - $b[CAST(t.m*$subDim+kk AS INT)])
-         |for kk in range(1, ${subDim + 1})]) AS BIGINT)""".stripMargin
     s"""WITH q AS (
        |  SELECT vec_id,
        |         [CAST(round(CAST(x AS DOUBLE)*10000) AS BIGINT) for x in embedding] AS qv
@@ -430,7 +450,7 @@ object SimilarityQueries {
        |  SELECT vec_id, cid, m, pos FROM (
        |    SELECT r.vec_id, r.cid, t.m, c.pos,
        |           row_number() OVER (PARTITION BY r.vec_id, t.m
-       |             ORDER BY ${subd2("r.rv", "c.cbv")}, c.cbid) AS rn
+       |             ORDER BY ${subd2("r.rv", "c.cbv", 64 / m)}, c.cbid) AS rn
        |    FROM resb r, unnest(range(0, $m)) AS t(m), cbp c)
        |  WHERE rn = 1),
        |oldc AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_index

@@ -757,16 +757,9 @@ object TextQueries {
     "tx_ngram_stats" -> QueryDef(
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        // materialize the token array once — element_at over the raw
-        // split() expression would re-tokenize per accessed element
-        val w = col("w")
-        val bigrams = when(size(w) >= 2,
-          transform(sequence(lit(1), size(w) - 1),
-            i => concat_ws(" ", element_at(w, i), element_at(w, i + 1))))
-          .otherwise(typedLit(Seq.empty[String]))
         Tables.documents(s, d)
           .select(col("lang"), TextOps.tokens(col("text")).as("w"))
-          .select(col("lang"), explode(bigrams).as("bigram"))
+          .select(col("lang"), explode(TextOps.ngrams(col("w"), 2)).as("bigram"))
           .groupBy("lang", "bigram").agg(count(lit(1)).as("n"))
           .withColumn("rnk", row_number().over(
             Window.partitionBy("lang").orderBy(col("n").desc, col("bigram"))))
@@ -814,9 +807,7 @@ object TextQueries {
         // hint costs nothing — and on a doc_id-bucketed corpus layout
         // the docs side needs no exchange at all (LakeSpec pins this).
         // The Gopher segment/top-gram signals are stateful HOF walks
-        // over MATERIALIZED sorted arrays (CollapseProject keeps
-        // multiply-referenced expensive columns; element_at on an
-        // inline subtree would re-evaluate it per access).
+        // over bound sorted arrays (the rule on TextOps.ngrams).
         docs.join(top.hint("merge"), "doc_id")
           .withColumn("ls", TextOps.segments(col("text"), "\n"))
           .withColumn("sl", sort_array(col("ls")))
@@ -1549,14 +1540,9 @@ object TextQueries {
     // broadcast-weights deployment keeps at 100 TB. Sum/count are exact
     // int64; the one closing division is IEEE-deterministic.
     "tx_quality_model" -> QueryDef(
-      (s, d) => {
-        val (n, wsum, score) =
-          TextOps.qmScoreCols(TextOps.qmFeatures(col("text")))
-        Tables.documents(s, d)
-          .select(col("doc_id"), n.as("n_feats"), wsum.as("w_sum"),
-            score.as("score"), (score > 0).as("keep"))
-          .orderBy("doc_id")
-      },
+      (s, d) => TextOps.qmScored(Tables.documents(s, d), "doc_id", "text")
+        .withColumn("keep", col("score") > 0)
+        .orderBy("doc_id"),
       Some(s"""WITH t AS (
         |  SELECT doc_id,
         |         string_split_regex(trim(lower(text)), '\\s+') AS toks
@@ -1781,11 +1767,7 @@ object TextQueries {
           Tables.documents(s, d)
           .filter(col("source").isin(srcs: _*))
           .select(col("source"), TextOps.tokens(col("text")).as("toks"))
-          .select(col("source"), explode(expr(
-            """IF(size(toks) >= 3,
-              |   transform(sequence(0, size(toks) - 3),
-              |     i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])),
-              |   CAST(array() AS ARRAY<STRING>))""".stripMargin)).as("s3"))
+          .select(col("source"), explode(TextOps.ngrams(col("toks"), 3)).as("s3"))
           .select(col("source"),
             conv(substring(md5(encode(col("s3"), "UTF-8")), 1, 13), 16, 10)
               .cast("long").as("h"))

@@ -31,6 +31,36 @@ class CorpusSpec extends AnyFunSuite {
     // "x x x x": bigrams all equal -> 2/3 dup; uniq words 1/4
     assert(math.abs(rows(2).getDouble(1) - 2.0 / 3.0) < 1e-15)
     assert(rows(2).getDouble(3) == 0.25)
+
+    // equivalence pin: ngrams is the one window spelling, and equals the
+    // array_join(slice(w, i, n), " ") windows the Bloom probe and the
+    // substring dedup built before it, on adversarial documents
+    val adversarial = Seq(
+      "中文 分词 测试 中文 分词 测试",                  // CJK
+      "cafe\u0301 nai\u0308ve re\u0301sume\u0301 cafe\u0301", // combining
+      "\ud835\udc9c \ud83d\ude00 \ud835\udc9c x \ud83d\ude00", // non-BMP
+      "", "   ", "\t \n ", "solo", "\tlead tab", "Mixed CASE mixed case",
+      "p", "p q", "p q r", "p q r s", "p q r s t")     // exactly n tokens
+    val w = col("w")
+    val docs = adversarial.toDF("text")
+      .select(col("text"), TextOps.tokens(col("text")).as("w"))
+    for (n <- 1 to 5) {
+      val sliced = when(size(w) >= n,
+        transform(sequence(lit(1), size(w) - (n - 1)),
+          i => array_join(slice(w, i, lit(n)), " ")))
+        .otherwise(typedLit(Seq.empty[String]))
+      val got = docs.select(col("text"), TextOps.ngrams(w, n), sliced)
+        .collect()
+      assert(got.length == adversarial.length)
+      got.foreach { r =>
+        assert(r.getSeq[String](1) == r.getSeq[String](2),
+          s"n=$n text=${r.getString(0)}")
+      }
+      // exactly n tokens: one window, the whole document
+      assert(got.exists(r => r.getSeq[String](1) ==
+        Seq(Seq("p", "q", "r", "s", "t").take(n).mkString(" ")) &&
+        r.getString(0).split(" ").length == n), s"n=$n")
+    }
   }
 
   test("tx_pii_scrub redacts emails and IPv4s, counted and hashed") {
@@ -99,9 +129,7 @@ class CorpusSpec extends AnyFunSuite {
       (0L, "The quick brown fox jumps over the lazy dog"),
       (1L, "one"),
       (2L, "  spaced   out   tokens  "))
-    val (n, wsum, score) = TextOps.qmScoreCols(TextOps.qmFeatures(col("text")))
-    val got = texts.toDF("doc_id", "text")
-      .select(col("doc_id"), n, wsum, score)
+    val got = TextOps.qmScored(texts.toDF("doc_id", "text"), "doc_id", "text")
       .as[(Long, Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     for ((id, t) <- texts) {

@@ -21,8 +21,8 @@ class DedupSpec extends AnyFunSuite {
   ).toDF("doc_id", "text")
 
   test("shingles produce n-2 trigrams, none for short docs") {
-    val sh = Dedup.shingles(docs, "doc_id", "text")
-    val counts = sh.groupBy("id").count().as[(Long, Long)].collect().toMap
+    val counts = Dedup.shingleSets(docs, "doc_id", "text")
+      .select("id", "n").as[(Long, Long)].collect().toMap
     val n0 = base.trim.split("\\s+").length
     assert(counts(0L) <= n0 - 2) // distinct may collapse repeats
     assert(!counts.contains(4L)) // 2 tokens -> no trigram

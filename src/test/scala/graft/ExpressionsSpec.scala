@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.GraftFunctions
+import graft.operators.TextOps
 
 /** Native Catalyst expressions vs their higher-order-function
   * formulations: bit-identical results required. */
@@ -40,13 +41,10 @@ class ExpressionsSpec extends AnyFunSuite {
       (3L, "x y"),         // shorter than w -> empty
       (4L, "one two three")
     ).toDF("id", "text")
-    val toks = split(trim(lower($"text")), "\\s+")
     val fused = docs.select($"id",
-      GraftFunctions.shingleHashes(toks, 3).as("hs"))
-    val reference = docs.select($"id", explode(when(size(toks) >= 3,
-        transform(sequence(lit(1), size(toks) - 2),
-          i => array_join(slice(toks, i, lit(3)), " ")))
-        .otherwise(typedLit(Seq.empty[String]))).as("shingle"))
+      GraftFunctions.shingleHashes(TextOps.tokens($"text"), 3).as("hs"))
+    val reference = docs.select($"id", TextOps.tokens($"text").as("w"))
+      .select($"id", explode(TextOps.ngrams($"w", 3)).as("shingle"))
       .select($"id", xxhash64($"shingle").as("sh"))
       .groupBy("id").agg(sort_array(collect_set($"sh")).as("hs"))
     val f = fused.filter(size($"hs") > 0).as[(Long, Seq[Long])].collect().toMap

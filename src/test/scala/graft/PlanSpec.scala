@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction,
+  Lower, Md5, NamedLambdaVariable, RLike, RegExpExtractBase, RegExpReplace,
+  String2TrimExpression, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,38 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Every registered query built once for the registry-wide checks:
+    * its frame and the executions it ran while being built — those
+    * whose QueryExecution was created after the previous query's frame
+    * and before its own (execution ids increase with creation). */
+  private lazy val registryBuilt: Seq[(String, DataFrame, Seq[QueryExecution])] = {
+    val (built, ran) = Measure.executions(spark) {
+      SparkEntry.registry.toSeq.sortBy(_._1)
+        .map { case (name, qd) => name -> qd.fn(spark, sf) }
+    }
+    val ids = built.map(_._2.queryExecution.id)
+    built.zip(-1L +: ids).map { case ((name, df), after) =>
+      (name, df, ran.filter(qe => qe.id > after && qe.id < df.queryExecution.id))
+    }
+  }
+
+  /** The maximal lambda-free subtrees of every lambda body in `p` that
+    * split, match a regex, md5, lower-case or trim. */
+  private def perElementRederivations(p: LogicalPlan): Seq[Expression] = {
+    def rederives(e: Expression): Boolean = e.exists {
+      case _: StringSplit | _: RLike | _: RegExpReplace | _: RegExpExtractBase |
+          _: Md5 | _: Lower | _: String2TrimExpression => true
+      case _ => false
+    }
+    def lambdaFree(e: Expression): Seq[Expression] =
+      if (e.exists(_.isInstanceOf[NamedLambdaVariable])) e.children.flatMap(lambdaFree)
+      else if (rederives(e)) Seq(e)
+      else Nil
+    p.collectWithSubqueries { case n => n.expressions }.flatten
+      .flatMap(_.collect { case l: LambdaFunction => l.function })
+      .flatMap(lambdaFree)
+  }
 
   test("bucket equality predicate pushes down to the parquet scan") {
     val p = plan(Tables.objects(spark, sf).filter(col("bucket") === "src2"))
@@ -60,11 +96,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("quality-model inference is a zero-shuffle scan-stage projection") {
-    val (n, wsum, score) =
-      TextOps.qmScoreCols(TextOps.qmFeatures(col("text")))
-    val p = plan(Tables.documents(spark, sf)
-      .select(col("doc_id"), n.as("n_feats"), wsum.as("w_sum"),
-        score.as("score")))
+    val p = plan(TextOps.qmScored(Tables.documents(spark, sf), "doc_id", "text"))
     assert(!p.contains("Exchange"), p)
     assert(p.contains("ReadSchema") && !p.contains("lang"), p)
   }
@@ -168,13 +200,29 @@ class PlanSpec extends AnyFunSuite {
     val bnljAllowed = Set("sim_topk_brute", "sim_ivf_topk",
       "dd_bloom_probe", "ds_temperature_mix", "sim_ivf_stats",
       "tx_kmv_setops", "tx_bm25_indexed", "tx_bm25_postings")
-    SparkEntry.registry.foreach { case (name, qd) =>
-      val p = plan(qd.fn(spark, sf))
+    registryBuilt.foreach { case (name, df, _) =>
+      val p = plan(df)
       assert(!p.contains("CartesianProduct"), s"$name plans a cartesian:\n$p")
       if (!bnljAllowed(name))
         assert(!p.contains("BroadcastNestedLoopJoin"),
           s"$name plans a nested loop join:\n$p")
     }
+  }
+
+  test("no lambda re-derives its input per element") {
+    // transform/aggregate/filter lambdas are interpreted
+    // (CodegenFallback): a subtree of a lambda body that reads no lambda
+    // variable is evaluated again for every element. Tokenizing, regex,
+    // md5 or case/trim work there re-derives the row's input once per
+    // element — a per-token re-split of the document (TextOps.ngrams).
+    // Checked on each query's optimized plan and on the plans it ran
+    // eagerly while being built (checkpoints).
+    val hits = registryBuilt.flatMap { case (name, df, ran) =>
+      val es = (df.queryExecution +: ran)
+        .flatMap(qe => perElementRederivations(qe.optimizedPlan)).distinct
+      es.headOption.map(e => s"$name: ${es.size} subtree(s), e.g. ${e.sql}")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("corpus-prep scans prune to the referenced columns") {

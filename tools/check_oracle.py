@@ -10,6 +10,11 @@ import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+# DuckDB's caps: a machine with 4 cores and 16 GB must hold every oracle,
+# so one that outgrows them fails here instead of passing on a larger host.
+MEMORY_LIMIT = "3GB"
+THREADS = 2
+
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
     # canonicalize values to strings with rounded floats
@@ -27,7 +32,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main(outdir, sfdir):
     oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT, "threads": THREADS})
     for t in TABLES:
         p = f"{sfdir}/{t}.parquet"
         if os.path.exists(p):

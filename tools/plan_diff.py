@@ -6,7 +6,8 @@ unchanged: the returned DataFrame's plan and every QueryExecution the
 builder ran while building it (checkpoints included). Raw plan text is
 never equal across two runs, so both sides are normalized first:
 
-  - expression ids (`qid#28312L` -> `qid#L`) and exchange `plan_id`s;
+  - expression ids (`qid#28312L` -> `qid#L`), lambda variable numbers
+    (`lambda x_131` -> `lambda x_`) and exchange `plan_id`s;
   - RDD ids and call sites (`MapPartitionsRDD[8092] at localCheckpoint
     at Similarity.scala:233` -> `MapPartitionsRDD[] at localCheckpoint`),
     since moving a checkpoint into a helper moves its call site;
@@ -35,6 +36,9 @@ RULES = [
     (re.compile(r"\$Lambda[$\w]*/0x[0-9a-f]+@[0-9a-f]+"), "$Lambda"),
     (re.compile(r"@[0-9a-f]{5,8}\b"), "@"),
     (re.compile(r"#\d+"), "#"),
+    # lambda variables are numbered by one JVM-wide counter, which
+    # shifts with every lambda built earlier in the run
+    (re.compile(r"\blambda ([a-z]+)_\d+"), r"lambda \1_"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"(\w*RDD)\[\d+\]"), r"\1[]"),
     (re.compile(r"( at \w+) at [\w$.]+\.(?:scala|java):\d+"), r"\1"),
