@@ -10,7 +10,7 @@ import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{BoundedWait, Measure, Tables}
+import graft.{Measure, Tables}
 import graft.operators.{Dedup, Similarity, Skew}
 
 /** `Measure skew`: what the hot-bucket tiling guard
@@ -67,7 +67,7 @@ object SkewStress {
           .collect()(0)
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       }
-      try res = BoundedWait.awaitAll(Seq(group -> run), timeoutSec.seconds).head
+      try res = Await.result(run, timeoutSec.seconds)
       catch {
         case _: TimeoutException =>
           timedOut = true

@@ -435,9 +435,7 @@ object Similarity {
     * index (centroids + codebook rows + codes) — the steady-state form
     * where all three are persisted trained artifacts
     * ([[graft.sources.Models.ivfPqIndex]]). Callers materialize it
-    * ([[graft.Materialize]]) and release their own `prep` cache;
-    * multi-configuration consumers ([[ivfPqSweep]]) share one cached
-    * `prep`/index across configs.
+    * ([[graft.Materialize]]) and release their own `prep` cache.
     *
     * `rerank = 0` returns the pure-ADC ranking `(qid, nid, ad2, rank)`.
     * `rerank = R > 0` adds the FAISS-`refine` stage production IVF-PQ
@@ -461,31 +459,46 @@ object Similarity {
   /** The probe/LUT/ADC half of [[ivfPqScorePlan]] alone — every
     * `(qid, nid)` candidate in the query's `nProbe` probed cells with
     * its asymmetric distance `ad2`, BEFORE any ranking. Split out so a
-    * multi-configuration consumer (the operating-point sweep) can
-    * materialize ONE scored table per (index, nProbe) and derive every
-    * rerank variant from it, instead of re-running the full ADC
-    * pipeline per rerank arm. */
+    * multi-configuration consumer (the operating-point sweep,
+    * [[graft.queries.SimilarityQueries.ivfPqSweep]]) can materialize
+    * ONE scored table per index and derive every (nProbe, rerank) arm
+    * from it.
+    *
+    * `probeRank = true` adds `probe_rank`, the 1-based position of the
+    * candidate's cell in the query's probe order. That order is the
+    * total order `(d2, cid)`, so the cells probed at a smaller nProbe
+    * are a prefix of it, and `ad2` does not depend on nProbe: the rows
+    * with `probe_rank <= p` ARE the scored table at `nProbe = p`
+    * (SimilaritySpec pins the equivalence). */
   private[graft] def ivfPqAdcScored(prep: DataFrame, cents: DataFrame,
       cbRows: DataFrame, codes: DataFrame, queryLimit: Long,
-      nProbe: Int, m: Int): DataFrame = {
+      nProbe: Int, m: Int, probeRank: Boolean = false): DataFrame = {
     // (sub-dimension arithmetic lives in the native pq_luts kernel)
-    val probe = prep.filter(col("id") < queryLimit)
+    val cells = transform(slice(array_sort(distArr), 1, nProbe),
+      c => c.getField("cid"))
+    val queries = prep.filter(col("id") < queryLimit)
       .crossJoin(centArr(cents))
-      .select(col("id").as("qid"), col("qv"),
-        explode(transform(slice(array_sort(distArr), 1, nProbe),
-          c => c.getField("cid"))).as("cid"))
+    val probe =
+      if (probeRank) queries
+        .select(col("id").as("qid"), col("qv"),
+          posexplode(cells).as(Seq("_pos", "cid")))
+        .withColumn("probe_rank", col("_pos") + 1)
+      else queries
+        .select(col("id").as("qid"), col("qv"), explode(cells).as("cid"))
+    val rank = if (probeRank) Seq(col("probe_rank")) else Nil
     // native pq_luts/adc_sum loops — see [[pqTopKPlan]]'s note; the
     // interpreted HOF chain dominated every probe's ADC stage
     val luts = probe
       .join(broadcast(cents.select(col("cid"), col("cv"))), "cid")
       .withColumn("qrv", expr("zip_with(qv, cv, (x, c) -> x - c)"))
       .crossJoin(codebookRow(cbRows))
-      .select(col("qid"), col("cid"),
-        GraftFunctions.pqLuts(col("qrv"), col("_cb"), m).as("luts"))
+      .select(Seq(col("qid"), col("cid")) ++ rank :+
+        GraftFunctions.pqLuts(col("qrv"), col("_cb"), m).as("luts"): _*)
     codes.join(broadcast(luts), Seq("cid"))
       .filter(col("qid") =!= col("nid"))
-      .select(col("qid"), col("nid"),
-        GraftFunctions.adcSum(col("codes"), col("luts")).as("ad2"))
+      .select(Seq(col("qid"), col("nid"),
+        GraftFunctions.adcSum(col("codes"), col("luts")).as("ad2")) ++
+        rank: _*)
   }
 
   /** The ranking half of [[ivfPqScorePlan]] over an existing
@@ -512,58 +525,6 @@ object Similarity {
         (col("qn2") + col("n2") -
           lit(2L) * idot(col("qqv"), col("qv"))).as("d2"))
     topPerQuery(gt, k, "rk", col("d2")).select("qid", "nid")
-  }
-
-  /** IVF-PQ operating-point sweep: recall@`k` vs exact-L2 ground truth
-    * for every (nProbe × ksub) combination, as ONE result table — the
-    * parameter study a serving pipeline runs before choosing the index
-    * configuration it persists (the dial: nProbe trades scan fraction
-    * for coarse recall, ksub trades code size for residual resolution).
-    *
-    * Cost shape: the expensive shared work happens ONCE — quantizer
-    * training (`iters` Lloyd steps), residuals, the ground-truth pass,
-    * and one codes table per `ksub` (NOT per config); each (nProbe,
-    * ksub) config then pays only its probe + broadcast-LUT + ADC scan,
-    * exactly the per-query serving cost it is auditing. Output rows
-    * `(n_probe, ksub, n_hits, recall_at_k)` stay exact: hits are
-    * integer counts and the recall is one IEEE division by the fixed
-    * `queryLimit·k` denominator, so the whole sweep hash-matches a
-    * from-scratch oracle replay. */
-  def ivfPqSweep(embs: DataFrame, idCol: String, vecCol: String, k: Int,
-      queryLimit: Long, nProbes: Seq[Int], ksubs: Seq[Int],
-      reranks: Seq[Int] = Seq(0), nList: Int = 16, iters: Int = 2,
-      m: Int = 8, dim: Int = 64): DataFrame = {
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val prep = prepared(embs, idCol, vecCol)
-      .filter(size(col("qv")) === dim).cache()
-    val cents = Materialize("similarity:ivfpq_sweep:centroids",
-      refinedCentroids(prep, nList, iters))
-    val res = Materialize("similarity:ivfpq_sweep:residuals",
-      ivfPqResiduals(prep, cents))
-    val gt = Materialize("similarity:ivfpq_sweep:ground_truth",
-      exactL2TopK(prep, k, queryLimit))
-    val denom = (queryLimit * k).toDouble
-    val arms = for {
-      ksub <- ksubs
-      codes = Materialize("similarity:ivfpq_sweep:codes", ivfPqCodes(res,
-        res.filter(col("id") < ksub)
-          .select(col("id").as("cid"), col("rv").as("cv")),
-        m, ksub, dim))
-      nProbe <- nProbes
-      rerank <- reranks
-    } yield {
-      val cbRows = res.filter(col("id") < ksub)
-        .select(col("id").as("cid"), col("rv").as("cv"))
-      ivfPqScorePlan(prep, cents, cbRows, codes, k, queryLimit, nProbe,
-          m, dim, rerank)
-        .join(gt, Seq("qid", "nid"), "left_semi")
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(nProbe).as("n_probe"), lit(ksub).as("ksub"),
-          lit(rerank).as("rerank"), col("n_hits"),
-          (col("n_hits").cast("double") / lit(denom)).as(s"recall_at_$k"))
-    }
-    Materialize("similarity:ivfpq_sweep:recall",
-      arms.reduce(_.unionAll(_)), prep)
   }
 
   def ivfPqTopK(embs: DataFrame, idCol: String, vecCol: String, k: Int,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.QueryDef.withCtes
 import graft.functions.GraftFunctions
-import graft.operators.Listing
+import graft.operators.{BlobOps, Listing}
 import graft.operators.Listing.ListParams
 
 /** Metadata-surface operator demos (SURVEY.md §2.A/B/C/D/F/G/H) over the
@@ -294,10 +294,7 @@ object MetaQueries {
 
     // ---- A12/B7/F1: block list scan, single-column projection ----------
     "a12_block_scan" -> QueryDef(
-      (s, d) => Tables.chunks(s, d)
-        .filter(col("inode") === 7L)
-        .select("block").distinct()
-        .orderBy("block"),
+      (s, d) => BlobOps.blockList(Tables.chunks(s, d), 7L),
       Some(withCtes(
         """SELECT DISTINCT block FROM chunks WHERE inode = 7 ORDER BY block""",
         Tables.chunksSql)),

@@ -375,6 +375,53 @@ object SimilarityQueries {
          |                            ORDER BY d2, nid) AS rank
          |  FROM rr) WHERE rank <= $k ORDER BY qid, rank""".stripMargin
 
+  /** IVF-PQ operating-point sweep over GIVEN indexes: recall@`k` vs
+    * exact-L2 ground truth for every (nProbe × index × rerank)
+    * configuration, as ONE table `(n_probe, ksub, rerank, n_hits,
+    * recall_at_<k>)` ordered by its first three columns — the
+    * parameter study a serving pipeline runs before choosing the index
+    * configuration it persists (nProbe trades scan fraction for coarse
+    * recall, ksub trades code size for residual resolution). `indexes`
+    * maps each ksub to its `(centroids, codebook rows, codes)`, as
+    * [[graft.sources.Models.ivfPqIndex]] returns them; `embs` holds
+    * `(vec_id, embedding)` rows.
+    *
+    * Cost shape: each index is scored ONCE, at the widest nProbe, with
+    * every candidate's probe rank ([[Similarity.ivfPqAdcScored]]). The
+    * cells probed at a narrower nProbe are a prefix of the same probe
+    * order, so each arm is the filter `probe_rank <= nProbe` over that
+    * one table, then its rerank. Rows stay exact: hits are integer
+    * counts and the recall is one IEEE division by the fixed
+    * `queryLimit·k` denominator. */
+  def ivfPqSweep(embs: DataFrame,
+      indexes: Seq[(Int, (DataFrame, DataFrame, DataFrame))], k: Int,
+      queryLimit: Long, nProbes: Seq[Int], reranks: Seq[Int], m: Int,
+      dim: Int): DataFrame = {
+    // cached: the ground truth, every probe and every rerank read it
+    val prep = Similarity.prepared(embs, "vec_id", "embedding")
+      .filter(size(col("qv")) === dim).cache()
+    val gt = Materialize("similarity:sim_ivfpq_sweep:ground_truth",
+      Similarity.exactL2TopK(prep, k, queryLimit))
+    val arms = for {
+      (ksub, (cents, cbRows, codes)) <- indexes
+      scored = Materialize(s"similarity:sim_ivfpq_sweep:adc_ksub$ksub",
+        Similarity.ivfPqAdcScored(prep, cents, cbRows, codes, queryLimit,
+          nProbes.max, m, probeRank = true))
+      nProbe <- nProbes
+      rerank <- reranks
+    } yield Similarity
+      .ivfPqRankFromScored(scored.filter(col("probe_rank") <= nProbe),
+        prep, k, rerank)
+      .join(gt, Seq("qid", "nid"), "left_semi")
+      .agg(count(lit(1)).as("n_hits"))
+      .select(lit(nProbe).as("n_probe"), lit(ksub).as("ksub"),
+        lit(rerank).as("rerank"), col("n_hits"),
+        (col("n_hits").cast("double") / lit((queryLimit * k).toDouble))
+          .as(s"recall_at_$k"))
+    Materialize("similarity:sim_ivfpq_sweep:recall",
+      arms.reduce(_.unionAll(_)).orderBy("n_probe", "ksub", "rerank"), prep)
+  }
+
   /** DuckDB replay of the operating-point sweep: recall@k of the IVF-PQ
     * top-k against the exact-L2 ground truth `gt` per (nProbe, ksub,
     * rerank) config, generated from the same parameters as the Spark
@@ -1094,60 +1141,17 @@ object SimilarityQueries {
     // rerank) ≈ 0.26 recall@5 to the 0.92 shipping point. The study
     // audits the PERSISTED artifacts (Models.ivfPqIndex at both
     // codebook widths — the ksub path is part of the artifact key, so
-    // the counterfactual width is just a second stored index); each of
-    // the 12 configs pays only its own probe + ADC + rerank. The
-    // oracle replays the whole pipeline INCLUDING training from
-    // scratch — the hash match is simultaneously the recall study and
-    // a reload==retrain proof across every cell.
+    // the counterfactual width is just a second stored index), each
+    // scored once ([[ivfPqSweep]]). The oracle replays the whole
+    // pipeline INCLUDING training from scratch — the hash match is
+    // simultaneously the recall study and a reload==retrain proof
+    // across every cell.
     "sim_ivfpq_sweep" -> QueryDef(
-      (s, d) => {
-        val prep = Similarity.prepared(
-          Tables.embeddings(s, d), "vec_id", "embedding")
-          .filter(size(col("qv")) === 64).cache()
-        val gt = Materialize("similarity:sim_ivfpq_sweep:ground_truth",
-          Similarity.exactL2TopK(prep, 5, 10L))
-        // ONE materialized ADC table per (ksub, nProbe): the probe/LUT/
-        // ADC pipeline is the expensive half of every arm and is
-        // identical across the two rerank variants — scoring it per
-        // (ksub, nProbe, rerank) ran the 6 pipelines twice each. The 6
-        // materializations run CONCURRENTLY from a small thread pool
-        // (independent jobs back-fill each other's stage tails — the
-        // same overlap the previous all-lazy 12-arm union got from its
-        // single action, kept here alongside the dedup); index loads
-        // stay sequential (catalog table registration is not a
-        // concurrency surface).
-        val byKsub = Seq(16, 256)
-          .map(ks => ks -> graft.sources.Models.ivfPqIndex(s, d, ksub = ks))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-        val scoreds =
-          try {
-            implicit val ec: scala.concurrent.ExecutionContext =
-              scala.concurrent.ExecutionContext.fromExecutor(pool)
-            graft.BoundedWait.awaitAll(for {
-              (ksub, idx) <- byKsub
-              nProbe <- Seq(4, 8, 16)
-            } yield s"sweep arm ksub=$ksub nProbe=$nProbe" ->
-              scala.concurrent.Future {
-                (ksub, nProbe, Materialize(
-                  s"similarity:sim_ivfpq_sweep:adc_ksub${ksub}_probe$nProbe",
-                  Similarity.ivfPqAdcScored(prep, idx._1, idx._2, idx._3,
-                    10L, nProbe, 8)))
-              })
-          } finally pool.shutdown()
-        val arms = for {
-          (ksub, nProbe, scored) <- scoreds
-          rerank <- Seq(0, 50)
-        } yield Similarity
-          .ivfPqRankFromScored(scored, prep, 5, rerank)
-          .join(gt, Seq("qid", "nid"), "left_semi")
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(nProbe).as("n_probe"), lit(ksub).as("ksub"),
-            lit(rerank).as("rerank"), col("n_hits"),
-            (col("n_hits").cast("double") / lit(50.0)).as("recall_at_5"))
-        Materialize("similarity:sim_ivfpq_sweep:recall",
-          arms.reduce(_.unionAll(_)).orderBy("n_probe", "ksub", "rerank"),
-          prep)
-      },
+      (s, d) => ivfPqSweep(Tables.embeddings(s, d),
+        Seq(16, 256).map(ks =>
+          ks -> graft.sources.Models.ivfPqIndex(s, d, ksub = ks)),
+        k = 5, queryLimit = 10L, nProbes = Seq(4, 8, 16),
+        reranks = Seq(0, 50), m = 8, dim = 64),
       Some(ivfPqSweepSql(k = 5, queryLimit = 10, nList = 16, iters = 2,
         m = 8, nProbes = Seq(4, 8, 16), ksubs = Seq(16, 256),
         reranks = Seq(0, 50))),

@@ -299,22 +299,37 @@ object Models {
     * at-least-once callers — a replayed batch appends nothing. The
     * artifact's id column streams MAP-SIDE against a broadcast of the
     * batch ids and the hit set (at most batch-sized) broadcasts back as
-    * an anti join: the artifact is never read in full or shuffled.
-    * `range`, the batch's (min, max) id, lets parquet row-group stats
-    * prune files that cannot hold batch ids and collapses the hits to
-    * distinct ids — for the postings tier, whose artifacts hold many
-    * rows per document and whose daily folds carry recent, clustered
-    * ids (the probe reads the fold-recent tail, not a year of index). */
+    * an anti join: the artifact is never read in full or shuffled. */
   private def fresh(batch: DataFrame, idCol: String, artifact: DataFrame,
-      artCol: String, range: Option[(Any, Any)] = None): DataFrame = {
-    val ids = artifact.select(col(artCol).as(idCol))
-    val hits = range
-      .fold(ids) { case (lo, hi) =>
-        ids.filter(col(idCol).between(lit(lo), lit(hi))) }
+      artCol: String): DataFrame = {
+    val present = artifact.select(col(artCol).as(idCol))
       .join(broadcast(batch.select(idCol)), Seq(idCol), "left_semi")
-    val present =
-      (if (range.isEmpty) hits else hits.distinct()).localCheckpoint(true)
+      .localCheckpoint(true)
     batch.join(broadcast(present), Seq(idCol), "left_anti")
+  }
+
+  /** [[fresh]] over several `doc_id`-keyed artifacts in ONE probe — the
+    * postings tier's replay guard: the union of every artifact's
+    * `(doc_id, tag)` streams against a broadcast of the batch ids, and
+    * the distinct hits are checkpointed once; each tag's fresh slice is
+    * an anti join against its share of them. `range`, the batch's
+    * (min, max) id, lets parquet row-group stats prune files that
+    * cannot hold batch ids, and `distinct` collapses the many rows
+    * per document these artifacts hold (daily folds carry recent,
+    * clustered ids: the probe reads the fold-recent tail, not a year
+    * of index). */
+  private def freshByArtifact(batch: DataFrame, range: (Any, Any),
+      artifacts: Seq[(String, DataFrame)]): Map[String, DataFrame] = {
+    val present = artifacts
+      .map { case (tag, t) => t.select(col("doc_id"), lit(tag).as("tag")) }
+      .reduce(_.unionAll(_))
+      .filter(col("doc_id").between(lit(range._1), lit(range._2)))
+      .join(broadcast(batch.select("doc_id")), Seq("doc_id"), "left_semi")
+      .distinct().localCheckpoint(true)
+    artifacts.map { case (tag, _) =>
+      tag -> batch.join(broadcast(present.filter(col("tag") === tag)
+        .select("doc_id")), Seq("doc_id"), "left_anti")
+    }.toMap
   }
 
   // ---- subword vocabulary ------------------------------------------------
@@ -1163,12 +1178,13 @@ object Models {
     * artifact now carries its own replay guard:
     *
     *   - postings / positional / doc-lens rows: docs already present
-    *     in THAT artifact drop from its batch slice — each probe
-    *     streams the artifact's single doc_id column map-side against
-    *     a broadcast of the batch ids, with a min/max id range filter
-    *     so parquet row-group stats prune files that cannot contain
-    *     batch ids (daily folds carry recent, clustered ids; the probe
-    *     reads the fold-recent tail, not a year of index);
+    *     in THAT artifact drop from its batch slice — ONE presence
+    *     probe ([[freshByArtifact]]) streams the three artifacts'
+    *     tagged doc_id columns map-side against a broadcast of the
+    *     batch ids, with a min/max id range filter so parquet
+    *     row-group stats prune files that cannot contain batch ids
+    *     (daily folds carry recent, clustered ids; the probe reads the
+    *     fold-recent tail, not a year of index);
     *   - the df statistic has no per-doc memory (it is a merged
     *     count), so its guard is a FOLD LEDGER: the df rewrite's
     *     commit marker records the order-independent digest of the
@@ -1211,41 +1227,25 @@ object Models {
         // analysis on string ids); note the retrieval artifacts' own
         // schema still fixes doc_id to BIGINT — this just keeps the
         // guard from being the narrowing point. min/max ride along in
-        // the id's native type for the probes' row-group range pruning.
+        // the id's native type for the probe's row-group range pruning.
         val idAgg = b.agg(count(lit(1)),
           expr("bit_xor(xxhash64(doc_id))"),
           expr("bit_xor(xxhash64(doc_id, 1017L))"),
           min("doc_id"), max("doc_id")).head()
         val foldId = s"fold=${idAgg.getLong(0)}_${idAgg.getLong(1)}" +
           s"_${idAgg.getLong(2)}"
-        val range = Some((idAgg.get(3), idAgg.get(4)))
+        val range = (idAgg.get(3), idAgg.get(4))
         val (freshPost, freshPos, freshLens, dfApplied) =
           if (!dedupeIds) (b, b, b, false)
           else {
-            // Resolve the artifact frames ON THIS THREAD first —
-            // docLens takes the Models lock this method already holds,
-            // so a pool thread calling it would deadlock. The three
-            // presence probes themselves are independent read-only
-            // scans whose cost is the eager localCheckpoint action, so
-            // they fan out to a small pool (guide §2.6 — the fold's
-            // guard phase is action-count bound, not data bound); write
-            // order below is untouched.
             val lensT = docLens(spark, sfDir)
             val applied = Generations.head(spark, dfTablePath(sfDir))
               .exists(_._2 == foldId)
-            def probe(t: DataFrame) = fresh(b, "doc_id", t, "doc_id", range)
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-            try {
-              implicit val ec: scala.concurrent.ExecutionContext =
-                scala.concurrent.ExecutionContext.fromExecutor(pool)
-              import scala.concurrent.Future
-              val Seq(p, s, l) = graft.BoundedWait.awaitAll(Seq(
-                "postings presence probe" -> Future(probe(post)),
-                "positional presence probe" ->
-                  pos.fold(Future.successful(b))(t => Future(probe(t))),
-                "doc-lengths presence probe" -> Future(probe(lensT))))
-              (p, s, l, applied)
-            } finally pool.shutdown()
+            val slices = freshByArtifact(b, range,
+              Seq("postings" -> post, "doc_lens" -> lensT) ++
+                pos.map("positional" -> _))
+            (slices("postings"), slices.getOrElse("positional", b),
+              slices("doc_lens"), applied)
           }
         val replay = dedupeIds && dfApplied &&
           freshPost.isEmpty && freshLens.isEmpty &&

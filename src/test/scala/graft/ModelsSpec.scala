@@ -1644,22 +1644,6 @@ class ModelsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(resolved()(70L) == 70L, "post-compact fold did not land")
   }
 
-  // the fold's presence-probe pool (and the IVF-PQ sweep's arm pool)
-  // wait through BoundedWait: a hang fails naming the stuck future
-  // instead of stalling silently
-  test("a pool future that never completes fails with its name") {
-    import scala.concurrent.{Future, Promise}
-    import scala.concurrent.duration._
-    val e = intercept[java.util.concurrent.TimeoutException] {
-      BoundedWait.awaitAll(Seq("fast" -> Future.successful(1),
-        "postings presence probe" -> Promise[Int]().future),
-        within = 200.millis)
-    }
-    assert(e.getMessage.contains("postings presence probe"), e.getMessage)
-    assert(BoundedWait.awaitAll(Seq("a" -> Future.successful(1),
-      "b" -> Future.successful(2))) == Seq(1, 2))
-  }
-
   /** A run-private corpus: the md5 slice `h < "cc"` of the test
     * corpus's documents under a fresh dir. */
   private def sliceCorpus(prefix: String): String = {

@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
+import graft.queries.SimilarityQueries
 
 /** Similarity kernels: quantized-int exactness and top-k ordering. */
 class SimilaritySpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
+
+  val sf = "/root/testdata/sf0.01"
 
   val vecs = Seq(
     (0L, Array(1.0f, 0.0f, 0.0f)),
@@ -346,11 +350,25 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got.map(_._1).toSeq == Seq(1L, 3L, 2L))
   }
 
+  /** An IVF-PQ index over `prep` trained here, in the form
+    * `Models.ivfPqIndex` serves: `(centroids, codebook rows, codes)`. */
+  private def trainedIvfPq(prep: DataFrame, nList: Int, iters: Int,
+      m: Int, ksub: Int, dim: Int) = {
+    val cents = Similarity.refinedCentroids(prep, nList, iters)
+    val res = Similarity.ivfPqResiduals(prep, cents)
+    val cbRows = res.filter(col("id") < ksub)
+      .select(col("id").as("cid"), col("rv").as("cv"))
+    (cents, cbRows, Similarity.ivfPqCodes(res, cbRows, m, ksub, dim))
+  }
+
   test("ivfPqSweep: full-probe + full-rerank arm recovers exact " +
       "ground truth (recall 1.0)") {
-    val sweep = Similarity.ivfPqSweep(vecs, "vec_id", "embedding",
-      k = 2, queryLimit = 2L, nProbes = Seq(1, 2), ksubs = Seq(2),
-      reranks = Seq(0, 4), nList = 2, iters = 1, m = 3, dim = 3)
+    val prep = Similarity.prepared(vecs, "vec_id", "embedding")
+    val sweep = SimilarityQueries.ivfPqSweep(vecs,
+        Seq(2 -> trainedIvfPq(prep, nList = 2, iters = 1, m = 3, ksub = 2,
+          dim = 3)),
+        k = 2, queryLimit = 2L, nProbes = Seq(1, 2), reranks = Seq(0, 4),
+        m = 3, dim = 3)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) ->
         r.getDouble(4)).toMap
     assert(sweep.size == 4)
@@ -361,6 +379,61 @@ class SimilaritySpec extends AnyFunSuite {
     // monotone in nProbe at fixed (ksub, rerank): more probed cells can
     // only add candidates
     assert(sweep((1, 2, 4)) <= sweep((2, 2, 4)))
+  }
+
+  // The sweep scores each index once at its widest nProbe and derives
+  // every narrower arm by `probe_rank <= nProbe`: pinned against the
+  // table scored at that nProbe directly, on the persisted indexes the
+  // registry query audits.
+  test("the sweep's probe_rank slices equal the ADC tables scored at " +
+      "each nProbe") {
+    val prep = Similarity.prepared(Tables.embeddings(spark, sf), "vec_id",
+      "embedding").filter(size(col("qv")) === 64).cache()
+    try for (ksub <- Seq(16, 256)) {
+      val (cents, cbRows, codes) =
+        graft.sources.Models.ivfPqIndex(spark, sf, ksub = ksub)
+      def scored(nProbe: Int, probeRank: Boolean) = Similarity
+        .ivfPqAdcScored(prep, cents, cbRows, codes, 10L, nProbe, 8,
+          probeRank)
+      val widest = scored(16, probeRank = true)
+      for (nProbe <- Seq(4, 8, 16)) {
+        val nested = widest.filter(col("probe_rank") <= nProbe)
+          .drop("probe_rank")
+        val direct = scored(nProbe, probeRank = false)
+        val n = direct.count()
+        assert(n > 0 && nested.count() == n, s"ksub=$ksub nProbe=$nProbe")
+        assert(nested.exceptAll(direct).isEmpty &&
+          direct.exceptAll(nested).isEmpty, s"ksub=$ksub nProbe=$nProbe")
+        if (nProbe < 16) assert(n < widest.count(), "slice is not narrower")
+      }
+    } finally { prep.unpersist(); () }
+  }
+
+  test("sim_ivfpq_sweep materializes one ADC table per index") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val adc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // one SQL execution per checkpoint, carrying its job description
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          "similarity:sim_ivfpq_sweep:adc_\\w+".r
+            .findFirstIn(s.description).foreach(adc.add); ()
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // the recorder drains the shared bus queue both listeners sit on
+    val (_, rec) = try Measure.recorded(spark)(
+        SparkEntry.queries("sim_ivfpq_sweep")(spark, sf))
+      finally sc.removeSparkListener(listener)
+    assert(adc.asScala.toSeq.sorted == Seq(
+      "similarity:sim_ivfpq_sweep:adc_ksub16",
+      "similarity:sim_ivfpq_sweep:adc_ksub256"), adc.asScala.toSeq)
+    assert(rec.jobs.values.exists(_._1.contains(":adc_ksub256")),
+      "the recorder saw no ADC job")
   }
 
   test("rpTopK: a corpus-covering shortlist IS brute force") {
@@ -397,7 +470,6 @@ class SimilaritySpec extends AnyFunSuite {
   // carries a job description, and the caches it takes are released by
   // the time it returns its DataFrame.
   test("builders describe every job they start and leave no cache entry") {
-    val sf = "/root/testdata/sf0.01"
     val sc = spark.sparkContext
     val cache = spark.sharedState.cacheManager
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
